@@ -359,8 +359,8 @@ def main() -> None:
         if len(json.dumps(part, separators=(",", ":"))) > budget:
             del part["queries"][name]
             part["n_omitted"] = len(ranked) - len(part["queries"])
-            part["omitted_sum"] = round(
-                total - sum(part["queries"].values()), 2
+            part["omitted_sum"] = max(
+                0.0, round(total - sum(part["queries"].values()), 2)
             )
             break
     print(json.dumps(part, separators=(",", ":")))

@@ -45,7 +45,7 @@ from typing import Any, Mapping
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .cdc.envelope import CHANGE_FEED_SQL, change_feed
+from .cdc.envelope import CHANGE_FEED_SQL, change_feed_from
 from .cdc.filters import MERGE_PATTERN, merge_table_name, should_augment_table
 from .cdc.partitioners import repartition_for
 from .session import prep
@@ -119,39 +119,56 @@ def _augment(feed: DataFrame, cfg: Mapping[str, Any]) -> DataFrame:
     )
 
 
-def _source(
-    spark: SparkSession, sf_dir: str, cfg: Mapping[str, Any]
+def _rows(
+    spark: SparkSession, sf_dir: str, cfg: Mapping[str, Any], stream: bool
 ) -> DataFrame:
-    """The configured source as an envelope feed. A binlog-file source
-    carries only row events (QUERY events have no row image), so the
-    envelope's lag-derived fields (value_before, seq_in_txn,
-    commit_ts_ms) are computed over row events only — the rows a real
-    replica actually receives. The parquet test feed interleaves
-    synthetic QUERY rows BEFORE the lag, so those fields can differ
-    between the two sources for the same data; op/table routing and
-    counts agree (pinned by test_runner)."""
+    """The one source selection (BinaryLogSupplier selection in
+    Replicator.java:95-204), for the batch plan and the foreachBatch
+    stream alike: the configured source's envelope input, trimmed by
+    the startup checkpoint. A binlog-file source carries only row
+    events (QUERY events have no row image), so the envelope's
+    lag-derived fields (value_before, seq_in_txn, commit_ts_ms) are
+    computed over row events only — the rows a real replica actually
+    receives. The parquet test feed interleaves synthetic QUERY rows
+    BEFORE the lag, so those fields can differ between the two sources
+    for the same data; op/table routing and counts agree (pinned by
+    test_runner)."""
     kind = cfg["source.type"]
     if kind == "events_parquet":
-        return change_feed(spark, sf_dir)
-    if kind == "binlog_files":
-        from .cdc.envelope import change_feed_from
-        from .sources.binlog import envelope_projection, read_binlog_files
+        if stream:
+            from .streaming.job import _events_stream
 
-        gtid_set = cfg["source.binlog.checkpoint.gtid_set"]
-        if gtid_set:
-            # GTID mode goes through the reader itself so the
-            # start-file search prunes whole files from the scan
-            # (PREVIOUS_GTIDS headers), not just rows post-decode
-            rows = read_binlog_files(
-                spark, cfg["source.binlog.path"],
-                resume_gtid_set=gtid_set,
-            )
-        else:
-            rows = _apply_checkpoint(
-                read_binlog_files(spark, cfg["source.binlog.path"]), cfg
-            )
-        return change_feed_from(envelope_projection(rows), op_col="op")
-    raise ValueError(f"unknown source.type: {kind}")
+            return _events_stream(spark, sf_dir)
+        from .session import read_table
+
+        prep(spark)
+        return read_table(spark, sf_dir, "events")
+    if kind != "binlog_files":
+        raise ValueError(f"unknown source.type: {kind}")
+    from .sources.binlog import (
+        envelope_projection,
+        read_binlog_files,
+        tail_binlog_files,
+    )
+
+    path = cfg["source.binlog.path"]
+    gtid_set = cfg["source.binlog.checkpoint.gtid_set"]
+    if stream:
+        # continuous tail of a rotated-binlog directory: the
+        # file-stream checkpoint is the seen-files log, so each rotated
+        # file decodes exactly once across restarts
+        rows = _apply_checkpoint(tail_binlog_files(
+            spark, path,
+            max_files_per_trigger=cfg["source.binlog.max_files_per_trigger"],
+        ), cfg)
+    elif gtid_set:
+        # GTID mode goes through the reader itself so the start-file
+        # search prunes whole files from the scan (PREVIOUS_GTIDS
+        # headers), not just rows post-decode
+        rows = read_binlog_files(spark, path, resume_gtid_set=gtid_set)
+    else:
+        rows = _apply_checkpoint(read_binlog_files(spark, path), cfg)
+    return envelope_projection(rows)
 
 
 def _apply_checkpoint(rows: DataFrame, cfg: Mapping[str, Any]) -> DataFrame:
@@ -173,12 +190,22 @@ def _apply_checkpoint(rows: DataFrame, cfg: Mapping[str, Any]) -> DataFrame:
     return rows
 
 
+def _feed(rows: DataFrame, cfg: Mapping[str, Any]) -> DataFrame:
+    """Envelope + augment over `_rows`' output (the whole input, or one
+    micro-batch of it). A wire `op` column, which only the binlog
+    source carries, rides through (`op_col`): a row decoded from a
+    WRITE/UPDATE/DELETE_ROWS event keeps its authoritative
+    classification."""
+    wire_op = "op" if "op" in rows.columns else None
+    return _augment(change_feed_from(rows, op_col=wire_op), cfg)
+
+
 def build_feed(
     spark: SparkSession, sf_dir: str, config: Mapping[str, Any]
 ) -> DataFrame:
     """source → augment-filters → partitioner, per config."""
     cfg = {**DEFAULT_CONFIG, **config}
-    return _augment(_source(spark, sf_dir, cfg), cfg)
+    return _feed(_rows(spark, sf_dir, cfg, stream=False), cfg)
 
 
 def apply_sink(feed: DataFrame, config: Mapping[str, Any]) -> DataFrame:
@@ -248,44 +275,12 @@ def run_stream(
     exactly-once argument)."""
     import os
 
-    from .cdc.envelope import change_feed_from
-    from .streaming.job import _events_stream
-
     prep(spark)
     cfg = {**DEFAULT_CONFIG, **config}
-    kind = cfg["source.type"]
-    if kind == "events_parquet":
-        stream = _events_stream(spark, sf_dir)
-    elif kind == "binlog_files":
-        # continuous tail of a rotated-binlog directory: the
-        # file-stream checkpoint is the seen-files log, so each
-        # rotated file decodes exactly once across restarts; the wire
-        # op rides through (envelope_projection + op_col below)
-        from .sources.binlog import envelope_projection, tail_binlog_files
-
-        stream = envelope_projection(
-            _apply_checkpoint(
-                tail_binlog_files(
-                    spark,
-                    cfg["source.binlog.path"],
-                    max_files_per_trigger=cfg[
-                        "source.binlog.max_files_per_trigger"
-                    ],
-                ),
-                cfg,
-            )
-        )
-    else:
-        raise ValueError(f"unknown source.type: {kind}")
+    stream = _rows(spark, sf_dir, cfg, stream=True)
 
     def one_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        feed = _augment(
-            change_feed_from(
-                batch_df, op_col="op" if kind == "binlog_files" else None
-            ),
-            cfg,
-        )
-        apply_sink(feed, cfg).write.mode("overwrite").parquet(
+        apply_sink(_feed(batch_df, cfg), cfg).write.mode("overwrite").parquet(
             os.path.join(out_dir, f"epoch={epoch_id}")
         )
 

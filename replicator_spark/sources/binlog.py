@@ -15,14 +15,16 @@ Until this module, the repo modeled that layer as a parquet feed
 (SURVEY §2.1 "modeled as parquet feed"). This module closes the gap
 Spark-first:
 
-- ``parse_binlog_events`` — an Arrow-batched ``mapInPandas`` byte-walk
+- ``_parse_partition`` — an Arrow-batched ``mapInPandas`` byte-walk
   (the `cdc/jsonb.py` pattern: Spark has no builtin for this format)
   that turns a DataFrame of binlog FILE BLOBS (``data binary``) into
-  decoded row-change records. On a real cluster the input is
-  ``spark.read.format("binaryFile").load("s3://bucket/binlog.*")`` —
-  one blob per rotated binlog file, partitioned by file, so decode
+  decoded row-change records. On a real cluster the input is one
+  ``binaryFile`` scan (``_scan``) of ``s3://bucket/binlog.*`` — one
+  blob per rotated binlog file, partitioned by file, so decode
   parallelism is file-level with zero shuffle (exactly how the
-  reference fans multiple binlog streams across hosts).
+  reference fans multiple binlog streams across hosts). Every reader
+  shares that scan, and every decoder (rows, records, DDL) the one
+  event walker ``_walk``.
 - ``encode_binlog_file`` + ``_encode_partition`` — a faithful WRITER of
   the same layout (magic, FDE, GTID/BEGIN/TABLE_MAP/ROWS/XID
   choreography, CRC32 trailers). The writer exists for fixtures and
@@ -2408,6 +2410,66 @@ def _wire_fan_out(df: DataFrame, spark: SparkSession, sf_dir: str,
     )
 
 
+# the binaryFile source's fixed schema (needed explicitly for the
+# STREAMING reader — file-stream sources cannot infer)
+_BINARY_FILE_SCHEMA = (
+    "path string, modificationTime timestamp, length long,"
+    " content binary"
+)
+
+
+def _scan(
+    spark: SparkSession, path, parse, schema: str, stream: bool = False,
+    max_files_per_trigger: Optional[int] = None,
+) -> DataFrame:
+    """The one ``binaryFile`` scan behind every file reader: one
+    (path, data) row per file (a directory, a glob, or — batch only —
+    a list of files), decoded by the mapInPandas ``parse`` into
+    ``schema``. ``stream`` tails the directory instead (the seen-files
+    log in the query checkpoint makes each rotated file decode exactly
+    once); ``max_files_per_trigger`` bounds each micro-batch."""
+    reader = (spark.readStream if stream else spark.read).format("binaryFile")
+    if stream:
+        reader = reader.schema(_BINARY_FILE_SCHEMA)
+    if max_files_per_trigger is not None:
+        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
+    blobs = reader.load(path).select("path", F.col("content").alias("data"))
+    return blobs.mapInPandas(parse, schema)
+
+
+def _walk(pdf) -> Iterator[tuple]:
+    """The one event walk behind every decoder: for each blob of a
+    mapInPandas batch, yields (fname, gtid, row_seq, event) per event.
+    fname is the file's basename (None when the batch has no `path`
+    column), gtid the enclosing transaction's (gtid_uuid, gtid_seq),
+    row_seq the in-file ordinal of the event's first row image. GTID
+    events only move the coordinates. An INCIDENT event raises on
+    every channel: the server itself recorded that events MAY be
+    missing there, and continuing silently would accept a gap (the
+    corruption policy)."""
+    import os as _os
+
+    paths = pdf["path"] if "path" in pdf.columns else [None] * len(pdf)
+    for path, blob in zip(paths, pdf["data"]):
+        fname = _os.path.basename(path) if path is not None else None
+        gtid: tuple = (None, None)
+        row_seq = 0
+        for ev in parse_binlog_file(bytes(blob)):
+            etype = ev["type"]
+            if etype == GTID_EVENT:
+                gtid = (_sid_to_uuid(ev["sid"]), ev["gno"])
+                continue
+            if etype == INCIDENT_EVENT:
+                raise ValueError(
+                    f"INCIDENT (possible lost events)"
+                    f" in {fname or 'binlog stream'}:"
+                    f" {ev['message'] or ev['incident']}"
+                )
+            yield fname, gtid, row_seq, ev
+            if etype in _EVENT_TO_OP:
+                row_seq += len(ev["rows"])
+
+
 def _parse_partition(batches) -> Iterator:
     """mapInPandas: binlog blobs → change rows. UPDATE emits the after
     image (the applier's view) plus the wire BEFORE image's payload
@@ -2417,62 +2479,31 @@ def _parse_partition(batches) -> Iterator:
     checkpoint mode — and, when the batch carries a `path` column (the
     binaryFile readers), its (source_file, log_pos) file/pos pair
     (`BinaryLogSupplier.java:206-239` resumes from either)."""
-    import os as _os
-
     import pandas as pd
 
     for pdf in batches:
         with_pos = "path" in pdf.columns
         out: list[tuple] = []
-        for i, blob in enumerate(pdf["data"]):
-            fname = (
-                _os.path.basename(pdf["path"].iloc[i]) if with_pos else None
-            )
-            gtid_uuid: Optional[str] = None
-            gtid_seq: Optional[int] = None
-            row_seq = 0
-            for ev in parse_binlog_file(bytes(blob)):
-                if ev["type"] == GTID_EVENT:
-                    gtid_uuid = _sid_to_uuid(ev["sid"])
-                    gtid_seq = ev["gno"]
-                    continue
-                if ev["type"] == INCIDENT_EVENT:
-                    # the server itself recorded that events MAY be
-                    # missing here — continuing silently would accept
-                    # a gap; same policy as corruption
-                    raise ValueError(
-                        f"INCIDENT (possible lost events)"
-                        f" in {fname or 'binlog stream'}:"
-                        f" {ev['message'] or ev['incident']}"
-                    )
-                op = _EVENT_TO_OP.get(ev["type"])
-                if op is None:
-                    continue
-                for row in ev["rows"]:
-                    if op == "UPDATE":
-                        before, img = row
-                        wire_before = (before[4], before[5])
-                    else:
-                        img, wire_before = row, (None, None)
-                    rec = (op, *img, gtid_uuid, gtid_seq, *wire_before)
-                    if with_pos:
-                        rec += (fname, ev["log_pos"], row_seq)
-                    out.append(rec)
-                    row_seq += 1
+        for fname, gtid, row_seq, ev in _walk(pdf):
+            op = _EVENT_TO_OP.get(ev["type"])
+            if op is None:
+                continue
+            for k, row in enumerate(ev["rows"], row_seq):
+                if op == "UPDATE":
+                    before, img = row
+                    wire_before = (before[4], before[5])
+                else:
+                    img, wire_before = row, (None, None)
+                rec = (op, *img, *gtid, *wire_before)
+                if with_pos:
+                    rec += (fname, ev["log_pos"], k)
+                out.append(rec)
         cols = ["op", "event_id", "ts_us", "user_id", "event_type",
                 "value", "props", "gtid_uuid", "gtid_seq",
                 "value_before_wire", "props_before_wire"]
         if with_pos:
             cols += ["source_file", "log_pos", "row_seq"]
         yield pd.DataFrame(out, columns=cols)
-
-
-# the binaryFile source's fixed schema (needed explicitly for the
-# STREAMING reader — file-stream sources cannot infer)
-_BINARY_FILE_SCHEMA = (
-    "path string, modificationTime timestamp, length long,"
-    " content binary"
-)
 
 
 def _read_head_prev_gtids(stream) -> Optional[dict]:
@@ -2500,10 +2531,44 @@ def _read_head_prev_gtids(stream) -> Optional[dict]:
 
 
 def _file_suffix_key(name: str):
+    """Rotation order of one file name: (stem, numeric suffix), -1 for
+    a name with no numeric suffix. MySQL extends numbering past 6
+    digits after 999999, and 'binlog.1000000' sorts lexicographically
+    BEFORE 'binlog.999999' — so order is the parsed suffix, never the
+    raw name."""
     dot = name.rfind(".")
     if dot >= 0 and name[dot + 1 :].isdigit():
         return (name[:dot], int(name[dot + 1 :]))
     return (name, -1)
+
+
+def _suffix_col(col: str = "source_file"):
+    """`_file_suffix_key`'s rule as a column: the numeric rotation
+    suffix, NULL for a name without one (each caller picks its NULL
+    policy)."""
+    return F.regexp_extract(F.col(col), r"\.(\d+)$", 1).try_cast("long")
+
+
+def _fs(path: str):
+    """(pyarrow filesystem, root) for a local path or object-store URI."""
+    from pyarrow import fs as pafs
+
+    if "://" in path:
+        return pafs.FileSystem.from_uri(path)
+    return pafs.LocalFileSystem(), path
+
+
+def _list_files(path: str) -> list[str]:
+    """The one directory listing: file basenames in rotation order."""
+    from pyarrow import fs as pafs
+
+    filesystem, root = _fs(path)
+    infos = filesystem.get_file_info(
+        pafs.FileSelector(root, allow_not_found=True)
+    )
+    return sorted(
+        (i.base_name for i in infos if i.is_file), key=_file_suffix_key
+    )
 
 
 _HEAD_SCAN_DISTRIBUTE_OVER = 64  # files; below this a driver loop is cheaper
@@ -2522,19 +2587,15 @@ def start_file_for_gtid_resume(
     set — they are pruned without decode. Driver state is one
     (file, head-set) pair per retained file: tiny vs data, the same
     contract as the file listing itself."""
-    from pyarrow import fs as pafs
+    return _start_file(path, _list_files(path), gtid_set, spark)
 
-    if "://" in path:
-        filesystem, root = pafs.FileSystem.from_uri(path)
-    else:
-        filesystem, root = pafs.LocalFileSystem(), path
-    infos = filesystem.get_file_info(
-        pafs.FileSelector(root, allow_not_found=True)
-    )
-    names = sorted(
-        (i.base_name for i in infos if i.is_file),
-        key=_file_suffix_key,
-    )
+
+def _start_file(
+    path: str, names: list[str], gtid_set: str,
+    spark: Optional[SparkSession],
+) -> Optional[str]:
+    """`start_file_for_gtid_resume` over an existing listing."""
+    filesystem, root = _fs(path)
     stored = parse_gtid_set(gtid_set)
     heads: dict[str, Optional[dict]] = {}
     if spark is not None and len(names) > _HEAD_SCAN_DISTRIBUTE_OVER:
@@ -2544,20 +2605,14 @@ def start_file_for_gtid_resume(
         # listing itself
         import json as _json
 
-        root_b = root
-
         def read_heads(batches):
             import pandas as pd
-            from pyarrow import fs as pafs2
 
-            if "://" in path:
-                fs2, _ = pafs2.FileSystem.from_uri(path)
-            else:
-                fs2 = pafs2.LocalFileSystem()
+            fs2 = _fs(path)[0]
             for pdf in batches:
                 out = []
                 for name in pdf["name"]:
-                    with fs2.open_input_stream(f"{root_b}/{name}") as st:
+                    with fs2.open_input_stream(f"{root}/{name}") as st:
                         head = _read_head_prev_gtids(st)
                     out.append(
                         (name, _json.dumps(head) if head is not None
@@ -2607,40 +2662,21 @@ def read_binlog_files(
     file's rows. With 10k retained files and a recent checkpoint,
     decode cost is proportional to the tail being replayed, not the
     retention window."""
-    reader = spark.read.format("binaryFile")
-    if resume_gtid_set:
-        start = start_file_for_gtid_resume(path, resume_gtid_set, spark)
-        if start is not None:
-            # prune every file BEFORE the start file from the scan
-            # itself (no decode, no task), then row-trim the rest
-            key = _file_suffix_key(start)
-            from pyarrow import fs as pafs
-
-            if "://" in path:
-                filesystem, root = pafs.FileSystem.from_uri(path)
-            else:
-                filesystem, root = pafs.LocalFileSystem(), path
-            infos = filesystem.get_file_info(
-                pafs.FileSelector(root, allow_not_found=True)
-            )
-            keep = [
-                f"{path.rstrip('/')}/{i.base_name}"
-                for i in infos
-                if i.is_file and _file_suffix_key(i.base_name) >= key
-            ]
-            blobs = reader.load(keep).select(
-                "path", F.col("content").alias("data")
-            )
-        else:
-            blobs = reader.load(path).select(
-                "path", F.col("content").alias("data")
-            )
-        rows = blobs.mapInPandas(_parse_partition, BINLOG_ROWS_POS_SCHEMA)
-        return resume_after_gtid(rows, resume_gtid_set)
-    blobs = reader.load(path).select(
-        "path", F.col("content").alias("data")
-    )
-    return blobs.mapInPandas(_parse_partition, BINLOG_ROWS_POS_SCHEMA)
+    if not resume_gtid_set:
+        return _scan(spark, path, _parse_partition, BINLOG_ROWS_POS_SCHEMA)
+    names = _list_files(path)
+    start = _start_file(path, names, resume_gtid_set, spark)
+    load = path
+    if start is not None:
+        # prune every file BEFORE the start file from the scan itself
+        # (no decode, no task), then row-trim the rest
+        key = _file_suffix_key(start)
+        load = [
+            f"{path.rstrip('/')}/{n}"
+            for n in names if _file_suffix_key(n) >= key
+        ]
+    rows = _scan(spark, load, _parse_partition, BINLOG_ROWS_POS_SCHEMA)
+    return resume_after_gtid(rows, resume_gtid_set)
 
 
 def envelope_projection(rows: DataFrame) -> DataFrame:
@@ -2687,16 +2723,10 @@ def tail_binlog_files(
     multi-micro-batch path deterministic for the golden tests: the
     envelope's cross-batch wire-before-image fallback is only
     exercised when one user's history spans trigger boundaries."""
-    reader = (
-        spark.readStream.format("binaryFile")
-        .schema(_BINARY_FILE_SCHEMA)
+    return _scan(
+        spark, path, _parse_partition, BINLOG_ROWS_POS_SCHEMA,
+        stream=True, max_files_per_trigger=max_files_per_trigger,
     )
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    blobs = reader.load(path).select(
-        "path", F.col("content").alias("data")
-    )
-    return blobs.mapInPandas(_parse_partition, BINLOG_ROWS_POS_SCHEMA)
 
 
 def resume_after(rows: DataFrame, source_file: str, log_pos: int) -> DataFrame:
@@ -2710,19 +2740,12 @@ def resume_after(rows: DataFrame, source_file: str, log_pos: int) -> DataFrame:
     compares the parsed suffix (falling back to the name only for
     files with no numeric suffix). Still a plain map-side filter — no
     shuffle."""
-    dot = source_file.rfind(".")
-    ckpt_suffix = (
-        int(source_file[dot + 1 :])
-        if dot >= 0 and source_file[dot + 1 :].isdigit()
-        else None
-    )
-    if ckpt_suffix is None:
+    ckpt_suffix = _file_suffix_key(source_file)[1]
+    if ckpt_suffix < 0:
         file_later = F.col("source_file") > source_file
         file_same = F.col("source_file") == source_file
     else:
-        suffix = F.regexp_extract(
-            F.col("source_file"), r"\.(\d+)$", 1
-        ).try_cast("long")
+        suffix = _suffix_col()
         # a row from a file with NO numeric suffix cannot be ordered
         # against the checkpoint — REPLAY it (at-least-once with an
         # idempotent sink) rather than silently drop it
@@ -2822,12 +2845,8 @@ def snapshot_to_binlog_files(rows: DataFrame, path: str) -> list[str]:
     file names (one driver-side row per FILE, not per record)."""
     def write_part(batches):
         import pyarrow as pa
-        from pyarrow import fs as pafs
 
-        if "://" in path:
-            filesystem, root = pafs.FileSystem.from_uri(path)
-        else:
-            filesystem, root = pafs.LocalFileSystem(), path
+        filesystem, root = _fs(path)
         filesystem.create_dir(root, recursive=True)
         from pyspark import TaskContext
 
@@ -2885,57 +2904,41 @@ def _parse_records_partition(batches) -> Iterator:
     schema-on-read envelope shape, at the file level. UPDATE rows
     carry the full wire before-image object."""
     import json as _json
-    import os as _os
 
     import pandas as pd
 
     for pdf in batches:
         out: list[tuple] = []
-        for i, blob in enumerate(pdf["data"]):
-            fname = _os.path.basename(pdf["path"].iloc[i])
-            gtid_uuid = gtid_seq = None
-            row_seq = 0
-            for ev in parse_binlog_file(bytes(blob)):
-                if ev["type"] == GTID_EVENT:
-                    gtid_uuid = _sid_to_uuid(ev["sid"])
-                    gtid_seq = ev["gno"]
-                    continue
-                if ev["type"] == INCIDENT_EVENT:
-                    raise ValueError(
-                        f"INCIDENT (possible lost events) in {fname}:"
-                        f" {ev['message'] or ev['incident']}"
+        for fname, gtid, row_seq, ev in _walk(pdf):
+            op = _EVENT_TO_OP.get(ev["type"])
+            if op is None:
+                continue
+            names = ev["col_names"]
+            pk = ev["primary_key"]
+            for k, row in enumerate(ev["rows"], row_seq):
+                if op == "UPDATE":
+                    before, img = row
+                else:
+                    img, before = row, None
+                cols = names or [f"c{j}" for j in range(len(img))]
+
+                def rec(vals):
+                    return _json.dumps(
+                        {c: _json_cell(v) for c, v in zip(cols, vals)},
+                        sort_keys=True,
                     )
-                op = _EVENT_TO_OP.get(ev["type"])
-                if op is None:
-                    continue
-                names = ev["col_names"]
-                pk = ev["primary_key"]
-                for row in ev["rows"]:
-                    if op == "UPDATE":
-                        before, img = row
-                    else:
-                        img, before = row, None
-                    cols = names or [f"c{j}" for j in range(len(img))]
 
-                    def rec(vals):
-                        return _json.dumps(
-                            {c: _json_cell(v) for c, v in zip(cols, vals)},
-                            sort_keys=True,
-                        )
-
-                    # UPDATE keys by the AFTER image, the reference's
-                    # rule (HBaseRowKeyMapper.java:39-42); no PK
-                    # metadata → NULL (the consumer falls back to its
-                    # registry, as the reference does)
-                    out.append((
-                        ev["db"], ev["table"], op, rec(img),
-                        rec(before) if before is not None else None,
-                        _wire_rowkey(img, pk) if pk else None,
-                        ev["rows_query"],  # ROWS_QUERY statement text
-                        gtid_uuid, gtid_seq, fname, ev["log_pos"],
-                        row_seq,
-                    ))
-                    row_seq += 1
+                # UPDATE keys by the AFTER image, the reference's rule
+                # (HBaseRowKeyMapper.java:39-42); no PK metadata → NULL
+                # (the consumer falls back to its registry, as the
+                # reference does)
+                out.append((
+                    ev["db"], ev["table"], op, rec(img),
+                    rec(before) if before is not None else None,
+                    _wire_rowkey(img, pk) if pk else None,
+                    ev["rows_query"],  # ROWS_QUERY statement text
+                    *gtid, fname, ev["log_pos"], k,
+                ))
         yield pd.DataFrame(
             out,
             columns=["db", "table_name", "op", "record", "before",
@@ -2953,14 +2956,7 @@ def read_binlog_records(spark: SparkSession, path: str) -> DataFrame:
     schema-on-read contract as the envelope's RawEvent — and the
     resume combinators (`resume_after`, `resume_after_gtid`) apply
     unchanged since the coordinate columns are shared."""
-    blobs = (
-        spark.read.format("binaryFile")
-        .load(path)
-        .select("path", F.col("content").alias("data"))
-    )
-    return blobs.mapInPandas(
-        _parse_records_partition, BINLOG_RECORDS_SCHEMA
-    )
+    return _scan(spark, path, _parse_records_partition, BINLOG_RECORDS_SCHEMA)
 
 
 def tail_binlog_records(
@@ -2974,17 +2970,9 @@ def tail_binlog_records(
     seen-files checkpoint (the `tail_binlog_files` contract, for any
     table mix — including its `max_files_per_trigger` backpressure
     bound for backlogged directories)."""
-    reader = (
-        spark.readStream.format("binaryFile")
-        .schema(_BINARY_FILE_SCHEMA)
-    )
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    blobs = reader.load(path).select(
-        "path", F.col("content").alias("data")
-    )
-    return blobs.mapInPandas(
-        _parse_records_partition, BINLOG_RECORDS_SCHEMA
+    return _scan(
+        spark, path, _parse_records_partition, BINLOG_RECORDS_SCHEMA,
+        stream=True, max_files_per_trigger=max_files_per_trigger,
     )
 
 
@@ -3057,18 +3045,9 @@ def audit_binlog_chain(spark: SparkSession, path: str) -> DataFrame:
     the adjacency check is one window over the tiny per-file table."""
     from pyspark.sql import Window as W
 
-    blobs = (
-        spark.read.format("binaryFile")
-        .load(path)
-        .select("path", F.col("content").alias("data"))
-    )
-    summary = blobs.mapInPandas(
-        _chain_summary_partition, BINLOG_CHAIN_SCHEMA
-    ).withColumn(
-        "suffix",
-        F.regexp_extract(F.col("source_file"), r"\.(\d+)$", 1)
-        .try_cast("long"),
-    )
+    summary = _scan(
+        spark, path, _chain_summary_partition, BINLOG_CHAIN_SCHEMA
+    ).withColumn("suffix", _suffix_col())
     w = W.orderBy("suffix")  # per-file table: tiny, single partition OK
     nxt = summary.select(
         "*",
@@ -3123,11 +3102,8 @@ def restore_table_from_binlog_files(
     from pyspark.sql import Window as W
 
     rows = read_binlog_files(spark, path)
-    file_no = F.regexp_extract(
-        F.col("source_file"), r"\.(\d+)$", 1
-    ).try_cast("long")
     w = W.partitionBy("event_id").orderBy(
-        F.desc(file_no), F.desc("row_seq")
+        F.desc(_suffix_col()), F.desc("row_seq")
     )
     latest = (
         rows.withColumn("rn", F.row_number().over(w))
@@ -3307,10 +3283,9 @@ def _parse_orders_partition(batches) -> Iterator:
 
     for pdf in batches:
         out: list[tuple] = []
-        for blob in pdf["data"]:
-            for ev in parse_binlog_file(bytes(blob)):
-                if ev["type"] == WRITE_ROWS_EVENT:
-                    out.extend(tuple(r) for r in ev["rows"])
+        for _, _, _, ev in _walk(pdf):
+            if ev["type"] == WRITE_ROWS_EVENT:
+                out.extend(tuple(r) for r in ev["rows"])
         yield pd.DataFrame(out, columns=_ORD_COLS)
 
 
@@ -3532,12 +3507,9 @@ def binlog_partial_json_query(
 
         for pdf in batches:
             out = []
-            for blob in pdf["data"]:
-                for e in parse_binlog_file(bytes(blob)):
-                    if e["type"] == PARTIAL_UPDATE_ROWS_EVENT:
-                        out.extend(
-                            (a[0], b[1], a[1]) for b, a in e["rows"]
-                        )
+            for _, _, _, e in _walk(pdf):
+                if e["type"] == PARTIAL_UPDATE_ROWS_EVENT:
+                    out.extend((a[0], b[1], a[1]) for b, a in e["rows"])
             yield pd.DataFrame(
                 out, columns=["event_id", "before_doc", "after_doc"]
             )
@@ -3632,10 +3604,9 @@ def binlog_legacy_temporals_query(
 
         for pdf in batches:
             out: list[tuple] = []
-            for blob in pdf["data"]:
-                for e in parse_binlog_file(bytes(blob)):
-                    if e["type"] == WRITE_ROWS_EVENT:
-                        out.extend(tuple(r) for r in e["rows"])
+            for _, _, _, e in _walk(pdf):
+                if e["type"] == WRITE_ROWS_EVENT:
+                    out.extend(tuple(r) for r in e["rows"])
             yield pd.DataFrame(
                 out, columns=["event_id", "ts_us", "tod", "dt"]
             )
@@ -3677,33 +3648,17 @@ def _parse_ddl_partition(batches) -> Iterator:
     replays against the active-schema copy. Txn-boundary QUERY events
     (BEGIN/COMMIT/ROLLBACK) are filtered at the source; everything
     else is surfaced for the classifier/registry downstream."""
-    import os as _os
-
     import pandas as pd
 
     for pdf in batches:
-        with_pos = "path" in pdf.columns
         out: list[tuple] = []
-        for i, blob in enumerate(pdf["data"]):
-            fname = (
-                _os.path.basename(pdf["path"].iloc[i]) if with_pos else None
-            )
-            uuid: Optional[str] = None
-            seq: Optional[int] = None
-            for ev in parse_binlog_file(bytes(blob)):
-                if ev["type"] == GTID_EVENT:
-                    uuid, seq = _sid_to_uuid(ev["sid"]), ev["gno"]
-                    continue
-                if ev["type"] != QUERY_EVENT:
-                    continue
-                if ev["sql"].rstrip().upper() in (
-                    "BEGIN", "COMMIT", "ROLLBACK"
-                ):
-                    continue
-                out.append(
-                    (fname, ev["log_pos"], uuid, seq, ev["ts_sec"],
-                     ev["db"], ev["sql"])
-                )
+        for fname, gtid, _, ev in _walk(pdf):
+            if ev["type"] != QUERY_EVENT or (
+                ev["sql"].rstrip().upper() in ("BEGIN", "COMMIT", "ROLLBACK")
+            ):
+                continue
+            out.append((fname, ev["log_pos"], *gtid, ev["ts_sec"],
+                        ev["db"], ev["sql"]))
         yield pd.DataFrame(
             out,
             columns=["source_file", "log_pos", "gtid_uuid", "gtid_seq",
@@ -3718,12 +3673,7 @@ def read_binlog_ddl(spark: SparkSession, path: str) -> DataFrame:
     schema-channel complement — together they are the two streams the
     reference's augmenter consumes (rows → applier, DDL → active
     schema)."""
-    blobs = (
-        spark.read.format("binaryFile")
-        .load(path)
-        .select("path", F.col("content").alias("data"))
-    )
-    return blobs.mapInPandas(_parse_ddl_partition, BINLOG_DDL_SCHEMA)
+    return _scan(spark, path, _parse_ddl_partition, BINLOG_DDL_SCHEMA)
 
 
 def tail_binlog_ddl(
@@ -3737,16 +3687,10 @@ def tail_binlog_ddl(
     verbatim-sql path, ordered by the GTID sequence). Same seen-files
     checkpoint and `max_files_per_trigger` backpressure contract as
     the row-event tails."""
-    reader = (
-        spark.readStream.format("binaryFile")
-        .schema(_BINARY_FILE_SCHEMA)
+    return _scan(
+        spark, path, _parse_ddl_partition, BINLOG_DDL_SCHEMA,
+        stream=True, max_files_per_trigger=max_files_per_trigger,
     )
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    blobs = reader.load(path).select(
-        "path", F.col("content").alias("data")
-    )
-    return blobs.mapInPandas(_parse_ddl_partition, BINLOG_DDL_SCHEMA)
 
 
 def _encode_ddl_partition(batches) -> Iterator:

@@ -1805,12 +1805,13 @@ def test_rows_query_event_attaches_statement_text(spark, tmp_path):
 
 def test_incident_event_refuses_replay_and_audits(spark, tmp_path):
     """INCIDENT_EVENT is the server's own possible-lost-events marker:
-    the file readers REFUSE to replay past it (silently continuing
-    would accept a gap — the corruption policy), while the chain
-    audit reports it per file, including in the newest file (no
-    successor)."""
+    the file readers — the rows, records and DDL channels alike —
+    REFUSE to replay past it (silently continuing would accept a gap —
+    the corruption policy), while the chain audit reports it per file,
+    including in the newest file (no successor)."""
     from replicator_spark.sources.binlog import (
         audit_binlog_chain,
+        read_binlog_ddl,
         read_binlog_files,
         read_binlog_records,
     )
@@ -1828,7 +1829,7 @@ def test_incident_event_refuses_replay_and_audits(spark, tmp_path):
     )
     (tmp_path / "binlog.000002").write_bytes(w.getvalue())
 
-    for reader in (read_binlog_files, read_binlog_records):
+    for reader in (read_binlog_files, read_binlog_records, read_binlog_ddl):
         with pytest.raises(Exception, match="INCIDENT"):
             reader(spark, str(tmp_path)).collect()
     flagged = audit_binlog_chain(spark, str(tmp_path)).collect()
@@ -2063,16 +2064,18 @@ def test_runner_checkpoint_override_selection(spark, tmp_path):
          "source.binlog.checkpoint.pos": 4}
     ) == 0
 
-    # streaming path applies the same override
-    out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
-    run_stream(
-        spark, None,
-        {**base,
-         "source.binlog.checkpoint.gtid_set": f"{_SID_UUID}:1-2"},
-        out, ckpt,
-    )
-    got = spark.read.parquet(out + "/epoch=0").collect()
-    assert sum(r["n_events"] for r in got) == 1
+    # the streaming path applies the same override, in both modes, and
+    # agrees with the batch path's count
+    filepos = {"source.binlog.checkpoint.file": "binlog.000001",
+               "source.binlog.checkpoint.pos": 10**9}
+    gtid = {"source.binlog.checkpoint.gtid_set": f"{_SID_UUID}:1-2"}
+    for mode, over in (("gtid", gtid), ("filepos", filepos)):
+        out = str(tmp_path / f"out_{mode}")
+        ckpt = str(tmp_path / f"ckpt_{mode}")
+        run_stream(spark, None, {**base, **over}, out, ckpt)
+        got = spark.read.parquet(out + "/epoch=0").collect()
+        assert sum(r["n_events"] for r in got) == n_events(
+            {**base, **over}) == 1
 
 
 def test_gtid_logical_clock_surfaced():

@@ -25,16 +25,16 @@ and DuckDB) so every downstream CDC operator is oracle-checkable:
                    per-user history) — binlog_row_image=FULL before-image
                    (EventDeserializer.java:37-57)
 
-Scale notes (100 TB): the feed is computed with two keyed window
-exchanges — one hash-partition on (user_id, minute) for the txn-scoped
-aggregates, one on user_id for the before-image lag. Both are narrow,
-combiner-free shuffles on high-cardinality keys; no driver-side state.
+Scale notes (100 TB): the feed is computed with one keyed window
+exchange, a hash-partition on user_id. The before-image lag sorts by
+event_id within it, and the txn-scoped aggregates, keyed (user_id,
+txn_xid), reuse it with only a sort. It is a narrow, combiner-free
+shuffle on a high-cardinality key; no driver-side state.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window as W
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame, SparkSession
 
 from ..session import prep, read_table
 
@@ -74,98 +74,55 @@ def change_feed_from(ev: DataFrame, op_col: str = None) -> DataFrame:
     # micro-batch whose true predecessor lives in an earlier batch
     # still gets its before-image (batch-local lag is NULL there —
     # the streaming/job.py hazard). Within one batch the lag wins,
-    # keeping the single-batch outputs byte-identical.
-    wire_cols = (
-        ["value_before_wire", "props_before_wire"]
-        if op_col and "value_before_wire" in ev.columns
-        else []
-    )
-    # ts column arrives as raw nanos (nanosAsLong); work in epoch millis.
-    base = ev.select(
-        *([op_col] if op_col else []),
-        "event_id",
-        F.expr("ts div 1000000").alias("ts_ms"),  # integer floor-div: double
-        # division here loses ulps at ns magnitude and shifts ms by one
-        "user_id",
-        "event_type",
-        "value",
-        "props",
-        *wire_cols,
-    )
-    env = base.select(
-        "event_id",
-        (F.col(op_col) if op_col else F.expr(OP_CASE_SQL)).alias("op"),
-        F.lit("testdb").alias("db"),
-        F.concat(
-            F.lit("users_"),
-            F.date_format(F.timestamp_millis(F.col("ts_ms")), "yyyyMM"),
-        ).alias("table_name"),
-        "ts_ms",
-        "user_id",
-        (
-            F.col("user_id") * F.lit(TXN_USER_STRIDE)
-            + F.expr("ts_ms div 60000")
-        ).alias("txn_xid"),
-        "value",
-        "props",
-        *wire_cols,
-    )
+    # keeping the single-batch outputs byte-identical. A DELETE_ROWS
+    # event's only image IS the before-image (the row being removed):
+    # it rides the payload columns, so DELETE falls back to the row.
+    wire = op_col is not None and "value_before_wire" in ev.columns
+    wire_cols = ", value_before_wire, props_before_wire" if wire else ""
+
+    def before(col: str, wire_col: str) -> str:
+        upd, dele = (f", {wire_col}", f", {col}") if wire else ("", "")
+        return (f"CASE WHEN op = 'UPDATE' THEN coalesce(_prev_{col}{upd})"
+                f" WHEN op = 'DELETE' THEN coalesce(_prev_{col}{dele}) END")
+
     # Single-exchange window plan: the per-user lag window is computed
     # first (exchange on user_id); the txn-scoped windows are keyed
     # (user_id, txn_xid), which hash-partitioning on user_id already
     # satisfies (subset rule) — Spark adds only a sort, no re-shuffle.
     # txn_xid is user-strided, so prefixing user_id doesn't change the
     # grouping. At 100 TB this halves the shuffled bytes of the feed.
-    w_user = W.partitionBy("user_id").orderBy("event_id")
-    lagged = env.select(
-        "*",
-        F.lag("value").over(w_user).alias("_prev_value"),
-        F.lag("props").over(w_user).alias("_prev_props"),
+    # ts arrives as raw nanos (nanosAsLong); work in epoch millis with
+    # integer floor-div: double division loses ulps at ns magnitude and
+    # shifts the millisecond by one.
+    return ev.sparkSession.sql(f"""
+SELECT event_id, op, db, table_name, ts_ms, user_id, txn_xid,
+    md5(CAST(txn_xid AS STRING)) AS txn_uuid,
+    max(ts_ms) OVER (PARTITION BY user_id, txn_xid) AS commit_ts_ms,
+    row_number() OVER (PARTITION BY user_id, txn_xid ORDER BY event_id)
+        AS seq_in_txn,
+    {before("value", "value_before_wire")} AS value_before,
+    CASE WHEN op IN ('INSERT', 'UPDATE') THEN value END AS value_after,
+    {before("props", "props_before_wire")} AS props_before,
+    CASE WHEN op IN ('INSERT', 'UPDATE') THEN props END AS props_after
+FROM (
+    SELECT *, lag(value) OVER w_user AS _prev_value,
+        lag(props) OVER w_user AS _prev_props
+    FROM (
+        SELECT event_id, {op_col or OP_CASE_SQL} AS op, 'testdb' AS db,
+            concat('users_', date_format(timestamp_millis(ts_ms), 'yyyyMM'))
+                AS table_name,
+            ts_ms, user_id,
+            user_id * {TXN_USER_STRIDE} + (ts_ms div 60000) AS txn_xid,
+            value, props{wire_cols}
+        FROM (
+            SELECT {op_col + ", " if op_col else ""}event_id,
+                ts div 1000000 AS ts_ms,
+                user_id, event_type, value, props{wire_cols}
+            FROM {{df}}
+        )
     )
-    w_txn = W.partitionBy("user_id", "txn_xid")
-    w_txn_seq = W.partitionBy("user_id", "txn_xid").orderBy("event_id")
-    out = lagged.select(
-        "event_id",
-        "op",
-        "db",
-        "table_name",
-        "ts_ms",
-        "user_id",
-        "txn_xid",
-        F.md5(F.col("txn_xid").cast("string")).alias("txn_uuid"),
-        F.max("ts_ms").over(w_txn).alias("commit_ts_ms"),
-        F.row_number().over(w_txn_seq).alias("seq_in_txn"),
-        F.when(
-            F.col("op") == "UPDATE",
-            F.coalesce(F.col("_prev_value"),
-                       *( [F.col("value_before_wire")] if wire_cols
-                          else [] )),
-        ).when(
-            F.col("op") == "DELETE",
-            # a DELETE_ROWS event's only image IS the before-image
-            # (the row being removed) — it rides the payload columns,
-            # so the cross-batch fallback for DELETE is the row itself
-            F.coalesce(F.col("_prev_value"),
-                       *( [F.col("value")] if wire_cols else [] )),
-        ).alias("value_before"),
-        F.when(F.col("op").isin("INSERT", "UPDATE"), F.col("value")).alias(
-            "value_after"
-        ),
-        F.when(
-            F.col("op") == "UPDATE",
-            F.coalesce(F.col("_prev_props"),
-                       *( [F.col("props_before_wire")] if wire_cols
-                          else [] )),
-        ).when(
-            F.col("op") == "DELETE",
-            F.coalesce(F.col("_prev_props"),
-                       *( [F.col("props")] if wire_cols else [] )),
-        ).alias("props_before"),
-        F.when(F.col("op").isin("INSERT", "UPDATE"), F.col("props")).alias(
-            "props_after"
-        ),
-    )
-    return out
+    WINDOW w_user AS (PARTITION BY user_id ORDER BY event_id)
+)""", df=ev)
 
 
 # DuckDB oracle: identical derivation over the pre-registered `events`

@@ -30,20 +30,28 @@ def merge_table_name(col: Column) -> Column:
     return F.regexp_replace(col, MERGE_PATTERN, "")
 
 
-def should_augment_table(
-    col: Column,
+def _sql_str(value: str) -> str:
+    """A Spark SQL string literal (backslash escapes on, the default)."""
+    return "'" + value.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
+def should_augment_table_sql(
+    name: str,
     include: Optional[Sequence[str]] = None,
     exclude: Optional[Sequence[str]] = None,
     exclude_pattern: Optional[str] = None,
-) -> Column:
-    """shouldAugmentTable as a boolean column (include wins)."""
-    cond = F.lit(True)
+) -> str:
+    """shouldAugmentTable as a Spark SQL predicate over column ``name``
+    (include wins)."""
+    cond = "true"
     if exclude_pattern:
-        cond = cond & ~col.rlike(exclude_pattern)
+        cond = f"({cond} AND NOT ({name} RLIKE {_sql_str(exclude_pattern)}))"
     if exclude:
-        cond = cond & ~col.isin(list(exclude))
+        names = ", ".join(map(_sql_str, exclude))
+        cond = f"({cond} AND NOT ({name} IN ({names})))"
     if include:
-        cond = cond | col.isin(list(include))
+        names = ", ".join(map(_sql_str, include))
+        cond = f"({cond} OR {name} IN ({names}))"
     return cond
 
 
@@ -80,10 +88,8 @@ _INCLUDE = ("users_202401",)
 def include_exclude_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     feed = change_feed(spark, sf_dir)
     kept = feed.where(
-        should_augment_table(
-            F.col("table_name"),
-            include=_INCLUDE,
-            exclude_pattern=_EXCLUDE_PATTERN,
+        should_augment_table_sql(
+            "table_name", include=_INCLUDE, exclude_pattern=_EXCLUDE_PATTERN
         )
     )
     return kept.groupBy("table_name").agg(F.count("*").alias("n_events"))

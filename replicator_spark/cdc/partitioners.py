@@ -32,6 +32,12 @@ def md5_bucket(col: Column, n: int = 16) -> Column:
     return (nibble % F.lit(n)).cast("int")
 
 
+def md5_bucket_sql(expr: str, n: int = 16) -> str:
+    """`md5_bucket` as a Spark SQL expression over ``expr``."""
+    first_hex = f"substring(md5(CAST({expr} AS STRING)), 1, 1)"
+    return f"CAST((instr('{_HEX}', {first_hex}) - 1) % {n} AS INT)"
+
+
 def partition_trid(col_txn_uuid: Column, n: int) -> Column:
     return md5_bucket(col_txn_uuid, n)
 

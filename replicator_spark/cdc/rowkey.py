@@ -35,6 +35,13 @@ def salted_rowkey(pk_cols: Sequence[Column]) -> Column:
     )
 
 
+def salted_rowkey_sql(pk_names: Sequence[str]) -> str:
+    """`salted_rowkey` as a Spark SQL expression over PK column names."""
+    pk_strs = [f"CAST({c} AS STRING)" for c in pk_names]
+    return (f"concat_ws(';', substring(md5({pk_strs[0]}), 1, {SALT_LEN}), "
+            f"{', '.join(pk_strs)})")
+
+
 def rowkey_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     feed = change_feed(spark, sf_dir)
     return feed.select(

@@ -20,10 +20,11 @@ Reference semantics:
   the commit µs — ≥50 same-row changes saturate at the commit timestamp
   (intentional last-writer-wins, MicrosecondValidationTestImpl).
 
-Scale: everything is `row_number`/`dense_rank`/`max` over keyed windows;
-the expensive window (per-second txn ordering) partitions by commit
-second, which is high-cardinality in a real stream. No state store, no
-driver loop.
+Scale: everything is `row_number`/`dense_rank`/`max` over keyed windows.
+The row rank within (table, rowkey, txn) reuses the envelope's user_id
+exchange; the per-second txn ordering partitions by commit second,
+which is high-cardinality in a real stream, and is the organizer's one
+exchange. No state store, no driver loop.
 """
 
 from __future__ import annotations
@@ -32,7 +33,7 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from .envelope import CHANGE_FEED_SQL, change_feed
-from .rowkey import salted_rowkey
+from .rowkey import salted_rowkey_sql
 
 VERSION_SPAN_US = 50  # RowTimestampOrganizer.java:60
 
@@ -105,34 +106,31 @@ def organized_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def organized_feed_from(feed_df: DataFrame) -> DataFrame:
-    feed = feed_df.withColumn(
-        "rowkey", salted_rowkey([F.col("user_id")])
-    )
-    # per-second txn sequence directly as dense_rank over the rows:
-    # ranks distinct txn_xids within each commit second — identical to
-    # aggregating txns first, without the extra groupBy+join (one
-    # exchange on the high-cardinality commit second instead).
-    w_sec = W.partitionBy(F.expr("commit_ts_ms div 1000")).orderBy("txn_xid")
     # (user_id, table_name, txn_xid) groups identically to the
     # reference's (table, rowkey, txn) — rowkey is a bijection of the
     # PK (user_id) — while staying a superset of the user_id hash
-    # partitioning, so this window reuses the envelope's exchange
-    # (sort only); the per-second rank is then the single new exchange.
-    w_row = W.partitionBy("user_id", "table_name", "txn_xid").orderBy(
-        "event_id"
+    # partitioning, so the row-rank window reuses the envelope's
+    # exchange (sort only) when nothing re-partitions the feed in
+    # between. The per-second txn sequence is then dense_rank over the
+    # rows: it ranks distinct txn_xids within each commit second —
+    # identical to aggregating txns first, without the extra
+    # groupBy+join — and is the one new exchange, on the
+    # high-cardinality commit second.
+    return feed_df.sparkSession.sql(f"""
+SELECT * EXCEPT (row_rank),
+    commit_ts_ms * 1000 + txn_seq * 100 - {VERSION_SPAN_US}
+        + least(row_rank, {VERSION_SPAN_US}) AS version_us
+FROM (
+    SELECT *,
+        dense_rank() OVER (PARTITION BY commit_ts_ms div 1000 ORDER BY txn_xid)
+            - 1 AS txn_seq
+    FROM (
+        SELECT *,
+            row_number() OVER (PARTITION BY user_id, table_name, txn_xid
+                               ORDER BY event_id) - 1 AS row_rank
+        FROM (SELECT *, {salted_rowkey_sql(["user_id"])} AS rowkey FROM {{df}})
     )
-    stamped = feed.withColumn(
-        "row_rank", F.row_number().over(w_row) - F.lit(1)
-    ).withColumn("txn_seq", F.dense_rank().over(w_sec) - F.lit(1))
-    return stamped.withColumn(
-        "version_us",
-        (
-            F.col("commit_ts_ms") * 1000
-            + F.col("txn_seq") * 100
-            - F.lit(VERSION_SPAN_US)
-            + F.least(F.col("row_rank"), F.lit(VERSION_SPAN_US))
-        ),
-    ).drop("row_rank")
+)""", df=feed_df)
 
 
 # Shared SQL prefix: the organized feed as a CTE chain (oracle analog of

@@ -19,7 +19,7 @@ Key mapping (reference key → effect here):
   checkpoint override: GTID-set mode wins when non-empty, else
   file/pos (`BinaryLogSupplier.java:207-229`)
 - ``augmenter.filter.include`` / ``augmenter.filter.exclude.pattern``
-  → `cdc.filters.should_augment_table`
+  → `cdc.filters.should_augment_table_sql`
   (ActiveSchemaHelpers shouldAugmentTable)
 - ``augmenter.table.merge`` → `cdc.filters.merge_table_name`
   (TableNameMergePatternFilter)
@@ -27,15 +27,24 @@ Key mapping (reference key → effect here):
   (shouldAugment gate, AugmenterContext)
 - ``partitioner.type`` ∈ TRID|XXID|TABLE_NAME|RANDOM|NONE +
   ``replicator.tasks`` → `cdc.partitioners.repartition_for`
-  (Replicator.java:179-191 destination-stream fan-out)
+  (Replicator.java:179-191 destination-stream fan-out), in front of
+  the appliers whose output keeps its layout (kafka, console)
 - ``applier.type`` ∈ count|console|kafka|timemachine →
   `sinks.{count,console,kafka,timemachine}` presentation
 
 Scale: the composition adds NOTHING beyond its operators — filters are
-map-side predicates fused into the feed scan, the partitioner is the
-one explicit exchange the reference also pays (and under
-``partitioner.type: NONE``-less configs Catalyst is free to elide it
-into the applier's own shuffle via AQE).
+map-side predicates fused into the feed scan, and the partitioner is
+the one explicit exchange the reference also pays, planned only where
+its layout reaches the output. AQE does not elide a user repartition
+(`REPARTITION_BY_NUM`), so in front of the count and time-machine
+appliers, which re-shuffle on their own keys, it would be a dead
+shuffle: the time-machine plan is two exchanges, the envelope's
+hash(user_id) and the organizer's hash(commit second). Each stage of
+the chain is one SQL statement over its input DataFrame
+(`spark.sql(..., df=...)`), which costs the driver a handful of py4j
+round trips where the Column DSL pays one or more per expression node:
+a plan builds in about a hundred round trips rather than ~2,000, a
+cost a stream pays again on every micro-batch.
 """
 
 from __future__ import annotations
@@ -46,7 +55,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .cdc.envelope import CHANGE_FEED_SQL, change_feed_from
-from .cdc.filters import MERGE_PATTERN, merge_table_name, should_augment_table
+from .cdc.filters import (
+    MERGE_PATTERN,
+    merge_table_name,
+    should_augment_table_sql,
+)
 from .cdc.partitioners import repartition_for
 from .session import prep
 
@@ -88,10 +101,24 @@ DEFAULT_CONFIG: dict[str, Any] = {
 }
 
 
-def _augment(feed: DataFrame, cfg: Mapping[str, Any]) -> DataFrame:
-    """include/exclude gate → QUERY-event gate → table merge →
-    partitioner, per (already-defaulted) config. Shared by the batch
-    path and each streaming micro-batch so the two cannot drift."""
+# The appliers whose output keeps the partitioner's layout (a Kafka
+# partition, a console line stream). The count and time-machine
+# appliers re-shuffle on their own keys — the organizer's per-second
+# exchange already keeps each transaction in one task, as a txn has
+# exactly one commit second — so the exchange in front of them would
+# be dead work.
+_ROUTED_APPLIERS = ("kafka", "console")
+
+
+def _augment(rows: DataFrame, cfg: Mapping[str, Any]) -> DataFrame:
+    """Envelope → include/exclude gate → QUERY-event gate → table
+    merge over `_rows`' output (the whole input, or one micro-batch of
+    it), per (already-defaulted) config. A wire `op` column, which only
+    the binlog source carries, rides through (`op_col`): a row decoded
+    from a WRITE/UPDATE/DELETE_ROWS event keeps its authoritative
+    classification."""
+    wire_op = "op" if "op" in rows.columns else None
+    feed = change_feed_from(rows, op_col=wire_op)
     raw_include = cfg["augmenter.filter.include"] or ()
     if isinstance(raw_include, str):
         # the natural config mistake: a single table name as a plain
@@ -100,20 +127,21 @@ def _augment(feed: DataFrame, cfg: Mapping[str, Any]) -> DataFrame:
         raw_include = (raw_include,)
     include = tuple(raw_include)
     excl = cfg["augmenter.filter.exclude.pattern"]
+    gates = []
     if include or excl:
-        feed = feed.where(
-            should_augment_table(
-                F.col("table_name"),
-                include=include or None,
-                exclude_pattern=excl,
-            )
-        )
+        gates.append(should_augment_table_sql(
+            "table_name", include=include or None, exclude_pattern=excl))
     if cfg["augmenter.skip.query.events"]:
-        feed = feed.where(F.col("op") != "QUERY")
+        gates.append("op <> 'QUERY'")
+    if gates:
+        feed = feed.where(" AND ".join(f"({g})" for g in gates))
     if cfg["augmenter.table.merge"]:
         feed = feed.withColumn(
-            "table_name", merge_table_name(F.col("table_name"))
-        )
+            "table_name", merge_table_name(F.col("table_name")))
+    return feed
+
+
+def _partition(feed: DataFrame, cfg: Mapping[str, Any]) -> DataFrame:
     return repartition_for(
         feed, cfg["partitioner.type"], int(cfg["replicator.tasks"])
     )
@@ -191,13 +219,14 @@ def _apply_checkpoint(rows: DataFrame, cfg: Mapping[str, Any]) -> DataFrame:
 
 
 def _feed(rows: DataFrame, cfg: Mapping[str, Any]) -> DataFrame:
-    """Envelope + augment over `_rows`' output (the whole input, or one
-    micro-batch of it). A wire `op` column, which only the binlog
-    source carries, rides through (`op_col`): a row decoded from a
-    WRITE/UPDATE/DELETE_ROWS event keeps its authoritative
-    classification."""
-    wire_op = "op" if "op" in rows.columns else None
-    return _augment(change_feed_from(rows, op_col=wire_op), cfg)
+    """The applier's input, shared by the batch plan and each
+    micro-batch so the two cannot drift: `_augment`, then the
+    partitioner's exchange for the appliers whose output keeps its
+    layout."""
+    feed = _augment(rows, cfg)
+    if cfg["applier.type"] in _ROUTED_APPLIERS:
+        feed = _partition(feed, cfg)
+    return feed
 
 
 def build_feed(
@@ -205,7 +234,8 @@ def build_feed(
 ) -> DataFrame:
     """source → augment-filters → partitioner, per config."""
     cfg = {**DEFAULT_CONFIG, **config}
-    return _feed(_rows(spark, sf_dir, cfg, stream=False), cfg)
+    rows = _rows(spark, sf_dir, cfg, stream=False)
+    return _partition(_augment(rows, cfg), cfg)
 
 
 def apply_sink(feed: DataFrame, config: Mapping[str, Any]) -> DataFrame:
@@ -259,7 +289,9 @@ def run_batch(
     spark: SparkSession, sf_dir: str, config: Mapping[str, Any]
 ) -> DataFrame:
     prep(spark)
-    return apply_sink(build_feed(spark, sf_dir, config), config)
+    cfg = {**DEFAULT_CONFIG, **config}
+    rows = _rows(spark, sf_dir, cfg, stream=False)
+    return apply_sink(_feed(rows, cfg), cfg)
 
 
 def run_stream(
@@ -270,9 +302,9 @@ def run_stream(
     checkpoint_dir: str,
 ) -> None:
     """The same composition as a foreachBatch stream: each micro-batch
-    runs build_feed/apply_sink's transformation over the batch slice
-    and writes an idempotent per-epoch partition (streaming/job.py's
-    exactly-once argument)."""
+    runs run_batch's transformation (`_feed`, `apply_sink`) over the
+    batch slice and writes an idempotent per-epoch partition
+    (streaming/job.py's exactly-once argument)."""
     import os
 
     prep(spark)

@@ -16,10 +16,9 @@ oracle-checked.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from ..cdc.envelope import CHANGE_FEED_SQL, change_feed
-from ..cdc.partitioners import md5_bucket
+from ..cdc.partitioners import md5_bucket_sql
 
 N_PARTITIONS = 8
 
@@ -28,35 +27,19 @@ def kafka_messages(feed: DataFrame) -> DataFrame:
     """event → (topic, partition, key, value) — KafkaApplier's JSON
     presentation. Field order fixed; NULLs carried via the reference's
     'NULL' sentinel so both engines serialize identically."""
-    header = F.struct(
-        F.col("event_id").alias("event_id"),
-        F.col("op").alias("op"),
-        F.col("db").alias("db"),
-        F.col("table_name").alias("table"),
-        F.col("commit_ts_ms").alias("__timestamp"),
-        (F.col("op") == "DELETE").alias("__is_deleted"),
-    )
-    value = F.struct(
-        F.col("txn_uuid").alias("txn_uuid"),
-        F.col("txn_xid").alias("txn_xid"),
-        F.coalesce(F.col("value_before").cast("string"), F.lit("NULL")).alias(
-            "value_before"
-        ),
-        F.coalesce(F.col("value_after").cast("string"), F.lit("NULL")).alias(
-            "value_after"
-        ),
-        F.coalesce(F.col("props_after"), F.lit("NULL")).alias("props_after"),
-    )
-    return feed.where(F.col("op") != "QUERY").select(
-        "event_id",
-        F.concat(
-            F.lit("bigdata-"), F.col("db"), F.lit("-"), F.col("table_name"),
-            F.lit("-value"),
-        ).alias("topic"),
-        md5_bucket(F.col("txn_uuid"), N_PARTITIONS).alias("partition"),
-        F.to_json(header).alias("key"),
-        F.to_json(value).alias("value"),
-    )
+    return feed.sparkSession.sql(f"""
+SELECT event_id,
+    concat('bigdata-', db, '-', table_name, '-value') AS topic,
+    {md5_bucket_sql("txn_uuid", N_PARTITIONS)} AS `partition`,
+    to_json(struct(event_id AS event_id, op AS op, db AS db,
+        table_name AS `table`, commit_ts_ms AS __timestamp,
+        op = 'DELETE' AS __is_deleted)) AS key,
+    to_json(struct(txn_uuid AS txn_uuid, txn_xid AS txn_xid,
+        coalesce(CAST(value_before AS STRING), 'NULL') AS value_before,
+        coalesce(CAST(value_after AS STRING), 'NULL') AS value_after,
+        coalesce(props_after, 'NULL') AS props_after)) AS value
+FROM {{df}}
+WHERE op <> 'QUERY'""", df=feed)
 
 
 def kafka_messages_query(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -39,10 +39,8 @@ SNAPSHOT_CUTOFF_US = 1_709_251_200_000_000
 _CELL_T = "array<struct<column_name:string,cell_value:string>>"
 
 
-def _cell(name: str, value: Column) -> Column:
-    return F.struct(
-        F.lit(name).alias("column_name"), value.alias("cell_value")
-    )
+def _cell(name: str, value: str) -> str:
+    return f"struct('{name}' AS column_name, {value} AS cell_value)"
 
 
 def timemachine_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -51,55 +49,31 @@ def timemachine_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def cells_from(feed: DataFrame) -> DataFrame:
-    empty = F.array().cast(_CELL_T)
-    val_after = F.coalesce(
-        F.col("value_after").cast("string"), F.lit(NULL_SENTINEL)
-    )
-    props_after = F.coalesce(F.col("props_after"), F.lit(NULL_SENTINEL))
-    insert_cells = F.array(
-        _cell("value", val_after),
-        _cell("props", props_after),
-        _cell("row_status", F.lit("I")),
-    )
-    update_cells = F.concat(
-        F.when(
-            ~F.col("value_before").eqNullSafe(F.col("value_after")),
-            F.array(_cell("value", val_after)),
-        ).otherwise(empty),
-        F.when(
-            ~F.col("props_before").eqNullSafe(F.col("props_after")),
-            F.array(_cell("props", props_after)),
-        ).otherwise(empty),
-        F.array(_cell("row_status", F.lit("U"))),
-    )
-    delete_cells = F.array(_cell("row_status", F.lit("D")))
-    cells = (
-        F.when(F.col("op") == "INSERT", insert_cells)
-        .when(F.col("op") == "UPDATE", update_cells)
-        .when(F.col("op") == "DELETE", delete_cells)
-    )
-    return (
-        feed.where(F.col("op") != "QUERY")
-        .select(
-            "event_id",
-            "table_name",
-            "rowkey",
-            "txn_uuid",
-            "txn_xid",
-            "version_us",
-            F.explode(cells).alias("cell"),
-        )
-        .select(
-            "event_id",
-            "table_name",
-            "rowkey",
-            F.col("cell.column_name").alias("column_name"),
-            F.col("cell.cell_value").alias("cell_value"),
-            "version_us",
-            "txn_uuid",
-            "txn_xid",
-        )
-    )
+    empty = f"CAST(array() AS {_CELL_T})"
+    null = f"'{NULL_SENTINEL}'"
+    value = _cell("value", f"coalesce(CAST(value_after AS STRING), {null})")
+    props = _cell("props", f"coalesce(props_after, {null})")
+    status = {op: _cell("row_status", f"'{op[0]}'")
+              for op in ("INSERT", "UPDATE", "DELETE")}
+    insert_cells = f"array({value}, {props}, {status['INSERT']})"
+    update_cells = f"""concat(
+        CASE WHEN NOT (value_before <=> value_after)
+             THEN array({value}) ELSE {empty} END,
+        CASE WHEN NOT (props_before <=> props_after)
+             THEN array({props}) ELSE {empty} END,
+        array({status['UPDATE']}))"""
+    delete_cells = f"array({status['DELETE']})"
+    return feed.sparkSession.sql(f"""
+SELECT event_id, table_name, rowkey, cell.column_name AS column_name,
+    cell.cell_value AS cell_value, version_us, txn_uuid, txn_xid
+FROM (
+    SELECT event_id, table_name, rowkey, txn_uuid, txn_xid, version_us,
+        explode(CASE WHEN op = 'INSERT' THEN {insert_cells}
+                     WHEN op = 'UPDATE' THEN {update_cells}
+                     WHEN op = 'DELETE' THEN {delete_cells} END) AS cell
+    FROM {{df}}
+    WHERE op <> 'QUERY'
+)""", df=feed)
 
 
 TIMEMACHINE_CELLS_SQL = (

@@ -2689,17 +2689,10 @@ def envelope_projection(rows: DataFrame) -> DataFrame:
     falls back to it when the batch-local lag has no predecessor (a
     transaction whose earlier rows landed in a previous micro-batch),
     so streaming == batch across file/batch boundaries."""
-    return rows.select(
-        "op",
-        "event_id",
-        (F.col("ts_us") * 1000).alias("ts"),  # envelope reads ns
-        "user_id",
-        "event_type",
-        "value",
-        "props",
-        "value_before_wire",
-        "props_before_wire",
-    )
+    return rows.sparkSession.sql("""
+SELECT op, event_id, ts_us * 1000 AS ts,  -- the envelope reads ns
+    user_id, event_type, value, props, value_before_wire, props_before_wire
+FROM {df}""", df=rows)
 
 
 def tail_binlog_files(

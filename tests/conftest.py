@@ -59,3 +59,58 @@ def duck():
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{p}'")
     yield con
     con.close()
+
+
+@pytest.fixture
+def multibatch_binlog(tmp_path):
+    """Factory for the multi-batch binlog golden log directory: call it
+    (optionally with ``payload_mode``) to write the 3 rotated files
+    under ``tmp_path/logs`` and get the directory back."""
+    base = 1_700_000_000_000_000  # µs (2023-11); minutes are txn units
+
+    def make(payload_mode="none"):
+        """3 rotated files; users 10 and 20 span ALL files; files 2 and 3
+        START with an UPDATE/DELETE whose true predecessor is in the
+        previous file. UPDATE e4 changes value but NOT props; UPDATE e5
+        changes props but NOT value — the changed-column suppression in
+        cells_from makes a wrong/NULL cross-batch before-image visible.
+        Each file's rows sit in their own minute (real servers rotate at
+        txn boundaries, and the envelope's txn unit is the user-minute).
+        payload_mode='mixed' additionally wraps the even-gno transactions
+        (2, 4, 6 — including BOTH head-of-batch rows) in 8.0.20+
+        TRANSACTION_PAYLOAD envelopes."""
+        from replicator_spark.sources.binlog import encode_binlog_file
+
+        logs = tmp_path / "logs"
+        logs.mkdir()
+        f1 = [
+            ("INSERT", 1, base + 1_000_000, 10, "signup", 1.0, '{"a":1}'),
+            ("UPDATE", 2, base + 2_000_000, 10, "click", 2.0, '{"a":1}'),
+            ("INSERT", 3, base + 3_000_000, 20, "signup", 9.0, '{"z":1}'),
+        ]
+        b1 = [None, (1.0, '{"a":1}'), None]
+        f2 = [
+            ("UPDATE", 4, base + 61_000_000, 10, "click", 3.0, '{"a":1}'),
+            ("UPDATE", 5, base + 62_000_000, 20, "purchase", 9.0, '{"z":2}'),
+        ]
+        b2 = [(2.0, '{"a":1}'), (9.0, '{"z":1}')]
+        f3 = [
+            ("DELETE", 6, base + 121_000_000, 10, "error", 3.0, '{"a":1}'),
+            ("UPDATE", 7, base + 122_000_000, 20, "click", 11.0, '{"z":2}'),
+        ]
+        b3 = [None, (9.0, '{"z":2}')]
+        (logs / "binlog.000001").write_bytes(
+            encode_binlog_file(f1, txn_ids=[1, 2, 3], before_images=b1,
+                               payload_mode=payload_mode)
+        )
+        (logs / "binlog.000002").write_bytes(
+            encode_binlog_file(f2, txn_ids=[4, 5], before_images=b2,
+                               payload_mode=payload_mode)
+        )
+        (logs / "binlog.000003").write_bytes(
+            encode_binlog_file(f3, txn_ids=[6, 7], before_images=b3,
+                               payload_mode=payload_mode)
+        )
+        return str(logs)
+
+    return make

@@ -223,34 +223,31 @@ def test_avro_compat_verdicts():
 
 def test_config_driven_pipeline(spark, sf_dir):
     """Replicator.java:151-204 analog — the dotted-key config wires
-    filter -> partitioner -> applier into one composed stage."""
+    filter -> partitioner -> applier into one composed plan."""
+    import pytest as _pytest
+
     from replicator_spark.cdc.envelope import change_feed
-    from replicator_spark.pipeline_config import build_pipeline
+    from replicator_spark.runner import apply_sink, run_batch
 
     feed = change_feed(spark, sf_dir)
-    counts = build_pipeline(
-        {
-            "augmenter.filter.type": "TABLE_MERGE",
-            "replicator.partitioner.type": "TRID",
-            "replicator.partitions": 4,
-            "applier.type": "count",
-        }
-    )(feed)
+    merge = {"augmenter.table.merge": True,
+             "augmenter.skip.query.events": False}
+    counts = run_batch(
+        spark, sf_dir,
+        {**merge, "partitioner.type": "TRID", "replicator.tasks": 4,
+         "applier.type": "count"},
+    )
     rows = {r["op"]: r["n_events"] for r in counts.collect()}
     assert set(rows) == {"INSERT", "UPDATE", "DELETE", "QUERY"}
 
-    cells = build_pipeline({"applier.type": "timemachine"})(feed)
+    cells = run_batch(spark, sf_dir, {"applier.type": "timemachine"})
     assert "version_us" in cells.columns and "rowkey" in cells.columns
 
-    merged = build_pipeline(
-        {"augmenter.filter.type": "TABLE_MERGE", "applier.type": "console"}
-    )(feed)
+    merged = run_batch(spark, sf_dir, {**merge, "applier.type": "console"})
     assert merged.count() == feed.count()
 
-    import pytest as _pytest
-
     with _pytest.raises(ValueError):
-        build_pipeline({"applier.type": "nope"})(feed)
+        apply_sink(feed, {"applier.type": "nope"})
 
 
 def test_timemachine_replay_is_idempotent(spark, sf_dir, tmp_path):

@@ -430,60 +430,17 @@ def test_ddl_replay_version_monotone_across_micro_batches(
 # user's history spans micro-batches, the wire before-image (which a
 # real binlog_row_image=FULL server writes into every UPDATE/DELETE
 # rows event) must take over — and the output must be BYTE-IDENTICAL
-# to the single-pass batch run over the same log directory.
+# to the single-pass batch run over the same log directory. The 3-file
+# log is conftest's `multibatch_binlog`. The family's runner member
+# (time-machine cells, changed-column suppression across batches)
+# lives in test_runner.py, so the default run covers it.
 
 _B14 = 1_700_000_000_000_000  # base µs (2023-11); minutes are txn units
 
 
-def _multibatch_binlog_fixture(tmp_path, payload_mode="none"):
-    """3 rotated files; users 10 and 20 span ALL files; files 2 and 3
-    START with an UPDATE/DELETE whose true predecessor is in the
-    previous file. UPDATE e4 changes value but NOT props; UPDATE e5
-    changes props but NOT value — the changed-column suppression in
-    cells_from makes a wrong/NULL cross-batch before-image visible.
-    Each file's rows sit in their own minute (real servers rotate at
-    txn boundaries, and the envelope's txn unit is the user-minute).
-    payload_mode='mixed' additionally wraps the even-gno transactions
-    (2, 4, 6 — including BOTH head-of-batch rows) in 8.0.20+
-    TRANSACTION_PAYLOAD envelopes."""
-    from replicator_spark.sources.binlog import encode_binlog_file
-
-    logs = tmp_path / "logs"
-    logs.mkdir()
-    f1 = [
-        ("INSERT", 1, _B14 + 1_000_000, 10, "signup", 1.0, '{"a":1}'),
-        ("UPDATE", 2, _B14 + 2_000_000, 10, "click", 2.0, '{"a":1}'),
-        ("INSERT", 3, _B14 + 3_000_000, 20, "signup", 9.0, '{"z":1}'),
-    ]
-    b1 = [None, (1.0, '{"a":1}'), None]
-    f2 = [
-        ("UPDATE", 4, _B14 + 61_000_000, 10, "click", 3.0, '{"a":1}'),
-        ("UPDATE", 5, _B14 + 62_000_000, 20, "purchase", 9.0, '{"z":2}'),
-    ]
-    b2 = [(2.0, '{"a":1}'), (9.0, '{"z":1}')]
-    f3 = [
-        ("DELETE", 6, _B14 + 121_000_000, 10, "error", 3.0, '{"a":1}'),
-        ("UPDATE", 7, _B14 + 122_000_000, 20, "click", 11.0, '{"z":2}'),
-    ]
-    b3 = [None, (9.0, '{"z":2}')]
-    (logs / "binlog.000001").write_bytes(
-        encode_binlog_file(f1, txn_ids=[1, 2, 3], before_images=b1,
-                           payload_mode=payload_mode)
-    )
-    (logs / "binlog.000002").write_bytes(
-        encode_binlog_file(f2, txn_ids=[4, 5], before_images=b2,
-                           payload_mode=payload_mode)
-    )
-    (logs / "binlog.000003").write_bytes(
-        encode_binlog_file(f3, txn_ids=[6, 7], before_images=b3,
-                           payload_mode=payload_mode)
-    )
-    return str(logs)
-
-
 @pytest.mark.parametrize("payload_mode", ["none", "mixed"])
 def test_binlog_feed_before_images_across_micro_batches(
-    spark, tmp_path, payload_mode
+    spark, tmp_path, multibatch_binlog, payload_mode
 ):
     """ONE streaming lifetime, maxFilesPerTrigger=1 → 3 micro-batches.
     The streamed change feed (union of per-epoch outputs) must equal
@@ -504,7 +461,7 @@ def test_binlog_feed_before_images_across_micro_batches(
     )
 
     prep(spark)
-    logs = _multibatch_binlog_fixture(tmp_path, payload_mode=payload_mode)
+    logs = multibatch_binlog(payload_mode)
     out = str(tmp_path / "feed_out")
     epochs = []
 
@@ -546,46 +503,7 @@ def test_binlog_feed_before_images_across_micro_batches(
     assert by_id[2]["value_before"] == 1.0
 
 
-def test_binlog_cells_across_micro_batches_suppression(
-    spark, tmp_path
-):
-    """The composed topology (runner config, timemachine applier) over
-    the same 3-file stream: per-epoch cells union == batch cells, and
-    the changed-column suppression holds across the batch boundary —
-    UPDATE e4 (props unchanged vs a PREVIOUS batch) emits no props
-    cell; UPDATE e5 (value unchanged) emits no value cell."""
-    from replicator_spark.runner import run_batch, run_stream
-
-    logs = _multibatch_binlog_fixture(tmp_path)
-    cfg = {
-        "source.type": "binlog_files",
-        "source.binlog.path": logs,
-        "source.binlog.max_files_per_trigger": 1,
-        "applier.type": "timemachine",
-    }
-    out, ckpt = str(tmp_path / "cells"), str(tmp_path / "ckpt2")
-    run_stream(spark, None, cfg, out, ckpt)
-    import os
-
-    assert len(
-        [d for d in os.listdir(out) if d.startswith("epoch=")]
-    ) == 3
-    got = spark.read.parquet(out)
-    want = run_batch(spark, None, cfg)
-    cols = sorted(want.columns)
-    g = sorted(tuple(r) for r in got.select(*cols).collect())
-    w = sorted(tuple(r) for r in want.select(*cols).collect())
-    assert g == w  # byte-identical cells
-
-    cells = {
-        (r["event_id"], r["column_name"]) for r in got.collect()
-    }
-    assert (4, "value") in cells and (4, "props") not in cells
-    assert (5, "props") in cells and (5, "value") not in cells
-    assert (6, "row_status") in cells and (6, "value") not in cells
-
-
-def test_binlog_multibatch_restart_mid_backlog(spark, tmp_path):
+def test_binlog_multibatch_restart_mid_backlog(spark, tmp_path, multibatch_binlog):
     """Restart composed with the multi-batch contract: lifetime 1
     drains only PART of the backlog (maxFilesPerTrigger=1 + a stop
     after the first batch); lifetime 2 resumes the SAME checkpoint and
@@ -603,7 +521,7 @@ def test_binlog_multibatch_restart_mid_backlog(spark, tmp_path):
     )
 
     prep(spark)
-    logs = _multibatch_binlog_fixture(tmp_path)
+    logs = multibatch_binlog()
     out = str(tmp_path / "feed_out")
     ckpt = str(tmp_path / "ckpt")
 

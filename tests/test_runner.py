@@ -5,6 +5,7 @@ verified operators. Reference: Replicator.java:95-204, config.yaml."""
 from __future__ import annotations
 
 import os
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -52,6 +53,48 @@ def test_partitioner_controls_exchange(spark, sf_dir):
          "replicator.tasks": n},
     )
     assert feed.rdd.getNumPartitions() == n
+
+
+def test_include_exclude_gate_quotes_config_values(spark):
+    """The gate is SQL text built from config values: a quote or a
+    backslash in a table name or in the exclude regex must reach Spark
+    as that character, not end the literal or vanish as an escape."""
+    from replicator_spark.cdc.filters import should_augment_table_sql
+
+    names = spark.createDataFrame(
+        [("users_202401",), ("users_x",), ("it's",), ("a\\b",)], "t string"
+    )
+    gate = should_augment_table_sql(
+        "t", include=["it's"], exclude_pattern=r"^users_\d+$|'|\\"
+    )
+    assert {r["t"] for r in names.where(gate).collect()} == {"users_x", "it's"}
+
+
+def _exchanges(df) -> list[str]:
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return [re.sub(r"#\d+L?", "", line[line.index("Exchange "):])
+            for line in plan.splitlines() if "Exchange " in line]
+
+
+def test_partitioner_exchange_only_where_it_reaches_the_output(
+    spark, multibatch_binlog
+):
+    """The time-machine applier re-shuffles on its own keys, so no
+    partitioner exchange is planned in front of it: the envelope's
+    hash(user_id) and the organizer's hash(commit second) are its only
+    exchanges (4 when the TRID exchange sat in front of the organizer,
+    which then had to shuffle its row window again). The Kafka applier
+    keeps the partitioner's exchange: its messages carry its layout."""
+    base = {"source.type": "binlog_files",
+            "source.binlog.path": multibatch_binlog()}
+    tm = _exchanges(run_batch(spark, None,
+                              {**base, "applier.type": "timemachine"}))
+    assert len(tm) == 2, tm
+    assert tm[1].startswith("Exchange hashpartitioning(user_id, "), tm
+    assert "REPARTITION_BY_NUM" not in " ".join(tm)
+    kafka = _exchanges(run_batch(spark, None, {**base, "applier.type": "kafka"}))
+    assert any(e.startswith("Exchange hashpartitioning(txn_uuid, 8), "
+                            "REPARTITION_BY_NUM") for e in kafka), kafka
 
 
 @pytest.mark.parametrize("kind,cols", [
@@ -200,3 +243,39 @@ def test_binlog_files_source_equals_parquet_row_slice(
 
     with pytest.raises(ValueError, match="source.type"):
         run_batch(spark, sf_dir, {"source.type": "nope"})
+
+
+def test_binlog_cells_across_micro_batches_suppression(
+    spark, tmp_path, multibatch_binlog
+):
+    """The composed topology (runner config, timemachine applier) over
+    the multi-batch golden 3-file stream, one micro-batch per file:
+    per-epoch cells union == batch cells, and the changed-column
+    suppression holds across the batch boundary —
+    UPDATE e4 (props unchanged vs a PREVIOUS batch) emits no props
+    cell; UPDATE e5 (value unchanged) emits no value cell."""
+    logs = multibatch_binlog()
+    cfg = {
+        "source.type": "binlog_files",
+        "source.binlog.path": logs,
+        "source.binlog.max_files_per_trigger": 1,
+        "applier.type": "timemachine",
+    }
+    out, ckpt = str(tmp_path / "cells"), str(tmp_path / "ckpt2")
+    run_stream(spark, None, cfg, out, ckpt)
+    assert len(
+        [d for d in os.listdir(out) if d.startswith("epoch=")]
+    ) == 3
+    got = spark.read.parquet(out)
+    want = run_batch(spark, None, cfg)
+    cols = sorted(want.columns)
+    g = sorted(tuple(r) for r in got.select(*cols).collect())
+    w = sorted(tuple(r) for r in want.select(*cols).collect())
+    assert g == w  # byte-identical cells
+
+    cells = {
+        (r["event_id"], r["column_name"]) for r in got.collect()
+    }
+    assert (4, "value") in cells and (4, "props") not in cells
+    assert (5, "props") in cells and (5, "value") not in cells
+    assert (6, "row_status") in cells and (6, "value") not in cells

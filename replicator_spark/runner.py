@@ -7,7 +7,7 @@ config keys (shipped example: `config/config.yaml`). This module is
 that surface for the Spark engine: the same keys select among the
 already-verified operators and compose them into a single Catalyst
 plan (batch) or a foreachBatch stream (same code path — streaming ==
-batch by construction, as in streaming/job.py).
+batch by construction).
 
 Key mapping (reference key → effect here):
 - ``source.type`` ∈ events_parquet|binlog_files (+
@@ -62,6 +62,7 @@ from .cdc.filters import (
 )
 from .cdc.partitioners import repartition_for
 from .session import prep
+from .streaming.drive import epoch_sink
 
 DEFAULT_CONFIG: dict[str, Any] = {
     # source selection (Replicator.java wires the supplier the same
@@ -300,29 +301,18 @@ def run_stream(
     config: Mapping[str, Any],
     out_dir: str,
     checkpoint_dir: str,
-) -> None:
+) -> list:
     """The same composition as a foreachBatch stream: each micro-batch
     runs run_batch's transformation (`_feed`, `apply_sink`) over the
-    batch slice and writes an idempotent per-epoch partition
-    (streaming/job.py's exactly-once argument)."""
-    import os
-
+    batch slice into the idempotent `out_dir/epoch=<id>` layout
+    (`streaming.drive.epoch_sink`). Returns the query's progress
+    records, one per epoch."""
     prep(spark)
     cfg = {**DEFAULT_CONFIG, **config}
-    stream = _rows(spark, sf_dir, cfg, stream=True)
-
-    def one_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        apply_sink(_feed(batch_df, cfg), cfg).write.mode("overwrite").parquet(
-            os.path.join(out_dir, f"epoch={epoch_id}")
-        )
-
-    q = (
-        stream.writeStream.foreachBatch(one_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return epoch_sink(
+        _rows(spark, sf_dir, cfg, stream=True), out_dir, checkpoint_dir,
+        lambda batch_df, _: apply_sink(_feed(batch_df, cfg), cfg),
     )
-    q.awaitTermination()
 
 
 # ------------------------------------------------ oracle-checked demo

@@ -180,14 +180,10 @@ CHK_TS_MOD = 1_000_000_007
 
 
 def stream_jsonl_sink_query(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from ..streaming.drive import file_sink
     from ..streaming.job import _events_stream
 
     prep(spark)
-    # fresh scratch per invocation (the checkpoint MUST not survive to
-    # the next call — a stale seen-files log would silently skip
-    # regenerated input of the same filename)
-    base = _scratch_dir("stream_jsonl", sf_dir)
-    out = os.path.join(base, "out")
     stream = _events_stream(spark, sf_dir).select(
         "event_id",
         "user_id",
@@ -195,15 +191,7 @@ def stream_jsonl_sink_query(spark: SparkSession, sf_dir: str) -> DataFrame:
         "value",
         F.expr("ts div 1000000").alias("ts_ms"),
     )
-    q = (
-        stream.writeStream.outputMode("append")
-        .format("json")
-        .option("path", out)
-        .option("checkpointLocation", os.path.join(base, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    out = file_sink(stream, "stream_jsonl_", fmt="json")
     back = spark.read.schema(
         "event_id long, user_id long, event_type string, value double,"
         " ts_ms long"

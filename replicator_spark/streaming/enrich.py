@@ -13,21 +13,17 @@ JOIN with no watermark withholding clause.
 
 from __future__ import annotations
 
-import os
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..cdc.envelope import OP_CASE_SQL
 from ..session import prep, read_table
+from .drive import file_sink
 from .job import _events_stream
 
 
 def enrich_stream_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     prep(spark)
-    base = tempfile.mkdtemp(prefix="stream_enrich_")
-    out = os.path.join(base, "out")
     dim = read_table(spark, sf_dir, "customer").select(
         F.col("c_custkey").alias("user_id"),
         F.col("c_mktsegment").alias("segment"),
@@ -40,16 +36,7 @@ def enrich_stream_query(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr("ts div 1000000").alias("ts_ms"),
     )
     enriched = ev.join(F.broadcast(dim), "user_id", "left")
-    q = (
-        enriched.writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", os.path.join(base, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.read.parquet(out)
+    return spark.read.parquet(file_sink(enriched, "stream_enrich_"))
 
 
 ENRICH_STREAM_SQL = f"""

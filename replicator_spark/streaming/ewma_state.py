@@ -10,7 +10,8 @@ That constant-size state is the whole point: 100 TB of history costs
 the state store 24 bytes per key.
 
 Emission: "update" mode yields the running row each batch via
-foreachBatch (stamped with the epoch); the read path keeps each
+foreachBatch into the epoch's own directory (`drive.epoch_sink`, so a
+replayed epoch overwrites itself); the read path keeps each
 user's LAST emitted row — which, because state carries the full
 prefix, always reflects the user's complete history no matter how
 the stream was micro-batched (the multibatch invariance test pins
@@ -39,6 +40,7 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from ..queries.analytics import EWMA_ALPHA, EWMA_SQL
 from ..session import prep
+from .drive import epoch_sink
 from .job import _events_stream
 
 OUT_SCHEMA = "user_id long, n_events int, ewma double, last_value double"
@@ -68,7 +70,8 @@ def _fold(
 
 def run_ewma_stream(stream: DataFrame, out: str, ckpt: str) -> None:
     """Drive the stateful fold over an events stream (canonical-nanos
-    ``ts``), appending one (running) row per active user per epoch."""
+    ``ts``), writing one (running) row per active user per epoch to
+    that epoch's ``out/epoch=<id>`` directory."""
     raw = stream.select(
         "user_id",
         F.expr("ts div 1000000").alias("ts_ms"),
@@ -82,20 +85,7 @@ def run_ewma_stream(stream: DataFrame, out: str, ckpt: str) -> None:
         "update",
         GroupStateTimeout.NoTimeout,
     )
-
-    def write_epoch(batch_df: DataFrame, epoch_id: int) -> None:
-        batch_df.withColumn("epoch", F.lit(epoch_id)).write.mode(
-            "append"
-        ).parquet(out)
-
-    q = (
-        updated.writeStream.outputMode("update")
-        .foreachBatch(write_epoch)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    epoch_sink(updated, out, ckpt, lambda batch_df, _: batch_df, mode="update")
 
 
 def collapse_ewma_store(spark: SparkSession, out: str) -> DataFrame:

@@ -1,18 +1,22 @@
-"""Streaming pipeline wiring: readStream → CDC transform → foreachBatch
-time-machine sink.
+"""Streaming ops over the events table: the time-machine stream, the
+watermarked window/dedup/top-k/quantile aggregations, and the
+streaming MERGE.
 
 Reference analog (Replicator.java:151-204): sourceStream (augment) →
 destinationStream (applier). Here the micro-batch loop, checkpointing,
 backpressure, retries, and partitioned queues are all Spark's
-(SURVEY.md §2.2 — "no port needed"); the per-batch transformation is
-the *same code path* as batch (change_feed_from → organized_feed_from →
-cells_from), so streaming == batch semantics by construction, and the
-oracle for the streaming query is literally the batch cells SQL.
+(SURVEY.md §2.2 — "no port needed"), driven once in `drive.py`. The
+time-machine stream is `runner.run_stream` with the time-machine
+applier: each epoch runs the *same code path* as batch
+(change_feed_from → organized_feed_from → cells_from), so streaming ==
+batch by construction, and the oracle for the streaming query is
+literally the batch cells SQL.
 
-Exactly-once: foreachBatch + deterministic version timestamps — a
-replayed micro-batch rewrites identical cells (the reference's
-idempotent-Put argument, HBaseApplier.java:166-196) — plus the
-streaming checkpoint (the safe-GTID-watermark analog, SURVEY §2.5).
+Exactly-once: per-epoch overwrite (`drive.epoch_sink`) + deterministic
+version timestamps — a replayed micro-batch rewrites identical cells
+(the reference's idempotent-Put argument, HBaseApplier.java:166-196) —
+plus the streaming checkpoint (the safe-GTID-watermark analog, SURVEY
+§2.5).
 """
 
 from __future__ import annotations
@@ -25,9 +29,10 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..cdc.envelope import change_feed_from
-from ..cdc.transactions import organized_feed_from
+from ..runner import run_stream
 from ..session import normalize_events, prep, table_path
-from ..sinks.timemachine import TIMEMACHINE_CELLS_SQL, cells_from
+from ..sinks.timemachine import TIMEMACHINE_CELLS_SQL
+from .drive import epoch_sink, file_sink
 
 # Canonical (post-normalize_events) events schema: ts is INT64
 # epoch-nanos regardless of the physical parquet encoding. Fixtures
@@ -61,54 +66,31 @@ def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     return normalize_events(stream)
 
 
-def run_timemachine_stream(
-    spark: SparkSession, sf_dir: str, out_dir: str, checkpoint_dir: str
-) -> None:
-    """Run the CDC pipeline as a stream over the events table with an
-    availableNow trigger (drains all input, then stops)."""
-    prep(spark)
-    stream = _events_stream(spark, sf_dir)
-
-    def apply_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        # change_feed_from's lag-derived before-images and txn-window
-        # stamps are computed WITHIN the micro-batch: correct here
-        # because availableNow over the single events file yields one
-        # batch (the shape the testdata + scale-smoke tool guarantee).
-        # A multi-file/maxFilesPerTrigger deployment must feed rows
-        # whose before-images come from the SOURCE: the binlog wire
-        # reader surfaces them per-row and change_feed_from falls back
-        # to them at batch heads — byte-identical to the batch run by
-        # the tests/test_multibatch.py golden contract (the synthetic
-        # events-parquet source has no wire images, hence this
-        # single-batch shape).
-        cells = cells_from(organized_feed_from(change_feed_from(batch_df)))
-        # foreachBatch is at-least-once: write each epoch to its own
-        # deterministic subdir with overwrite, so a retried micro-batch
-        # replaces its previous (possibly partial) output instead of
-        # appending duplicate cells — idempotent without read-time dedup.
-        cells.write.mode("overwrite").partitionBy("table_name").parquet(
-            os.path.join(out_dir, f"epoch={epoch_id}")
-        )
-
-    q = (
-        stream.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+# The time-machine stream is the runner's: with the QUERY gate off,
+# each epoch runs exactly change_feed_from → organized_feed_from →
+# cells_from (cells_from drops QUERY rows itself, after the organizer,
+# so txn_seq/row_rank and version_us match the batch cells SQL).
+TIMEMACHINE_STREAM_CONFIG = {
+    "applier.type": "timemachine",
+    "augmenter.skip.query.events": False,
+}
 
 
 def stream_timemachine_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """queries() entry: drive the streaming pipeline to completion and
     return the persisted cells — checked against the *batch* oracle SQL
-    (streaming == batch is the assertion)."""
+    (streaming == batch is the assertion). The envelope's lag-derived
+    fields are computed within each micro-batch, which is exact here:
+    the single events file drains as one batch. A multi-file source
+    must carry its before-images on the wire (the binlog reader does;
+    tests/test_multibatch.py pins that path)."""
     base = tempfile.mkdtemp(prefix="tm_stream_")
     out = os.path.join(base, "cells")
-    ckpt = os.path.join(base, "ckpt")
-    run_timemachine_stream(spark, sf_dir, out, ckpt)
-    df = spark.read.parquet(out)
-    return df.select(
+    run_stream(
+        spark, sf_dir, TIMEMACHINE_STREAM_CONFIG, out,
+        os.path.join(base, "ckpt"),
+    )
+    return spark.read.parquet(out).select(
         "event_id",
         "table_name",
         "rowkey",
@@ -130,7 +112,6 @@ def stream_windowed_counts_query(
     reference never needed — binlog is totally ordered — but a CDC
     engine on Spark gets for free): per-hour per-event-type counts."""
     prep(spark)
-    base = tempfile.mkdtemp(prefix="tm_win_")
     stream = _events_stream(spark, sf_dir).withColumn(
         "ts_ts", F.timestamp_millis(F.expr("ts div 1000000"))
     )
@@ -145,17 +126,7 @@ def stream_windowed_counts_query(
             .alias("sum_value"),
         )
     )
-    out = os.path.join(base, "out")
-    q = (
-        agg.writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", os.path.join(base, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    df = spark.read.parquet(out)
+    df = spark.read.parquet(file_sink(agg, "tm_win_"))
     return df.select(
         F.unix_millis(F.col("window.start")).alias("window_start_ms"),
         "event_type",
@@ -193,8 +164,6 @@ def stream_sliding_counts_query(
     one running aggregate per open (window, event_type); append mode
     emits each window once when the watermark passes its end."""
     prep(spark)
-    base = tempfile.mkdtemp(prefix="tm_slide_")
-    out = os.path.join(base, "out")
     stream = _events_stream(spark, sf_dir).withColumn(
         "ts_ts", F.timestamp_millis(F.expr("ts div 1000000"))
     )
@@ -206,16 +175,7 @@ def stream_sliding_counts_query(
         )
         .agg(F.count("*").alias("n"))
     )
-    q = (
-        agg.writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", os.path.join(base, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.read.parquet(out).select(
+    return spark.read.parquet(file_sink(agg, "tm_slide_")).select(
         F.unix_millis(F.col("window.start")).alias("window_start_ms"),
         "event_type",
         "n",
@@ -249,8 +209,6 @@ def stream_dedup_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     Emits each distinct (user_id, event_type) once; summarized per
     event_type for the oracle."""
     prep(spark)
-    base = tempfile.mkdtemp(prefix="tm_dedup_")
-    out = os.path.join(base, "out")
     stream = (
         _events_stream(spark, sf_dir)
         .withColumn("ts_ts", F.timestamp_millis(F.expr("ts div 1000000")))
@@ -258,17 +216,8 @@ def stream_dedup_query(spark: SparkSession, sf_dir: str) -> DataFrame:
         .dropDuplicates(["user_id", "event_type"])
         .select("user_id", "event_type")
     )
-    q = (
-        stream.writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", os.path.join(base, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
     return (
-        spark.read.parquet(out)
+        spark.read.parquet(file_sink(stream, "tm_dedup_"))
         .groupBy("event_type")
         .agg(F.count("*").alias("n_distinct_users"))
     )
@@ -294,8 +243,6 @@ def stream_topk_users_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly how a 100 TB/day leaderboard is served; the raw stream is
     never re-scanned."""
     prep(spark)
-    base = tempfile.mkdtemp(prefix="tm_topk_")
-    out = os.path.join(base, "out")
     stream = _events_stream(spark, sf_dir).withColumn(
         "ts_ts", F.timestamp_millis(F.expr("ts div 1000000"))
     )
@@ -304,18 +251,7 @@ def stream_topk_users_query(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.window("ts_ts", "1 hour"), "user_id")
         .agg(F.count("*").alias("n"))
     )
-    q = (
-        agg.writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", os.path.join(base, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    from pyspark.sql import Window as W
-
-    served = spark.read.parquet(out).select(
+    served = spark.read.parquet(file_sink(agg, "tm_topk_")).select(
         F.unix_millis(F.col("window.start")).alias("window_start_ms"),
         "user_id",
         "n",
@@ -369,10 +305,10 @@ def stream_upsert_query(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def run_upsert_stream(stream: DataFrame, out: str, ckpt: str) -> None:
-    def apply_batch(batch_df: DataFrame, epoch_id: int) -> None:
+    def delta(batch_df: DataFrame, _epoch_id: int) -> DataFrame:
         feed = change_feed_from(batch_df).where(F.col("op") != "QUERY")
         ord_k = F.struct("ts_ms", "event_id")
-        delta = feed.select(
+        return feed.select(
             "table_name",
             "user_id",
             "op",
@@ -388,17 +324,8 @@ def run_upsert_stream(stream: DataFrame, out: str, ckpt: str) -> None:
             F.max("event_id").alias("last_event_id"),
             F.count("*").alias("n_changes"),
         )
-        delta.write.mode("overwrite").parquet(
-            os.path.join(out, f"epoch={epoch_id}")
-        )
 
-    q = (
-        stream.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    epoch_sink(stream, out, ckpt, delta)
 
 
 def collapse_upsert_store(spark: SparkSession, out: str) -> DataFrame:
@@ -470,7 +397,6 @@ def stream_quantile_sketch_query(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     prep(spark)
-    base = tempfile.mkdtemp(prefix="tm_skq_")
     stream = _events_stream(spark, sf_dir).withColumn(
         "ts_ts", F.timestamp_millis(F.expr("ts div 1000000"))
     )
@@ -485,17 +411,7 @@ def stream_quantile_sketch_query(
         .groupBy(F.window("ts_ts", "1 day"), bin_col.alias("bin"))
         .agg(F.count("*").alias("cnt"))
     )
-    out = os.path.join(base, "out")
-    q = (
-        agg.writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", os.path.join(base, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    sketch = spark.read.parquet(out).select(
+    sketch = spark.read.parquet(file_sink(agg, "tm_skq_")).select(
         F.unix_millis(F.col("window.start")).alias("window_start_ms"),
         "bin",
         "cnt",

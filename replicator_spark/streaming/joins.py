@@ -10,9 +10,9 @@ grows forever; THAT is the 100 TB failure mode this operator avoids).
 
 Emission: INNER stream-stream joins emit a pair as soon as both sides
 have arrived — the watermark only controls state eviction and
-late-data drop, not emission. With availableNow over one input file
-everything arrives before the watermark first advances, so the result
-equals the batch range join exactly — which is the oracle.
+late-data drop, not emission. Draining one input file, everything
+arrives before the watermark first advances, so the result equals
+the batch range join exactly — which is the oracle.
 
 Scale shape: both streams hash-partition on user_id (the equi-key);
 the range predicate prunes in the per-key state; one exchange per
@@ -21,13 +21,12 @@ side.
 
 from __future__ import annotations
 
-import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..session import prep
+from .drive import file_sink
 from .job import _events_stream
 
 ATTRIB_WINDOW_MS = 10 * 60 * 1000  # purchase within 10 min of the click
@@ -35,8 +34,6 @@ ATTRIB_WINDOW_MS = 10 * 60 * 1000  # purchase within 10 min of the click
 
 def attribution_join_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     prep(spark)
-    base = tempfile.mkdtemp(prefix="stream_attrib_")
-    out = os.path.join(base, "out")
     ev = _events_stream(spark, sf_dir).select(
         "event_id",
         "user_id",
@@ -80,16 +77,7 @@ def attribution_join_query(spark: SparkSession, sf_dir: str) -> DataFrame:
         "purchase_id",
         (F.col("purchase_ms") - F.col("click_ms")).alias("gap_ms"),
     )
-    q = (
-        joined.writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", os.path.join(base, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.read.parquet(out)
+    return spark.read.parquet(file_sink(joined, "stream_attrib_"))
 
 
 ATTRIBUTION_JOIN_SQL = f"""

@@ -48,7 +48,6 @@ from __future__ import annotations
 
 import os
 import pickle
-import tempfile
 from typing import Iterator
 
 import numpy as np
@@ -66,6 +65,7 @@ from ..pipeline.dedup import (
     minhash_signatures,
 )
 from ..session import prep, table_path
+from .drive import file_sink
 
 OUT_SCHEMA = "doc_id long, band int, admitted boolean"
 STATE_SCHEMA = "blob binary"
@@ -182,21 +182,12 @@ def build_verdict_stream(docs_stream: DataFrame) -> DataFrame:
 
 
 def stream_near_dedup_query(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Drive the admission gate over the document stream (availableNow),
-    then serve the per-source kept/dropped tally."""
+    """Drive the admission gate over the whole document stream, then
+    serve the per-source kept/dropped tally."""
     prep(spark)
-    base = tempfile.mkdtemp(prefix="near_dedup_")
-    out = os.path.join(base, "out")
-    verdicts = build_verdict_stream(_docs_stream(spark, sf_dir))
-    q = (
-        verdicts.writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", os.path.join(base, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
+    out = file_sink(
+        build_verdict_stream(_docs_stream(spark, sf_dir)), "near_dedup_"
     )
-    q.awaitTermination()
     # serve: AND across bands, then the per-source tally
     from ..session import read_table
 

@@ -29,6 +29,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .drive import epoch_sink
+
 # MySQL type name → Spark type (subset of schema/DataType.java:7-59,
 # mapped per the decode rules of SURVEY §1.2).
 MYSQL_TO_SPARK = {
@@ -880,10 +882,10 @@ def run_ddl_replay_stream(
     an epoch dir written but not yet committed is re-run by Spark, so
     replaying it during recovery would double-apply its DDLs); each
     epoch's rows land in their own `epoch=<id>` dir with mode=overwrite
-    so an at-least-once foreachBatch retry overwrites rather than
-    appends; and a retry within one lifetime (registry already mutated)
-    re-emits the memoed rows instead of re-applying the DDLs with fresh
-    version numbers.
+    (`drive.epoch_sink`) so an at-least-once foreachBatch retry
+    overwrites rather than appends; and a retry within one lifetime
+    (registry already mutated) re-emits the memoed rows instead of
+    re-applying the DDLs with fresh version numbers.
 
     If the stream carries a `sql` column, each row's statement is
     replayed verbatim (in event_id order) — the path that exercises the
@@ -908,7 +910,7 @@ def run_ddl_replay_stream(
             )
         )
 
-    def replay(batch_df: DataFrame, epoch_id: int) -> None:
+    def replay(batch_df: DataFrame, epoch_id: int) -> DataFrame:
         if done["epoch"] == epoch_id:
             out_rows = done["rows"]  # in-lifetime retry: rows memoed
         else:
@@ -938,18 +940,9 @@ def run_ddl_replay_stream(
                     out_rows,
                 )
             done["epoch"], done["rows"] = epoch_id, out_rows
-        spark.createDataFrame(out_rows, HISTORY_OUT_SCHEMA).write.mode(
-            "overwrite"
-        ).parquet(os.path.join(out, f"epoch={epoch_id}"))
+        return spark.createDataFrame(out_rows, HISTORY_OUT_SCHEMA)
 
-    q = (
-        ddl_stream.writeStream.outputMode("append")
-        .foreachBatch(replay)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    epoch_sink(ddl_stream, out, ckpt, replay)
     return reg
 
 

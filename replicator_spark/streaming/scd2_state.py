@@ -22,8 +22,6 @@ carries — and each batch touches only arriving keys' groups.
 
 from __future__ import annotations
 
-import os
-import tempfile
 from typing import Iterator
 
 import numpy as np
@@ -34,6 +32,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from ..session import prep
+from .drive import file_sink
 from .job import _events_stream
 
 OUT_SCHEMA = (
@@ -111,19 +110,8 @@ def build_scd2_stream(stream: DataFrame) -> DataFrame:
 
 def stream_scd2_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     prep(spark)
-    base = tempfile.mkdtemp(prefix="scd2_state_")
-    out = os.path.join(base, "out")
-    q = (
-        build_scd2_stream(_events_stream(spark, sf_dir))
-        .writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", os.path.join(base, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.read.parquet(out)
+    scd2 = build_scd2_stream(_events_stream(spark, sf_dir))
+    return spark.read.parquet(file_sink(scd2, "scd2_state_"))
 
 
 # Oracle: the batch LEAD-window derivation, closed intervals only.

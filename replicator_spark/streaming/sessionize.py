@@ -9,10 +9,11 @@ session; the batch op's lag-based flag uses a strict `>`. The oracle
 below mirrors the STREAMING (half-open, `>=`) rule.
 
 Append-mode emission: a session emits exactly once, when the watermark
-passes its window end (= last event + gap). With availableNow and a
-0-delay watermark the final watermark is the stream's max event time,
-so sessions whose last event lies within one gap of the stream end are
-withheld — deterministic from the data, mirrored in the oracle WHERE.
+passes its window end (= last event + gap). Draining all input with
+a 0-delay watermark leaves the final watermark at the stream's max
+event time, so sessions whose last event lies within one gap of the
+stream end are withheld — deterministic from the data, mirrored in the
+oracle WHERE.
 
 Scale shape (100 TB/day of events): one keyed state-store exchange on
 user_id; session merge happens inside the state store with no window
@@ -21,14 +22,13 @@ re-sort; the watermark bounds state size to the active-session set.
 
 from __future__ import annotations
 
-import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..pipeline.sessions import GAP_MS
 from ..session import prep
+from .drive import file_sink
 from .job import _events_stream
 
 _GAP_STR = f"{GAP_MS} milliseconds"
@@ -36,8 +36,6 @@ _GAP_STR = f"{GAP_MS} milliseconds"
 
 def sessionize_stream_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     prep(spark)
-    base = tempfile.mkdtemp(prefix="stream_sess_")
-    out = os.path.join(base, "out")
     ev = _events_stream(spark, sf_dir).select(
         "event_id",
         "user_id",
@@ -60,16 +58,7 @@ def sessionize_stream_query(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         )
     )
-    q = (
-        sessions.writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", os.path.join(base, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.read.parquet(out)
+    return spark.read.parquet(file_sink(sessions, "stream_sess_"))
 
 
 SESSIONIZE_STREAM_SQL = f"""

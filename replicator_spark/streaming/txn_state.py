@@ -22,8 +22,6 @@ stream_windowed_counts.
 
 from __future__ import annotations
 
-import os
-import tempfile
 from typing import Iterator
 
 import pandas as pd
@@ -34,6 +32,7 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from ..cdc.envelope import CHANGE_FEED_SQL
 from ..session import prep
+from .drive import file_sink
 from .job import _events_stream
 
 # reference default augmenter.context.transaction.buffer.limit
@@ -87,12 +86,10 @@ def _assemble(
 
 
 def txn_assembly_stream_query(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Drive the stateful assembler over the event stream (availableNow)
-    and return the per-transaction summary — oracle = plain GROUP BY
+    """Drive the stateful assembler over the whole event stream and
+    return the per-transaction summary — oracle = plain GROUP BY
     restricted to watermark-closed transactions."""
     prep(spark)
-    base = tempfile.mkdtemp(prefix="txn_state_")
-    out = os.path.join(base, "out")
     # the batch envelope's commit stamp uses txn-scoped windows, which a
     # stream cannot do pre-aggregation — deriving the txn key directly;
     # commit stamping happens IN the state store (that's the point).
@@ -120,16 +117,7 @@ def txn_assembly_stream_query(spark: SparkSession, sf_dir: str) -> DataFrame:
             GroupStateTimeout.EventTimeTimeout,
         )
     )
-    q = (
-        assembled.writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", os.path.join(base, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.read.parquet(out)
+    return spark.read.parquet(file_sink(assembled, "txn_state_"))
 
 
 # Emission rule: a txn (minute bucket B) closes when the final

@@ -114,3 +114,18 @@ def multibatch_binlog(tmp_path):
         return str(logs)
 
     return make
+
+
+@pytest.fixture
+def wire_recs():
+    """Factory for `encode_binlog_file` records: one row event per id
+    in `ids`, each in its own commit second (`sec_base + id`)."""
+
+    def make(ids, op="INSERT", user=10, sec_base=0):
+        return [
+            (op, i, (sec_base + i) * 1_000_000, user, "signup", float(i),
+             "{}")
+            for i in ids
+        ]
+
+    return make

@@ -281,15 +281,41 @@ def test_stream_restart_honors_checkpoint(spark, sf_dir, tmp_path):
     """Structured Streaming's offset log is the safe-checkpoint analog
     (SURVEY 2.5): re-running the drained stream with the same
     checkpoint emits nothing new."""
-    from replicator_spark.streaming.job import run_timemachine_stream
+    from replicator_spark.runner import run_stream
+    from replicator_spark.streaming.job import TIMEMACHINE_STREAM_CONFIG
 
     out = str(tmp_path / "cells")
     ckpt = str(tmp_path / "ckpt")
-    run_timemachine_stream(spark, sf_dir, out, ckpt)
+    run_stream(spark, sf_dir, TIMEMACHINE_STREAM_CONFIG, out, ckpt)
     n1 = spark.read.parquet(out).count()
-    run_timemachine_stream(spark, sf_dir, out, ckpt)  # restart, same ckpt
+    # restart, same ckpt
+    run_stream(spark, sf_dir, TIMEMACHINE_STREAM_CONFIG, out, ckpt)
     n2 = spark.read.parquet(out).count()
     assert n1 > 0 and n2 == n1
+
+
+def test_ewma_store_replay_idempotent(spark, sf_dir, tmp_path):
+    """A re-run of the EWMA stream on a fresh checkpoint (the
+    at-least-once foreachBatch retry, writ large) must leave its store
+    unchanged: each epoch overwrites its own directory rather than
+    appending a second copy of its rows."""
+    from replicator_spark.streaming.ewma_state import (
+        collapse_ewma_store,
+        run_ewma_stream,
+    )
+    from replicator_spark.streaming.job import _events_stream
+
+    out = str(tmp_path / "store")
+
+    def run(ckpt):
+        stream = _events_stream(spark, sf_dir)
+        run_ewma_stream(stream, out, str(tmp_path / ckpt))
+        collapsed = collapse_ewma_store(spark, out).collect()
+        return spark.read.parquet(out).count(), sorted(map(tuple, collapsed))
+
+    n1, first = run("ck1")
+    # replay with a FRESH checkpoint → the same epochs re-fire
+    assert n1 > 0 and run("ck2") == (n1, first)
 
 
 def test_salted_join_equals_plain_join(spark, sf_dir):

@@ -228,17 +228,18 @@ def test_foreachbatch_replay_idempotent(spark, sf_dir, tmp_path):
     input) must leave the store byte-identical: epoch subdirs are
     overwritten, not appended (the round-1 advice's duplicate-cell
     scenario)."""
-    import os
-
-    from replicator_spark.streaming.job import run_timemachine_stream
+    from replicator_spark.runner import run_stream
+    from replicator_spark.streaming.job import TIMEMACHINE_STREAM_CONFIG
 
     out = str(tmp_path / "cells")
-    run_timemachine_stream(spark, sf_dir, out, str(tmp_path / "ck1"))
+    run_stream(spark, sf_dir, TIMEMACHINE_STREAM_CONFIG, out,
+               str(tmp_path / "ck1"))
     first = spark.read.parquet(out)
     n1 = first.count()
     sum1 = first.agg({"version_us": "sum"}).collect()[0][0]
     # replay with a FRESH checkpoint → same epochs re-fire → overwrite
-    run_timemachine_stream(spark, sf_dir, out, str(tmp_path / "ck2"))
+    run_stream(spark, sf_dir, TIMEMACHINE_STREAM_CONFIG, out,
+               str(tmp_path / "ck2"))
     second = spark.read.parquet(out)
     assert second.count() == n1
     assert second.agg({"version_us": "sum"}).collect()[0][0] == sum1

@@ -734,14 +734,7 @@ def test_ddl_rebuild_ignores_uncommitted_epoch(spark, tmp_path):
 # ---------------------------------------------------------------------------
 
 
-def _wire_recs(ids, op="INSERT", user=10, sec_base=0):
-    return [
-        (op, i, (sec_base + i) * 1_000_000, user, "signup", float(i), "{}")
-        for i in ids
-    ]
-
-
-def test_binlog_gtid_resume_after_midfile_kill(spark, tmp_path):
+def test_binlog_gtid_resume_after_midfile_kill(spark, tmp_path, wire_recs):
     """The reference's PRIMARY restart mode on the wire format
     (BinaryLogSupplier.java:206-228): lifetime 1 tails the log and
     dies MID-FILE — it applied and acked transaction 1 of file 1, but
@@ -768,7 +761,7 @@ def test_binlog_gtid_resume_after_midfile_kill(spark, tmp_path):
     logs.mkdir()
     # file 1: txns 1 and 2 (explicit ids keep gno deterministic and
     # CONTINUING across files, as on a real server)
-    f1 = _wire_recs([1, 2]) + _wire_recs([3, 4], op="UPDATE")
+    f1 = wire_recs([1, 2]) + wire_recs([3, 4], op="UPDATE")
     (logs / "binlog.000001").write_bytes(
         encode_binlog_file(f1, txn_ids=[1, 1, 2, 2],
                            payload_mode="mixed")  # txn 2 enveloped
@@ -803,7 +796,7 @@ def test_binlog_gtid_resume_after_midfile_kill(spark, tmp_path):
 
     # the server rotates: file 2 carries txn 3
     (logs / "binlog.000002").write_bytes(
-        encode_binlog_file(_wire_recs([5], user=11), txn_ids=[3],
+        encode_binlog_file(wire_recs([5], user=11), txn_ids=[3],
                            payload_mode="mixed")
     )
 
@@ -819,65 +812,6 @@ def test_binlog_gtid_resume_after_midfile_kill(spark, tmp_path):
     # txn 1 skipped, txn 2 replayed, txn 3 new — exactly once overall
     assert sorted(r["gtid_seq"] for r in replayed) == [2, 2, 3]
     assert sorted(r["event_id"] for r in replayed) == [3, 4, 5]
-
-
-def test_run_stream_binlog_timemachine_restart_across_rotation(
-    spark, tmp_path
-):
-    """The reference's steady-state topology (SURVEY §3.1) on the real
-    wire format, driven by config: binlog files → envelope → txn
-    stamping/µs organizer → time-machine cells via foreachBatch —
-    killed after file 1, restarted on the SAME checkpoint after the
-    server rotates files 2 and 3 in. The union of per-epoch cell
-    outputs must equal the batch twin over the full log directory
-    (users are file-disjoint so the envelope's per-user lag fields are
-    epoch-invariant), with no file decoded twice."""
-    from replicator_spark.runner import run_batch, run_stream
-    from replicator_spark.sources.binlog import encode_binlog_file
-
-    logs = tmp_path / "logs"
-    logs.mkdir()
-    cfg = {
-        "source.type": "binlog_files",
-        "source.binlog.path": str(logs),
-        "applier.type": "timemachine",
-    }
-    # distinct users and distinct commit seconds per file, so the
-    # lag-derived envelope fields and the per-second txn sequence are
-    # identical between per-epoch slices and the batch twin
-    f1 = (_wire_recs([1, 2], user=10, sec_base=0)
-          + _wire_recs([3], op="UPDATE", user=10, sec_base=0))
-    f2 = (_wire_recs([11, 12], user=20, sec_base=100)
-          + _wire_recs([13], op="DELETE", user=20, sec_base=100))
-    f3 = _wire_recs([21], user=30, sec_base=200)
-    (logs / "binlog.000001").write_bytes(
-        encode_binlog_file(f1, txn_ids=[1, 1, 2])
-    )
-    out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
-
-    # lifetime 1: drains file 1, then the process dies
-    run_stream(spark, None, cfg, out, ckpt)
-    epoch0 = spark.read.parquet(out + "/epoch=0")
-    n_epoch0 = epoch0.count()
-    assert n_epoch0 > 0
-
-    # rotation: files 2 and 3 land while the replicator is down
-    (logs / "binlog.000002").write_bytes(
-        encode_binlog_file(f2, txn_ids=[3, 3, 4])
-    )
-    (logs / "binlog.000003").write_bytes(
-        encode_binlog_file(f3, txn_ids=[5])
-    )
-
-    # lifetime 2: SAME checkpoint — only the new files decode
-    run_stream(spark, None, cfg, out, ckpt)
-    got = spark.read.parquet(out)
-    want = run_batch(spark, None, cfg)
-    # lifetime 2 added cells (files 2+3) without re-decoding file 1
-    assert got.count() == want.count() > n_epoch0
-    cols = [c for c in want.columns]
-    assert got.select(cols).exceptAll(want).count() == 0
-    assert want.exceptAll(got.select(cols)).count() == 0
 
 
 def test_wire_ddl_replay_restart_continues_versions(spark, tmp_path):

@@ -5,6 +5,7 @@ verified operators. Reference: Replicator.java:95-204, config.yaml."""
 from __future__ import annotations
 
 import os
+import pathlib
 import re
 
 import pytest
@@ -253,7 +254,8 @@ def test_binlog_cells_across_micro_batches_suppression(
     per-epoch cells union == batch cells, and the changed-column
     suppression holds across the batch boundary —
     UPDATE e4 (props unchanged vs a PREVIOUS batch) emits no props
-    cell; UPDATE e5 (value unchanged) emits no value cell."""
+    cell; UPDATE e5 (value unchanged) emits no value cell. run_stream
+    returns the drained query's progress, one record per epoch."""
     logs = multibatch_binlog()
     cfg = {
         "source.type": "binlog_files",
@@ -262,10 +264,15 @@ def test_binlog_cells_across_micro_batches_suppression(
         "applier.type": "timemachine",
     }
     out, ckpt = str(tmp_path / "cells"), str(tmp_path / "ckpt2")
-    run_stream(spark, None, cfg, out, ckpt)
+    progress = run_stream(spark, None, cfg, out, ckpt)
     assert len(
         [d for d in os.listdir(out) if d.startswith("epoch=")]
     ) == 3
+    # one progress record per epoch; the binlog source's input rows are
+    # files (decoding runs after the file source), one per epoch
+    assert [p["batchId"] for p in progress] == [0, 1, 2]
+    assert all(p["durationMs"]["addBatch"] >= 0 for p in progress)
+    assert [p["numInputRows"] for p in progress] == [1, 1, 1]
     got = spark.read.parquet(out)
     want = run_batch(spark, None, cfg)
     cols = sorted(want.columns)
@@ -279,3 +286,75 @@ def test_binlog_cells_across_micro_batches_suppression(
     assert (4, "value") in cells and (4, "props") not in cells
     assert (5, "props") in cells and (5, "value") not in cells
     assert (6, "row_status") in cells and (6, "value") not in cells
+
+
+def test_run_stream_binlog_timemachine_restart_across_rotation(
+    spark, tmp_path, wire_recs
+):
+    """The reference's steady-state topology (SURVEY §3.1) on the real
+    wire format, driven by config: binlog files → envelope → txn
+    stamping/µs organizer → time-machine cells via foreachBatch —
+    killed after file 1, restarted on the SAME checkpoint after the
+    server rotates files 2 and 3 in. The union of per-epoch cell
+    outputs must equal the batch twin over the full log directory
+    (users are file-disjoint so the envelope's per-user lag fields are
+    epoch-invariant), with no file decoded twice."""
+    from replicator_spark.sources.binlog import encode_binlog_file
+
+    logs = tmp_path / "logs"
+    logs.mkdir()
+    cfg = {
+        "source.type": "binlog_files",
+        "source.binlog.path": str(logs),
+        "applier.type": "timemachine",
+    }
+    # distinct users and distinct commit seconds per file, so the
+    # lag-derived envelope fields and the per-second txn sequence are
+    # identical between per-epoch slices and the batch twin
+    f1 = (wire_recs([1, 2], user=10, sec_base=0)
+          + wire_recs([3], op="UPDATE", user=10, sec_base=0))
+    f2 = (wire_recs([11, 12], user=20, sec_base=100)
+          + wire_recs([13], op="DELETE", user=20, sec_base=100))
+    f3 = wire_recs([21], user=30, sec_base=200)
+    (logs / "binlog.000001").write_bytes(
+        encode_binlog_file(f1, txn_ids=[1, 1, 2])
+    )
+    out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
+
+    # lifetime 1: drains file 1, then the process dies
+    run_stream(spark, None, cfg, out, ckpt)
+    epoch0 = spark.read.parquet(out + "/epoch=0")
+    n_epoch0 = epoch0.count()
+    assert n_epoch0 > 0
+
+    # rotation: files 2 and 3 land while the replicator is down
+    (logs / "binlog.000002").write_bytes(
+        encode_binlog_file(f2, txn_ids=[3, 3, 4])
+    )
+    (logs / "binlog.000003").write_bytes(
+        encode_binlog_file(f3, txn_ids=[5])
+    )
+
+    # lifetime 2: SAME checkpoint — only the new files decode
+    run_stream(spark, None, cfg, out, ckpt)
+    got = spark.read.parquet(out)
+    want = run_batch(spark, None, cfg)
+    # lifetime 2 added cells (files 2+3) without re-decoding file 1
+    assert got.count() == want.count() > n_epoch0
+    cols = want.columns
+    assert got.select(cols).exceptAll(want).count() == 0
+    assert want.exceptAll(got.select(cols)).count() == 0
+
+
+def test_streaming_drive_lives_in_one_module():
+    """Every streaming query in the package drains through
+    streaming/drive.py's `_drain`: no other module starts its own
+    availableNow query or waits on one."""
+    root = pathlib.Path(__file__).resolve().parents[1] / "replicator_spark"
+    words = ("awaitTermination(", "availableNow")
+    hits = {
+        p.relative_to(root).as_posix()
+        for p in root.rglob("*.py")
+        if any(w in p.read_text() for w in words)
+    }
+    assert hits == {"streaming/drive.py"}

@@ -63,14 +63,6 @@ def date_str(col: Column) -> Column:
     return F.date_format(col, "yyyy-MM-dd")
 
 
-def time_str(col: Column) -> Column:
-    return F.date_format(col, "HH:mm:ss")
-
-
-def epoch_millis(col: Column) -> Column:
-    return F.unix_millis(col)
-
-
 def enum_label(col_idx: Column, labels: Sequence[str]) -> Column:
     """1-based ENUM index → label (index 0 / out of range → NULL).
     An explicit CASE chain, NOT element_at: element_at THROWS on

@@ -63,18 +63,6 @@ FROM feed
 # Designated payload/context table: its rows are keyed by transaction
 # UUID, not by PK (HBaseRowKeyMapper.getPayloadTableHBaseRowKey:60-67) —
 # the payload table stores one opaque context blob per transaction.
-def payload_aware_rowkey(
-    table_col: Column,
-    txn_uuid_col: Column,
-    pk_cols: Sequence[Column],
-    payload_table: str,
-) -> Column:
-    """Salted PK key, except the payload table which keys by txn UUID."""
-    return F.when(
-        table_col == F.lit(payload_table), txn_uuid_col
-    ).otherwise(salted_rowkey(pk_cols))
-
-
 def payload_rowkey_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     feed = change_feed(spark, sf_dir)
     # payload table := the January table of the feed's first year

@@ -15,16 +15,18 @@ Until this module, the repo modeled that layer as a parquet feed
 (SURVEY §2.1 "modeled as parquet feed"). This module closes the gap
 Spark-first:
 
-- ``_parse_partition`` — an Arrow-batched ``mapInPandas`` byte-walk
-  (the `cdc/jsonb.py` pattern: Spark has no builtin for this format)
-  that turns a DataFrame of binlog FILE BLOBS (``data binary``) into
-  decoded row-change records. On a real cluster the input is one
-  ``binaryFile`` scan (``_scan``) of ``s3://bucket/binlog.*`` — one
-  blob per rotated binlog file, partitioned by file, so decode
-  parallelism is file-level with zero shuffle (exactly how the
-  reference fans multiple binlog streams across hosts). Every reader
-  shares that scan, and every decoder (rows, records, DDL) the one
-  event walker ``_walk``.
+- ``_parse_partition`` — a ``mapInArrow`` byte-walk (the
+  `cdc/jsonb.py` pattern: Spark has no builtin for this format) that
+  turns a DataFrame of binlog FILE BLOBS (``data binary``) into
+  decoded row-change records, Arrow batches in and Arrow batches out
+  with no pandas step. Each distinct TABLE_MAP compiles once into a
+  generated straight-line row-image decoder (`_image_decoder`). On a
+  real cluster the input is one ``binaryFile`` scan (``_scan``) of
+  ``s3://bucket/binlog.*`` — one blob per rotated binlog file,
+  partitioned by file, so decode parallelism is file-level with zero
+  shuffle (exactly how the reference fans multiple binlog streams
+  across hosts). Every reader shares that scan, and every decoder
+  (rows, records, DDL) the one event walker ``_walk``.
 - ``encode_binlog_file`` + ``_encode_partition`` — a faithful WRITER of
   the same layout (magic, FDE, GTID/BEGIN/TABLE_MAP/ROWS/XID
   choreography, CRC32 trailers). The writer exists for fixtures and
@@ -107,6 +109,8 @@ GTID_EVENT = 33
 PREVIOUS_GTIDS_EVENT = 35
 PARTIAL_UPDATE_ROWS_EVENT = 39  # 8.0.3+ binlog_row_value_options
 TRANSACTION_PAYLOAD_EVENT = 40  # 8.0.20+ compressed-txn envelope
+_ROWS_EVENTS = frozenset({WRITE_ROWS_EVENT, UPDATE_ROWS_EVENT,
+                          DELETE_ROWS_EVENT, PARTIAL_UPDATE_ROWS_EVENT})
 
 # JSON-diff operations inside PARTIAL_UPDATE_ROWS after-images
 # (libbinlogevents json_diff.h — the WL#2955 wire enum)
@@ -275,6 +279,9 @@ _UNSIGNED_BITS = {
 }  # int widths: writer packs v mod 2^bits; parser reinterprets by sign
 
 HEADER_LEN = 19
+_HEADER = struct.Struct("<IBIIIH").unpack_from  # the 19-byte event header
+_U16 = struct.Struct("<H").unpack_from
+_U32 = struct.Struct("<I").unpack_from
 CHECKSUM_ALG_CRC32 = 1
 # post-header length slots written in the FDE — through
 # TRANSACTION_PAYLOAD(40), the 8.0.20+ server's table size
@@ -1306,6 +1313,13 @@ def _meta_size(t: int) -> int:
     return 0
 
 
+def _column_codec(ci: int, charsets: dict) -> Optional[str]:
+    """Column ``ci``'s bound text codec: None = raw bytes (binary
+    collation); a column without a charset TLV keeps the utf-8
+    default."""
+    return _collation_codec(charsets[ci]) if ci in charsets else "utf-8"
+
+
 def _compile_decoders(
     col_types: list[int], col_metas: list[bytes],
     col_charsets: Optional[dict] = None,
@@ -1339,11 +1353,7 @@ def _compile_decoders(
     charsets = col_charsets or {}
     ds: list = []
     for ci, (t, m) in enumerate(zip(col_types, col_metas)):
-        # the column's bound text codec: None = raw bytes (binary
-        # collation); unset columns keep the utf-8 default
-        codec = (
-            _collation_codec(charsets[ci]) if ci in charsets else "utf-8"
-        )
+        codec = _column_codec(ci, charsets)
         if t == MYSQL_TYPE_TINY:
             def d(buf, pos, _u=upf):
                 return _u("<b", buf, pos)[0], pos + 1
@@ -1483,22 +1493,86 @@ def _compile_decoders(
     return ds
 
 
-def _decode_image(
-    buf: bytes, pos: int, decoders: list
-) -> tuple[list, int]:
-    n = len(decoders)
-    nb = (n + 7) // 8
-    nullbits = buf[pos : pos + nb]
-    pos += nb
-    row: list = []
-    append = row.append
-    for i, dec in enumerate(decoders):
-        if nullbits[i >> 3] & (1 << (i & 7)):
-            append(None)
-            continue
-        v, pos = dec(buf, pos)
-        append(v)
-    return row, pos
+# the encodings a generated image decoder inlines: fixed-width numbers
+# (struct format, width) and TIMESTAMP2 by its fractional byte count
+_FIXED_FORMATS = {
+    MYSQL_TYPE_TINY: ("b", 1), MYSQL_TYPE_SHORT: ("h", 2),
+    MYSQL_TYPE_LONG: ("i", 4), MYSQL_TYPE_LONGLONG: ("q", 8),
+    MYSQL_TYPE_FLOAT: ("f", 4), MYSQL_TYPE_DOUBLE: ("d", 8),
+}
+_TS2_FORMATS = {  # big-endian seconds, then the fraction's bytes
+    0: ("I", "s,", "0"), 1: ("IB", "s, f1", "f1"),
+    2: ("IH", "s, f1", "f1"), 3: ("IHB", "s, f1, f2", "(f1 << 8 | f2)"),
+}
+_UNPACKERS = {
+    **{f"u_{f}": struct.Struct("<" + f).unpack_from
+       for f, _ in _FIXED_FORMATS.values()},
+    **{f"u_{f}": struct.Struct(">" + f).unpack_from
+       for f, _, _ in _TS2_FORMATS.values()},
+    "u_H": struct.Struct("<H").unpack_from,
+}
+
+
+def _inline_column(i: int, t: int, m: bytes, codec: Optional[str]):
+    """Source lines decoding column ``i`` into ``v{i}`` and advancing
+    ``pos``, or None when the column calls its closure instead."""
+    v = f"v{i}"
+    if t in _FIXED_FORMATS:
+        f, w = _FIXED_FORMATS[t]
+        return [f"{v} = u_{f}(buf, pos)[0]", f"pos += {w}"]
+    if t == MYSQL_TYPE_TIMESTAMP2 and _frac_bytes(m[0]) in _TS2_FORMATS:
+        nb = _frac_bytes(m[0])
+        f, names, frac = _TS2_FORMATS[nb]
+        return [f"{names} = u_{f}(buf, pos)",
+                f"{v} = s * 1000000 + {frac} * {10 ** (6 - 2 * nb)}",
+                f"pos += {4 + nb}"]
+    if t in (MYSQL_TYPE_VARCHAR, MYSQL_TYPE_VAR_STRING):
+        wide = struct.unpack("<H", m)[0] >= 256
+    elif (t == MYSQL_TYPE_STRING
+          and _string_real_type(m) == MYSQL_TYPE_STRING):
+        wide = _string_meta_length(m) >= 256
+    else:
+        return None
+    w = 2 if wide else 1
+    lines = ["ln = u_H(buf, pos)[0]" if wide else "ln = buf[pos]",
+             f"{v} = buf[pos + {w} : pos + {w} + ln]",
+             f"pos += {w} + ln"]
+    if codec is not None:
+        # the closures' text(): decode, keeping raw bytes on failure
+        lines += ["try:", f"    {v} = {v}.decode({codec!r})",
+                  "except UnicodeDecodeError:", "    pass"]
+    return lines
+
+
+def _image_decoder(
+    col_types: list[int], col_metas: list[bytes],
+    col_charsets: Optional[dict], decoders: list,
+):
+    """One generated row-image decoder per distinct TABLE_MAP:
+    straight-line code holding each column's null-bitmap test and,
+    for the hot encodings (fixed-width numbers, TIMESTAMP2, VARCHAR
+    and CHAR text), its decode inlined as one ``struct`` unpack or
+    slice; every other column calls its `_compile_decoders` closure.
+    Returns ``(buf, pos) -> (row, new_pos)``, value-for-value what a
+    walk over the closures returns (the hypothesis roundtrip test
+    pins the two together)."""
+    charsets = col_charsets or {}
+    ns: dict = dict(_UNPACKERS)
+    n = len(col_types)
+    src = ["def image(buf, pos):"]
+    src += [f"    n{k} = buf[pos + {k}]" for k in range((n + 7) // 8)]
+    src.append(f"    pos += {(n + 7) // 8}")
+    for i, (t, m) in enumerate(zip(col_types, col_metas)):
+        body = _inline_column(i, t, m, _column_codec(i, charsets))
+        if body is None:
+            ns[f"d{i}"] = decoders[i]
+            body = [f"v{i}, pos = d{i}(buf, pos)"]
+        src += [f"    if n{i >> 3} & {1 << (i & 7)}:",
+                f"        v{i} = None", "    else:"]
+        src += ["        " + line for line in body]
+    src.append(f"    return [{', '.join(f'v{i}' for i in range(n))}], pos")
+    exec("\n".join(src), ns)
+    return ns["image"]
 
 
 def _json_path_segments(path: str) -> list:
@@ -1661,8 +1735,8 @@ def _decode_partial_image(
 
 class _TableMap:
     __slots__ = ("db", "table", "col_types", "col_metas", "decoders",
-                 "unsigned", "col_names", "enum_labels", "set_labels",
-                 "col_charsets", "primary_key", "pk_prefix",
+                 "image", "unsigned", "col_names", "enum_labels",
+                 "set_labels", "col_charsets", "primary_key", "pk_prefix",
                  "geometry_types", "json_cols")
 
     def __init__(self, db, table, col_types, col_metas,
@@ -1674,6 +1748,9 @@ class _TableMap:
         self.col_types, self.col_metas = col_types, col_metas
         self.decoders = _compile_decoders(
             col_types, col_metas, col_charsets
+        )
+        self.image = _image_decoder(
+            col_types, col_metas, col_charsets, self.decoders
         )
         self.unsigned = unsigned          # per-column bool, or None
         self.col_names = col_names        # per-column str, or None
@@ -1776,6 +1853,200 @@ def _unwrap_transaction_payload(body: bytes) -> list[tuple]:
     return out
 
 
+# TABLE_MAP body → its _TableMap: the server logs the same TABLE_MAP
+# ahead of every transaction on the table, so decoders (closures and
+# the generated image decoder) compile once per distinct body. Module
+# level so a reused Python worker keeps it across tasks; the values
+# are never mutated, so sharing it changes no result.
+_TABLE_MAPS: dict = {}
+
+
+def _table_map(body: bytes) -> "_TableMap":
+    """`_parse_table_map`, memoized in `_TABLE_MAPS` (bounded, FIFO
+    eviction, like the writer's encoder memo)."""
+    tm = _TABLE_MAPS.get(body)
+    if tm is None:
+        tm = _parse_table_map(body)
+        while len(_TABLE_MAPS) >= 1024:
+            _TABLE_MAPS.pop(next(iter(_TABLE_MAPS)))
+        _TABLE_MAPS[body] = tm
+    return tm
+
+
+def _parse_table_map(body: bytes) -> "_TableMap":
+    """One TABLE_MAP body → its _TableMap: column types and metadata,
+    then the binlog_row_metadata=FULL optional-metadata TLVs. The
+    table id (body[0:6]) is the caller's to read."""
+    p = 8  # skip flags
+    dblen = body[p]; p += 1
+    db = body[p : p + dblen].decode(); p += dblen + 1
+    tblen = body[p]; p += 1
+    table = body[p : p + tblen].decode(); p += tblen + 1
+    ncols, p = _read_lenenc(body, p)
+    col_types = list(body[p : p + ncols]); p += ncols
+    metalen, p = _read_lenenc(body, p)
+    metas: list[bytes] = []
+    mp = p
+    for t in col_types:
+        ms = _meta_size(t)
+        metas.append(body[mp : mp + ms])
+        mp += ms
+    if mp - p != metalen:
+        raise ValueError("table-map metadata length mismatch")
+    p = mp + (ncols + 7) // 8  # skip the null-allowed bitmap
+    unsigned = col_names = primary_key = None
+    col_charsets: Optional[dict[int, int]] = None
+    enum_labels: dict[int, tuple] = {}
+    set_labels: dict[int, tuple] = {}
+    raw_enum_labels: dict[int, tuple] = {}
+    raw_set_labels: dict[int, tuple] = {}
+    enumset_charsets: dict[int, int] = {}
+    pk_prefix: dict[int, int] = {}
+    geometry_types: dict[int, int] = {}
+    while p < len(body):  # optional-metadata TLVs (FULL mode)
+        tlv = body[p]; p += 1
+        ln, p = _read_lenenc(body, p)
+        payload = body[p : p + ln]
+        if p + ln > len(body):
+            raise ValueError("truncated table-map optional metadata")
+        p += ln
+        if tlv == _OPTMETA_SIGNEDNESS:
+            numeric = [
+                i for i, t in enumerate(col_types)
+                if t in _SIGNEDNESS_TYPES
+            ]
+            unsigned = [False] * ncols
+            for j, i in enumerate(numeric):
+                if payload[j // 8] & (0x80 >> (j % 8)):
+                    unsigned[i] = True
+        elif tlv == _OPTMETA_COLUMN_NAME:
+            col_names, q = [], 0
+            for _ in range(ncols):
+                nln, q = _read_lenenc(payload, q)
+                col_names.append(payload[q : q + nln].decode())
+                q += nln
+        elif tlv in (_OPTMETA_DEFAULT_CHARSET,
+                     _OPTMETA_COLUMN_CHARSET):
+            # both index over the CHARACTER columns only — the
+            # same slot-alignment contract as SIGNEDNESS over
+            # the numeric ones
+            char_cols = [
+                i for i, (t, m) in enumerate(zip(col_types, metas))
+                if _is_character_col(t, m)
+            ]
+            col_charsets = {}
+            if tlv == _OPTMETA_COLUMN_CHARSET:
+                q = 0
+                for i in char_cols:
+                    c, q = _read_lenenc(payload, q)
+                    col_charsets[i] = c
+            else:
+                default, q = _read_lenenc(payload, 0)
+                overrides: dict[int, int] = {}
+                while q < len(payload):
+                    j, q = _read_lenenc(payload, q)
+                    c, q = _read_lenenc(payload, q)
+                    overrides[j] = c
+                for j, i in enumerate(char_cols):
+                    col_charsets[i] = overrides.get(j, default)
+        elif tlv == _OPTMETA_GEOMETRY_TYPE:
+            # one lenenc per GEOMETRY column: its subtype
+            # (0=GEOMETRY, 1=POINT, 2=LINESTRING, ...)
+            geo_cols = [
+                i for i, t in enumerate(col_types)
+                if t == MYSQL_TYPE_GEOMETRY
+            ]
+            q = 0
+            for i in geo_cols:
+                g, q = _read_lenenc(payload, q)
+                geometry_types[i] = g
+        elif tlv == _OPTMETA_SIMPLE_PRIMARY_KEY:
+            primary_key, q = [], 0
+            while q < len(payload):
+                i, q = _read_lenenc(payload, q)
+                primary_key.append(i)
+        elif tlv == _OPTMETA_PRIMARY_KEY_WITH_PREFIX:
+            # (column index, prefix length) pairs — written
+            # instead of SIMPLE_PRIMARY_KEY when any key
+            # part indexes a column prefix (KEY(col(10)))
+            primary_key, q = [], 0
+            pk_prefix = {}
+            while q < len(payload):
+                i, q = _read_lenenc(payload, q)
+                plen, q = _read_lenenc(payload, q)
+                primary_key.append(i)
+                if plen:
+                    pk_prefix[i] = plen
+        elif tlv in (_OPTMETA_ENUM_AND_SET_DEFAULT_CHARSET,
+                     _OPTMETA_ENUM_AND_SET_COLUMN_CHARSET):
+            # same two layouts as the character-column
+            # charset TLVs, indexed over ENUM/SET columns —
+            # governs the LABEL text encoding in TLVs 5/6
+            es_cols = [
+                i for i, t in enumerate(col_types)
+                if t == MYSQL_TYPE_STRING
+                and _string_real_type(metas[i])
+                in (MYSQL_TYPE_ENUM, MYSQL_TYPE_SET)
+            ]
+            enumset_charsets = {}
+            if tlv == _OPTMETA_ENUM_AND_SET_COLUMN_CHARSET:
+                q = 0
+                for i in es_cols:
+                    c, q = _read_lenenc(payload, q)
+                    enumset_charsets[i] = c
+            else:
+                default, q = _read_lenenc(payload, 0)
+                ovr: dict[int, int] = {}
+                while q < len(payload):
+                    j, q = _read_lenenc(payload, q)
+                    c, q = _read_lenenc(payload, q)
+                    ovr[j] = c
+                for j, i in enumerate(es_cols):
+                    enumset_charsets[i] = ovr.get(j, default)
+        elif tlv in (_OPTMETA_ENUM_STR, _OPTMETA_SET_STR):
+            want = (MYSQL_TYPE_ENUM if tlv == _OPTMETA_ENUM_STR
+                    else MYSQL_TYPE_SET)
+            cols = [
+                i for i, t in enumerate(col_types)
+                if t == MYSQL_TYPE_STRING
+                and _string_real_type(metas[i]) == want
+            ]
+            q = 0
+            # labels stay RAW here: their charset TLV
+            # (10/11) is numerically later, so decode is
+            # deferred until the whole TLV walk is done
+            out_labels = (raw_enum_labels
+                          if want == MYSQL_TYPE_ENUM
+                          else raw_set_labels)
+            for i in cols:
+                n_lab, q = _read_lenenc(payload, q)
+                labs = []
+                for _ in range(n_lab):
+                    lln, q = _read_lenenc(payload, q)
+                    labs.append(bytes(payload[q : q + lln]))
+                    q += lln
+                out_labels[i] = tuple(labs)
+        # unknown TLVs are skipped by their length
+    for raw, out in ((raw_enum_labels, enum_labels),
+                     (raw_set_labels, set_labels)):
+        for i, labs in raw.items():
+            codec = (
+                _collation_codec(enumset_charsets[i])
+                if i in enumset_charsets else "utf-8"
+            ) or "latin1"  # binary labels: lossless map
+            out[i] = tuple(
+                lab.decode(codec, errors="replace")
+                for lab in labs
+            )
+    return _TableMap(
+        db, table, col_types, metas,
+        unsigned=unsigned, col_names=col_names,
+        enum_labels=enum_labels, set_labels=set_labels,
+        col_charsets=col_charsets, primary_key=primary_key,
+        pk_prefix=pk_prefix, geometry_types=geometry_types,
+    )
+
+
 def parse_binlog_file(blob: bytes) -> Iterator[dict]:
     """Walk one binlog file; yield one dict per event:
     ``{"type", "ts_sec", "log_pos", ...}`` with per-type payload keys
@@ -1791,16 +2062,15 @@ def parse_binlog_file(blob: bytes) -> Iterator[dict]:
     rows_query: Optional[str] = None  # statement text, until txn end
     total = len(blob)
     first = True
+    view = memoryview(blob)  # CRC input without a copy per event
     while pos < total:
         if total - pos < HEADER_LEN:
             raise ValueError("truncated event header")
-        ts_sec, etype, _server_id, size, log_pos, _flags = struct.unpack_from(
-            "<IBIIIH", blob, pos
-        )
+        ts_sec, etype, _server_id, size, log_pos, _flags = _HEADER(blob, pos)
         if size < HEADER_LEN or pos + size > total:
             raise ValueError("truncated event body")
-        ev = blob[pos : pos + size]
         if first:
+            ev = blob[pos : pos + size]
             if etype != FORMAT_DESCRIPTION_EVENT:
                 raise ValueError("first event is not FORMAT_DESCRIPTION")
             # checksum algorithm (5.6.1+ layout): the alg byte sits at
@@ -1848,15 +2118,14 @@ def parse_binlog_file(blob: bytes) -> Iterator[dict]:
             first = False
             body = ev[HEADER_LEN:-4] if checksum else ev[HEADER_LEN:]
         elif checksum == CHECKSUM_ALG_CRC32:
-            want = struct.unpack("<I", ev[-4:])[0]
-            got = zlib.crc32(ev[:-4]) & 0xFFFFFFFF
-            if want != got:
+            end = pos + size - 4
+            if _U32(blob, end)[0] != zlib.crc32(view[pos:end]):
                 raise ValueError(
                     f"CRC32 mismatch at pos {pos} (event type {etype})"
                 )
-            body = ev[HEADER_LEN:-4]
+            body = blob[pos + HEADER_LEN : end]
         else:
-            body = ev[HEADER_LEN:]
+            body = blob[pos + HEADER_LEN : pos + size]
         pos += size
         if etype == TRANSACTION_PAYLOAD_EVENT:
             # 8.0.20+ compressed-txn envelope: splice the wrapped
@@ -1875,7 +2144,57 @@ def parse_binlog_file(blob: bytes) -> Iterator[dict]:
         else:
             step = ((etype, ts_sec, log_pos, body),)
         for etype, ts_sec, log_pos, body in step:
-            if etype == FORMAT_DESCRIPTION_EVENT:
+            if etype in _ROWS_EVENTS:  # the bulk of a log: tested first
+                table_id = int.from_bytes(body[0:6], "little")
+                tm = tmaps.get(table_id)
+                if tm is None:
+                    raise ValueError(f"rows event for unmapped table {table_id}")
+                p = 8  # skip flags
+                extra = _U16(body, p)[0]
+                p += extra  # the length includes its own 2 bytes
+                ncols, p = _read_lenenc(body, p)
+                nb = (ncols + 7) // 8
+                # present bitmaps: this decoder requires FULL row images —
+                # the reference's own hard invariant (binlog_row_image=
+                # FULL); a cleared bit (MINIMAL/NOBLOB server) would
+                # silently misalign every later value, so reject loudly
+                n_bitmaps = 1 if etype in (WRITE_ROWS_EVENT,
+                                           DELETE_ROWS_EVENT) else 2
+                full = (1 << ncols) - 1
+                for _ in range(n_bitmaps):
+                    bm = int.from_bytes(body[p : p + nb], "little")
+                    p += nb
+                    if bm & full != full:
+                        raise ValueError(
+                            "partial row images unsupported "
+                            "(binlog_row_image=FULL required)"
+                        )
+                rows = []
+                image = tm.image
+                while p < len(body):
+                    img, p = image(body, p)
+                    img = _apply_table_metadata(img, tm)
+                    if etype == UPDATE_ROWS_EVENT:
+                        after, p = image(body, p)
+                        rows.append((img, _apply_table_metadata(after, tm)))
+                    elif etype == PARTIAL_UPDATE_ROWS_EVENT:
+                        # 8.0.3+ binlog_row_value_options=PARTIAL_JSON:
+                        # the after-image carries JSON DIFFS for flagged
+                        # columns — reconstruct the full after document
+                        # by applying them to the before image, so
+                        # downstream sees the same contract as a
+                        # full-image log
+                        after, p = _decode_partial_image(body, p, tm, img)
+                        rows.append((img, _apply_table_metadata(after, tm)))
+                    else:
+                        rows.append(img)
+                yield {
+                    "type": etype, "ts_sec": ts_sec, "log_pos": log_pos,
+                    "db": tm.db, "table": tm.table, "rows": rows,
+                    "col_names": tm.col_names, "primary_key": tm.primary_key,
+                    "rows_query": rows_query,
+                }
+            elif etype == FORMAT_DESCRIPTION_EVENT:
                 yield {"type": etype, "ts_sec": ts_sec, "log_pos": log_pos}
             elif etype == QUERY_EVENT:
                 _tid, _exec, dblen, _err, svlen = struct.unpack_from(
@@ -1946,225 +2265,7 @@ def parse_binlog_file(blob: bytes) -> Iterator[dict]:
                     "next_file": body[8:].decode(),
                 }
             elif etype == TABLE_MAP_EVENT:
-                table_id = int.from_bytes(body[0:6], "little")
-                p = 8  # skip flags
-                dblen = body[p]; p += 1
-                db = body[p : p + dblen].decode(); p += dblen + 1
-                tblen = body[p]; p += 1
-                table = body[p : p + tblen].decode(); p += tblen + 1
-                ncols, p = _read_lenenc(body, p)
-                col_types = list(body[p : p + ncols]); p += ncols
-                metalen, p = _read_lenenc(body, p)
-                metas: list[bytes] = []
-                mp = p
-                for t in col_types:
-                    ms = _meta_size(t)
-                    metas.append(body[mp : mp + ms])
-                    mp += ms
-                if mp - p != metalen:
-                    raise ValueError("table-map metadata length mismatch")
-                p = mp + (ncols + 7) // 8  # skip the null-allowed bitmap
-                unsigned = col_names = primary_key = None
-                col_charsets: Optional[dict[int, int]] = None
-                enum_labels: dict[int, tuple] = {}
-                set_labels: dict[int, tuple] = {}
-                raw_enum_labels: dict[int, tuple] = {}
-                raw_set_labels: dict[int, tuple] = {}
-                enumset_charsets: dict[int, int] = {}
-                pk_prefix: dict[int, int] = {}
-                geometry_types: dict[int, int] = {}
-                while p < len(body):  # optional-metadata TLVs (FULL mode)
-                    tlv = body[p]; p += 1
-                    ln, p = _read_lenenc(body, p)
-                    payload = body[p : p + ln]
-                    if p + ln > len(body):
-                        raise ValueError("truncated table-map optional metadata")
-                    p += ln
-                    if tlv == _OPTMETA_SIGNEDNESS:
-                        numeric = [
-                            i for i, t in enumerate(col_types)
-                            if t in _SIGNEDNESS_TYPES
-                        ]
-                        unsigned = [False] * ncols
-                        for j, i in enumerate(numeric):
-                            if payload[j // 8] & (0x80 >> (j % 8)):
-                                unsigned[i] = True
-                    elif tlv == _OPTMETA_COLUMN_NAME:
-                        col_names, q = [], 0
-                        for _ in range(ncols):
-                            nln, q = _read_lenenc(payload, q)
-                            col_names.append(payload[q : q + nln].decode())
-                            q += nln
-                    elif tlv in (_OPTMETA_DEFAULT_CHARSET,
-                                 _OPTMETA_COLUMN_CHARSET):
-                        # both index over the CHARACTER columns only — the
-                        # same slot-alignment contract as SIGNEDNESS over
-                        # the numeric ones
-                        char_cols = [
-                            i for i, (t, m) in enumerate(zip(col_types, metas))
-                            if _is_character_col(t, m)
-                        ]
-                        col_charsets = {}
-                        if tlv == _OPTMETA_COLUMN_CHARSET:
-                            q = 0
-                            for i in char_cols:
-                                c, q = _read_lenenc(payload, q)
-                                col_charsets[i] = c
-                        else:
-                            default, q = _read_lenenc(payload, 0)
-                            overrides: dict[int, int] = {}
-                            while q < len(payload):
-                                j, q = _read_lenenc(payload, q)
-                                c, q = _read_lenenc(payload, q)
-                                overrides[j] = c
-                            for j, i in enumerate(char_cols):
-                                col_charsets[i] = overrides.get(j, default)
-                    elif tlv == _OPTMETA_GEOMETRY_TYPE:
-                        # one lenenc per GEOMETRY column: its subtype
-                        # (0=GEOMETRY, 1=POINT, 2=LINESTRING, ...)
-                        geo_cols = [
-                            i for i, t in enumerate(col_types)
-                            if t == MYSQL_TYPE_GEOMETRY
-                        ]
-                        q = 0
-                        for i in geo_cols:
-                            g, q = _read_lenenc(payload, q)
-                            geometry_types[i] = g
-                    elif tlv == _OPTMETA_SIMPLE_PRIMARY_KEY:
-                        primary_key, q = [], 0
-                        while q < len(payload):
-                            i, q = _read_lenenc(payload, q)
-                            primary_key.append(i)
-                    elif tlv == _OPTMETA_PRIMARY_KEY_WITH_PREFIX:
-                        # (column index, prefix length) pairs — written
-                        # instead of SIMPLE_PRIMARY_KEY when any key
-                        # part indexes a column prefix (KEY(col(10)))
-                        primary_key, q = [], 0
-                        pk_prefix = {}
-                        while q < len(payload):
-                            i, q = _read_lenenc(payload, q)
-                            plen, q = _read_lenenc(payload, q)
-                            primary_key.append(i)
-                            if plen:
-                                pk_prefix[i] = plen
-                    elif tlv in (_OPTMETA_ENUM_AND_SET_DEFAULT_CHARSET,
-                                 _OPTMETA_ENUM_AND_SET_COLUMN_CHARSET):
-                        # same two layouts as the character-column
-                        # charset TLVs, indexed over ENUM/SET columns —
-                        # governs the LABEL text encoding in TLVs 5/6
-                        es_cols = [
-                            i for i, t in enumerate(col_types)
-                            if t == MYSQL_TYPE_STRING
-                            and _string_real_type(metas[i])
-                            in (MYSQL_TYPE_ENUM, MYSQL_TYPE_SET)
-                        ]
-                        enumset_charsets = {}
-                        if tlv == _OPTMETA_ENUM_AND_SET_COLUMN_CHARSET:
-                            q = 0
-                            for i in es_cols:
-                                c, q = _read_lenenc(payload, q)
-                                enumset_charsets[i] = c
-                        else:
-                            default, q = _read_lenenc(payload, 0)
-                            ovr: dict[int, int] = {}
-                            while q < len(payload):
-                                j, q = _read_lenenc(payload, q)
-                                c, q = _read_lenenc(payload, q)
-                                ovr[j] = c
-                            for j, i in enumerate(es_cols):
-                                enumset_charsets[i] = ovr.get(j, default)
-                    elif tlv in (_OPTMETA_ENUM_STR, _OPTMETA_SET_STR):
-                        want = (MYSQL_TYPE_ENUM if tlv == _OPTMETA_ENUM_STR
-                                else MYSQL_TYPE_SET)
-                        cols = [
-                            i for i, t in enumerate(col_types)
-                            if t == MYSQL_TYPE_STRING
-                            and _string_real_type(metas[i]) == want
-                        ]
-                        q = 0
-                        # labels stay RAW here: their charset TLV
-                        # (10/11) is numerically later, so decode is
-                        # deferred until the whole TLV walk is done
-                        out_labels = (raw_enum_labels
-                                      if want == MYSQL_TYPE_ENUM
-                                      else raw_set_labels)
-                        for i in cols:
-                            n_lab, q = _read_lenenc(payload, q)
-                            labs = []
-                            for _ in range(n_lab):
-                                lln, q = _read_lenenc(payload, q)
-                                labs.append(bytes(payload[q : q + lln]))
-                                q += lln
-                            out_labels[i] = tuple(labs)
-                    # unknown TLVs are skipped by their length
-                for raw, out in ((raw_enum_labels, enum_labels),
-                                 (raw_set_labels, set_labels)):
-                    for i, labs in raw.items():
-                        codec = (
-                            _collation_codec(enumset_charsets[i])
-                            if i in enumset_charsets else "utf-8"
-                        ) or "latin1"  # binary labels: lossless map
-                        out[i] = tuple(
-                            lab.decode(codec, errors="replace")
-                            for lab in labs
-                        )
-                tmaps[table_id] = _TableMap(
-                    db, table, col_types, metas,
-                    unsigned=unsigned, col_names=col_names,
-                    enum_labels=enum_labels, set_labels=set_labels,
-                    col_charsets=col_charsets, primary_key=primary_key,
-                    pk_prefix=pk_prefix, geometry_types=geometry_types,
-                )
-            elif etype in (WRITE_ROWS_EVENT, UPDATE_ROWS_EVENT,
-                           DELETE_ROWS_EVENT, PARTIAL_UPDATE_ROWS_EVENT):
-                table_id = int.from_bytes(body[0:6], "little")
-                tm = tmaps.get(table_id)
-                if tm is None:
-                    raise ValueError(f"rows event for unmapped table {table_id}")
-                p = 8  # skip flags
-                extra = struct.unpack_from("<H", body, p)[0]
-                p += extra  # the length includes its own 2 bytes
-                ncols, p = _read_lenenc(body, p)
-                nb = (ncols + 7) // 8
-                # present bitmaps: this decoder requires FULL row images —
-                # the reference's own hard invariant (binlog_row_image=
-                # FULL); a cleared bit (MINIMAL/NOBLOB server) would
-                # silently misalign every later value, so reject loudly
-                n_bitmaps = 1 if etype in (WRITE_ROWS_EVENT,
-                                           DELETE_ROWS_EVENT) else 2
-                for _ in range(n_bitmaps):
-                    bm = body[p : p + nb]
-                    p += nb
-                    for i in range(ncols):
-                        if not bm[i // 8] & (1 << (i % 8)):
-                            raise ValueError(
-                                "partial row images unsupported "
-                                "(binlog_row_image=FULL required)"
-                            )
-                rows = []
-                while p < len(body):
-                    img, p = _decode_image(body, p, tm.decoders)
-                    img = _apply_table_metadata(img, tm)
-                    if etype == UPDATE_ROWS_EVENT:
-                        after, p = _decode_image(body, p, tm.decoders)
-                        rows.append((img, _apply_table_metadata(after, tm)))
-                    elif etype == PARTIAL_UPDATE_ROWS_EVENT:
-                        # 8.0.3+ binlog_row_value_options=PARTIAL_JSON:
-                        # the after-image carries JSON DIFFS for flagged
-                        # columns — reconstruct the full after document
-                        # by applying them to the before image, so
-                        # downstream sees the same contract as a
-                        # full-image log
-                        after, p = _decode_partial_image(body, p, tm, img)
-                        rows.append((img, _apply_table_metadata(after, tm)))
-                    else:
-                        rows.append(img)
-                yield {
-                    "type": etype, "ts_sec": ts_sec, "log_pos": log_pos,
-                    "db": tm.db, "table": tm.table, "rows": rows,
-                    "col_names": tm.col_names, "primary_key": tm.primary_key,
-                    "rows_query": rows_query,
-                }
+                tmaps[int.from_bytes(body[0:6], "little")] = _table_map(body)
             # unknown types: skipped (size-based)
 
 
@@ -2331,9 +2432,28 @@ def _arrow_records(batch, cols=None):
     """pyarrow RecordBatch → list of row tuples with EXACT values:
     NULL stays None (hits the writer's null-bitmap path) and int64
     stays int (no float64 NaN seam, no 2^53 precision loss) — the
-    reason the encode paths are mapInArrow, not mapInPandas."""
+    reason the encode paths, like the decoders, are mapInArrow."""
     names = cols or _EV_RECORD_COLS
     return list(zip(*(batch.column(n).to_pylist() for n in names)))
+
+
+# the DDL types the decoders emit, as Arrow types
+_ARROW_TYPES = {"string": "string", "long": "int64", "int": "int32",
+                "double": "float64"}
+
+
+def _record_batch(cols: list[list], schema: str):
+    """One decoder's output: per-column value lists → an Arrow batch
+    typed from the declared DDL ``schema`` (so an int64 column holding
+    NULLs stays exact, never a float64 NaN column)."""
+    import pyarrow as pa
+
+    fields = [f.split() for f in schema.split(",")]
+    return pa.RecordBatch.from_arrays(
+        [pa.array(c, getattr(pa, _ARROW_TYPES[t])())
+         for c, (_, t) in zip(cols, fields)],
+        names=[n for n, _ in fields],
+    )
 
 
 def _encode_partition(batches) -> Iterator:
@@ -2392,20 +2512,18 @@ def _sid_to_uuid(sid: bytes) -> str:
 # fan_out(bytes_per_task) contract: capped at defaultParallelism, so a
 # corpus big enough to need the cluster still saturates it, and blob
 # grouping never reaches any declared projection (payload columns
-# only), so results are partitioning-invariant.
+# only), so results are partitioning-invariant. The size is the sum of
+# the scan's files, so a table stored as a directory of part files
+# sizes like the same table in one file; a frame with no file
+# provenance gets plain fan_out.
 _WIRE_BYTES_PER_TASK = 128 << 10
 
 
-def _wire_fan_out(df: DataFrame, spark: SparkSession, sf_dir: str,
-                  table: str) -> DataFrame:
-    import os as _os
-
-    from ..session import fan_out, table_path
+def _wire_fan_out(df: DataFrame, spark: SparkSession) -> DataFrame:
+    from ..session import fan_out, scan_bytes
 
     return fan_out(
-        df,
-        spark,
-        input_bytes=_os.path.getsize(table_path(sf_dir, table)),
+        df, spark, input_bytes=scan_bytes(df),
         bytes_per_task=_WIRE_BYTES_PER_TASK,
     )
 
@@ -2424,7 +2542,7 @@ def _scan(
 ) -> DataFrame:
     """The one ``binaryFile`` scan behind every file reader: one
     (path, data) row per file (a directory, a glob, or — batch only —
-    a list of files), decoded by the mapInPandas ``parse`` into
+    a list of files), decoded by the mapInArrow ``parse`` into
     ``schema``. ``stream`` tails the directory instead (the seen-files
     log in the query checkpoint makes each rotated file decode exactly
     once); ``max_files_per_trigger`` bounds each micro-batch."""
@@ -2434,27 +2552,56 @@ def _scan(
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
     blobs = reader.load(path).select("path", F.col("content").alias("data"))
-    return blobs.mapInPandas(parse, schema)
+    return blobs.mapInArrow(parse, schema)
 
 
-def _walk(pdf) -> Iterator[tuple]:
-    """The one event walk behind every decoder: for each blob of a
-    mapInPandas batch, yields (fname, gtid, row_seq, event) per event.
-    fname is the file's basename (None when the batch has no `path`
-    column), gtid the enclosing transaction's (gtid_uuid, gtid_seq),
-    row_seq the in-file ordinal of the event's first row image. GTID
-    events only move the coordinates. An INCIDENT event raises on
-    every channel: the server itself recorded that events MAY be
-    missing there, and continuing silently would accept a gap (the
-    corruption policy)."""
+def _trim_import_caches() -> None:
+    """Drop the sub-package zipimporters from `sys.path_importer_cache`.
+    PySpark's worker calls `importlib.invalidate_caches()` before every
+    task, and on Python 3.11 that makes each zipimporter re-read its
+    whole archive directory — once for the archive's root entry and
+    again for every sub-package entry (`pyspark.zip/pyspark/sql`, ...)
+    a past import left behind. zipimport keeps each archive's
+    directory in `_zip_directory_cache` and `PathFinder` rebuilds a
+    dropped entry from it on demand, so only the root entries stay."""
+    import sys
+    import zipimport
+
+    cache = sys.path_importer_cache
+    for key, finder in list(cache.items()):
+        if isinstance(finder, zipimport.zipimporter) and finder.prefix:
+            del cache[key]
+
+
+def _files(batch) -> Iterator[tuple]:
+    """(fname, blob) per row of a mapInArrow batch of binlog files:
+    fname is the file's basename, None when the batch has no `path`
+    column. Trims the worker's import caches first, so the next task
+    on this worker starts cheaper."""
     import os as _os
 
-    paths = pdf["path"] if "path" in pdf.columns else [None] * len(pdf)
-    for path, blob in zip(paths, pdf["data"]):
-        fname = _os.path.basename(path) if path is not None else None
+    _trim_import_caches()
+    blobs = batch.column("data").to_pylist()
+    if "path" not in batch.schema.names:
+        return zip([None] * len(blobs), blobs)
+    return zip((_os.path.basename(p)
+                for p in batch.column("path").to_pylist()), blobs)
+
+
+def _walk(batch) -> Iterator[tuple]:
+    """The one event walk behind every decoder: for each blob of a
+    mapInArrow batch, yields (fname, gtid, row_seq, event) per event.
+    fname is the file's basename (None without a `path` column),
+    gtid the enclosing transaction's (gtid_uuid, gtid_seq), row_seq
+    the in-file ordinal of the event's first row image. GTID events
+    only move the coordinates. An INCIDENT event raises on every
+    channel: the server itself recorded that events MAY be missing
+    there, and continuing silently would accept a gap (the corruption
+    policy)."""
+    for fname, blob in _files(batch):
         gtid: tuple = (None, None)
         row_seq = 0
-        for ev in parse_binlog_file(bytes(blob)):
+        for ev in parse_binlog_file(blob):
             etype = ev["type"]
             if etype == GTID_EVENT:
                 gtid = (_sid_to_uuid(ev["sid"]), ev["gno"])
@@ -2471,39 +2618,63 @@ def _walk(pdf) -> Iterator[tuple]:
 
 
 def _parse_partition(batches) -> Iterator:
-    """mapInPandas: binlog blobs → change rows. UPDATE emits the after
+    """mapInArrow: binlog blobs → change rows. UPDATE emits the after
     image (the applier's view) plus the wire BEFORE image's payload
     columns (value_before_wire/props_before_wire); DELETE the deleted
     image. Every row carries its enclosing transaction's GTID
     coordinates (gtid_uuid, gtid_seq) — the reference's primary
     checkpoint mode — and, when the batch carries a `path` column (the
     binaryFile readers), its (source_file, log_pos) file/pos pair
-    (`BinaryLogSupplier.java:206-239` resumes from either)."""
-    import pandas as pd
-
-    for pdf in batches:
-        with_pos = "path" in pdf.columns
-        out: list[tuple] = []
-        for fname, gtid, row_seq, ev in _walk(pdf):
+    (`BinaryLogSupplier.java:206-239` resumes from either). Values
+    append straight into one list per output column."""
+    for batch in batches:
+        with_pos = "path" in batch.schema.names
+        schema = (BINLOG_ROWS_POS_SCHEMA if with_pos
+                  else BINLOG_ROWS_GTID_SCHEMA)
+        cols: list[list] = [[] for _ in schema.split(",")]
+        ops, image_cols = cols[0], cols[1:7]
+        uuids, seqs, value_before, props_before = cols[7:11]
+        for fname, gtid, row_seq, ev in _walk(batch):
             op = _EVENT_TO_OP.get(ev["type"])
-            if op is None:
+            rows = ev.get("rows")
+            if op is None or not rows:
                 continue
-            for k, row in enumerate(ev["rows"], row_seq):
-                if op == "UPDATE":
-                    before, img = row
-                    wire_before = (before[4], before[5])
-                else:
-                    img, wire_before = row, (None, None)
-                rec = (op, *img, *gtid, *wire_before)
-                if with_pos:
-                    rec += (fname, ev["log_pos"], k)
-                out.append(rec)
-        cols = ["op", "event_id", "ts_us", "user_id", "event_type",
-                "value", "props", "gtid_uuid", "gtid_seq",
-                "value_before_wire", "props_before_wire"]
-        if with_pos:
-            cols += ["source_file", "log_pos", "row_seq"]
-        yield pd.DataFrame(out, columns=cols)
+            n = len(rows)
+            if op == "UPDATE":
+                images = [after for _, after in rows]
+                value_before.extend([before[4] for before, _ in rows])
+                props_before.extend([before[5] for before, _ in rows])
+            else:
+                images = rows
+                value_before.extend([None] * n)
+                props_before.extend([None] * n)
+            if len(images[0]) != len(image_cols):
+                raise ValueError(
+                    f"{ev['table']}: a {len(images[0])}-column row image"
+                    f" where the events table has {len(image_cols)}"
+                )
+            for col, values in zip(image_cols, zip(*images)):
+                col.extend(values)
+            ops.extend([op] * n)
+            uuids.extend([gtid[0]] * n)
+            seqs.extend([gtid[1]] * n)
+            if with_pos:
+                cols[11].extend([fname] * n)
+                cols[12].extend([ev["log_pos"]] * n)
+                cols[13].extend(range(row_seq, row_seq + n))
+        yield _record_batch(cols, schema)
+
+
+def _image_columns(batches, etype: int, schema: str) -> Iterator:
+    """mapInArrow body of the single-table wire ops: the row images of
+    every ``etype`` event, column-wise, typed by ``schema``."""
+    for batch in batches:
+        cols: list[list] = [[] for _ in schema.split(",")]
+        for _, _, _, ev in _walk(batch):
+            if ev["type"] == etype:
+                for col, values in zip(cols, zip(*ev["rows"])):
+                    col.extend(values)
+        yield _record_batch(cols, schema)
 
 
 def _read_head_prev_gtids(stream) -> Optional[dict]:
@@ -2606,24 +2777,22 @@ def _start_file(
         import json as _json
 
         def read_heads(batches):
-            import pandas as pd
-
             fs2 = _fs(path)[0]
-            for pdf in batches:
+            for batch in batches:
+                names = batch.column("name").to_pylist()
                 out = []
-                for name in pdf["name"]:
+                for name in names:
                     with fs2.open_input_stream(f"{root}/{name}") as st:
                         head = _read_head_prev_gtids(st)
                     out.append(
-                        (name, _json.dumps(head) if head is not None
-                         else None)
+                        _json.dumps(head) if head is not None else None
                     )
-                yield pd.DataFrame(out, columns=["name", "head"])
+                yield _record_batch([names, out], "name string, head string")
 
         names_df = spark.createDataFrame(
             [(n,) for n in names], "name string"
         ).repartition(min(len(names), 256))
-        for r in names_df.mapInPandas(
+        for r in names_df.mapInArrow(
             read_heads, "name string, head string"
         ).collect():
             h = _json.loads(r["head"]) if r["head"] is not None else None
@@ -2890,7 +3059,7 @@ def _wire_rowkey(img: list, pk: list) -> str:
 
 
 def _parse_records_partition(batches) -> Iterator:
-    """mapInPandas: binlog blobs → GENERIC schema-on-read change
+    """mapInArrow: binlog blobs → GENERIC schema-on-read change
     records for ANY table: one JSON object per row keyed by the wire
     column names (binlog_row_metadata=FULL) or positional c0..cN when
     the file has no name metadata — the `RawEvent.java:13-31`
@@ -2898,11 +3067,9 @@ def _parse_records_partition(batches) -> Iterator:
     carry the full wire before-image object."""
     import json as _json
 
-    import pandas as pd
-
-    for pdf in batches:
-        out: list[tuple] = []
-        for fname, gtid, row_seq, ev in _walk(pdf):
+    for batch in batches:
+        out: list[list] = [[] for _ in BINLOG_RECORDS_SCHEMA.split(",")]
+        for fname, gtid, row_seq, ev in _walk(batch):
             op = _EVENT_TO_OP.get(ev["type"])
             if op is None:
                 continue
@@ -2925,19 +3092,15 @@ def _parse_records_partition(batches) -> Iterator:
                 # (HBaseRowKeyMapper.java:39-42); no PK metadata → NULL
                 # (the consumer falls back to its registry, as the
                 # reference does)
-                out.append((
+                for col, v in zip(out, (
                     ev["db"], ev["table"], op, rec(img),
                     rec(before) if before is not None else None,
                     _wire_rowkey(img, pk) if pk else None,
                     ev["rows_query"],  # ROWS_QUERY statement text
                     *gtid, fname, ev["log_pos"], k,
-                ))
-        yield pd.DataFrame(
-            out,
-            columns=["db", "table_name", "op", "record", "before",
-                     "rowkey", "query", "gtid_uuid", "gtid_seq",
-                     "source_file", "log_pos", "row_seq"],
-        )
+                )):
+                    col.append(v)
+        yield _record_batch(out, BINLOG_RECORDS_SCHEMA)
 
 
 def read_binlog_records(spark: SparkSession, path: str) -> DataFrame:
@@ -2977,25 +3140,21 @@ BINLOG_CHAIN_SCHEMA = (
 
 
 def _chain_summary_partition(batches) -> Iterator:
-    """mapInPandas: per-file chain coordinates — the ROTATE tail's
+    """mapInArrow: per-file chain coordinates — the ROTATE tail's
     next-file pointer, the PREVIOUS_GTIDS head set, and the first/last
     GTID seen — one output row per FILE (full decode walk; an audit is
     a scan by nature)."""
     import json as _json
-    import os as _os
 
-    import pandas as pd
-
-    for pdf in batches:
-        out = []
-        for i, blob in enumerate(pdf["data"]):
-            name = _os.path.basename(pdf["path"].iloc[i])
+    for batch in batches:
+        cols: list[list] = [[] for _ in BINLOG_CHAIN_SCHEMA.split(",")]
+        for name, blob in _files(batch):
             next_file = None
             prev = None
             first_g = last_g = None
             n_rows = 0
             n_incidents = 0
-            for ev in parse_binlog_file(bytes(blob)):
+            for ev in parse_binlog_file(blob):
                 t = ev["type"]
                 if t == PREVIOUS_GTIDS_EVENT:
                     prev = _json.dumps(ev["gtids"], sort_keys=True)
@@ -3010,17 +3169,12 @@ def _chain_summary_partition(batches) -> Iterator:
                     # it (unlike the readers, which refuse to replay
                     # past a gap signal)
                     n_incidents += 1
-                elif t in (WRITE_ROWS_EVENT, UPDATE_ROWS_EVENT,
-                           DELETE_ROWS_EVENT, PARTIAL_UPDATE_ROWS_EVENT):
+                elif t in _ROWS_EVENTS:
                     n_rows += len(ev["rows"])
-            out.append((name, next_file, prev, first_g, last_g, n_rows,
-                        n_incidents))
-        yield pd.DataFrame(
-            out,
-            columns=["source_file", "next_file", "prev_gtids",
-                     "first_gtid", "last_gtid", "n_row_events",
-                     "n_incidents"],
-        )
+            for col, v in zip(cols, (name, next_file, prev, first_g,
+                                     last_g, n_rows, n_incidents)):
+                col.append(v)
+        yield _record_batch(cols, BINLOG_CHAIN_SCHEMA)
 
 
 def audit_binlog_chain(spark: SparkSession, path: str) -> DataFrame:
@@ -3138,9 +3292,9 @@ def binlog_roundtrip_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (output is grouping-independent — the oracle projection carries no
     # file coordinates). Width from source bytes, not flat parallelism
     # (see _wire_fan_out).
-    ev = _wire_fan_out(ev, spark, sf_dir, "events")
+    ev = _wire_fan_out(ev, spark)
     blobs = ev.mapInArrow(_encode_partition, "data binary")
-    parsed = blobs.mapInPandas(_parse_partition, BINLOG_ROWS_GTID_SCHEMA)
+    parsed = blobs.mapInArrow(_parse_partition, BINLOG_ROWS_GTID_SCHEMA)
     # the oracle is the payload projection; the GTID/before-image
     # coordinates are covered by source_binlog_gtid_resume
     return parsed.select(
@@ -3199,7 +3353,7 @@ def binlog_gtid_resume_query(spark: SparkSession, sf_dir: str) -> DataFrame:
         "txn_id", "event_id"
     )
     blobs = ev.mapInArrow(_encode_partition_txn, "data binary")
-    parsed = blobs.mapInPandas(_parse_partition, BINLOG_ROWS_GTID_SCHEMA)
+    parsed = blobs.mapInArrow(_parse_partition, BINLOG_ROWS_GTID_SCHEMA)
     resumed = resume_after_gtid(
         parsed, f"{_SID_UUID}:1-{_GTID_RESUME_SKIP}"
     )
@@ -3243,6 +3397,7 @@ _ORD_METAS = [
     set_meta(len(_FLAG_LABELS)),
 ]
 _ORD_COLS = ["o_orderkey", "status_idx", "prio_idx", "flags_mask"]
+_ORD_SCHEMA = "o_orderkey long, status_idx int, prio_idx int, flags_mask int"
 
 
 def _encode_orders_partition(batches) -> Iterator:
@@ -3268,18 +3423,11 @@ def _encode_orders_partition(batches) -> Iterator:
 
 
 def _parse_orders_partition(batches) -> Iterator:
-    """mapInPandas: the ENUM/SET blobs back to (o_orderkey,
+    """mapInArrow: the ENUM/SET blobs back to (o_orderkey,
     status_idx, prio_idx, flags_mask) — the codec transports the raw
     index/mask; label mapping happens downstream (the reference's
     post-client split)."""
-    import pandas as pd
-
-    for pdf in batches:
-        out: list[tuple] = []
-        for _, _, _, ev in _walk(pdf):
-            if ev["type"] == WRITE_ROWS_EVENT:
-                out.extend(tuple(r) for r in ev["rows"])
-        yield pd.DataFrame(out, columns=_ORD_COLS)
+    yield from _image_columns(batches, WRITE_ROWS_EVENT, _ORD_SCHEMA)
 
 
 def binlog_enum_roundtrip_query(
@@ -3306,12 +3454,9 @@ def binlog_enum_roundtrip_query(
         F.substring("o_orderpriority", 1, 1).cast("int").alias("prio_idx"),
         (F.col("o_orderkey") % 8).cast("int").alias("flags_mask"),
     )
-    orders = _wire_fan_out(orders, spark, sf_dir, "orders")
+    orders = _wire_fan_out(orders, spark)
     blobs = orders.mapInArrow(_encode_orders_partition, "data binary")
-    parsed = blobs.mapInPandas(
-        _parse_orders_partition,
-        "o_orderkey long, status_idx int, prio_idx int, flags_mask int",
-    )
+    parsed = blobs.mapInArrow(_parse_orders_partition, _ORD_SCHEMA)
     return parsed.select(
         "o_orderkey",
         enum_label(F.col("status_idx"), _STATUS_LABELS).alias(
@@ -3403,13 +3548,11 @@ def binlog_charset_rowkey_query(
     cust = read_table(spark, sf_dir, "customer").select(
         "c_custkey", "c_mktsegment", "c_name"
     )
-    cust = _wire_fan_out(cust, spark, sf_dir, "customer")
+    cust = _wire_fan_out(cust, spark)
     blobs = cust.mapInArrow(
         _encode_customer_charset_partition, "data binary"
     ).select(F.lit("binlog.000001").alias("path"), "data")
-    recs = blobs.mapInPandas(
-        _parse_records_partition, BINLOG_RECORDS_SCHEMA
-    )
+    recs = blobs.mapInArrow(_parse_records_partition, BINLOG_RECORDS_SCHEMA)
     return recs.select(
         F.get_json_object("record", "$.c_custkey")
         .cast("long").alias("c_custkey"),
@@ -3492,24 +3635,23 @@ def binlog_partial_json_query(
     ev = read_table(spark, sf_dir, "events").select(
         "event_id", "user_id", "event_type"
     )
-    ev = _wire_fan_out(ev, spark, sf_dir, "events")
+    ev = _wire_fan_out(ev, spark)
     blobs = ev.mapInArrow(_encode_partial_json_partition, "data binary")
 
+    schema = "event_id long, before_doc string, after_doc string"
+
     def parse(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            out = []
-            for _, _, _, e in _walk(pdf):
+        for batch in batches:
+            cols: list[list] = [[], [], []]
+            for _, _, _, e in _walk(batch):
                 if e["type"] == PARTIAL_UPDATE_ROWS_EVENT:
-                    out.extend((a[0], b[1], a[1]) for b, a in e["rows"])
-            yield pd.DataFrame(
-                out, columns=["event_id", "before_doc", "after_doc"]
-            )
+                    for b, a in e["rows"]:
+                        cols[0].append(a[0])
+                        cols[1].append(b[1])
+                        cols[2].append(a[1])
+            yield _record_batch(cols, schema)
 
-    return blobs.mapInPandas(
-        parse, "event_id long, before_doc string, after_doc string"
-    )
+    return blobs.mapInArrow(parse, schema)
 
 
 BINLOG_PARTIAL_JSON_SQL = """
@@ -3589,23 +3731,15 @@ def binlog_legacy_temporals_query(
     ev = read_table(spark, sf_dir, "events").select(
         "event_id", F.expr("ts div 1000000000").alias("ts_sec")
     )
-    ev = _wire_fan_out(ev, spark, sf_dir, "events")
+    ev = _wire_fan_out(ev, spark)
     blobs = ev.mapInArrow(_encode_legacy_partition, "data binary")
 
-    def parse(batches):
-        import pandas as pd
+    from functools import partial
 
-        for pdf in batches:
-            out: list[tuple] = []
-            for _, _, _, e in _walk(pdf):
-                if e["type"] == WRITE_ROWS_EVENT:
-                    out.extend(tuple(r) for r in e["rows"])
-            yield pd.DataFrame(
-                out, columns=["event_id", "ts_us", "tod", "dt"]
-            )
-
-    return blobs.mapInPandas(
-        parse, "event_id long, ts_us long, tod string, dt string"
+    schema = "event_id long, ts_us long, tod string, dt string"
+    return blobs.mapInArrow(
+        partial(_image_columns, etype=WRITE_ROWS_EVENT, schema=schema),
+        schema,
     )
 
 
@@ -3634,29 +3768,24 @@ BINLOG_DDL_SCHEMA = (
 
 
 def _parse_ddl_partition(batches) -> Iterator:
-    """mapInPandas: binlog blobs → the DDL statement stream. A real
+    """mapInArrow: binlog blobs → the DDL statement stream. A real
     server logs each DDL as its own auto-committed transaction (GTID +
     QUERY carrying the statement text with its db context) — exactly
     what `ActiveSchemaManager` (ActiveSchemaManager.java:202-288)
     replays against the active-schema copy. Txn-boundary QUERY events
     (BEGIN/COMMIT/ROLLBACK) are filtered at the source; everything
     else is surfaced for the classifier/registry downstream."""
-    import pandas as pd
-
-    for pdf in batches:
-        out: list[tuple] = []
-        for fname, gtid, _, ev in _walk(pdf):
+    for batch in batches:
+        cols: list[list] = [[] for _ in BINLOG_DDL_SCHEMA.split(",")]
+        for fname, gtid, _, ev in _walk(batch):
             if ev["type"] != QUERY_EVENT or (
                 ev["sql"].rstrip().upper() in ("BEGIN", "COMMIT", "ROLLBACK")
             ):
                 continue
-            out.append((fname, ev["log_pos"], *gtid, ev["ts_sec"],
-                        ev["db"], ev["sql"]))
-        yield pd.DataFrame(
-            out,
-            columns=["source_file", "log_pos", "gtid_uuid", "gtid_seq",
-                     "ts_sec", "db", "sql"],
-        )
+            for col, v in zip(cols, (fname, ev["log_pos"], *gtid,
+                                     ev["ts_sec"], ev["db"], ev["sql"])):
+                col.append(v)
+        yield _record_batch(cols, BINLOG_DDL_SCHEMA)
 
 
 def read_binlog_ddl(spark: SparkSession, path: str) -> DataFrame:
@@ -3755,7 +3884,7 @@ def binlog_ddl_replay_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     blobs = stmts.repartitionByRange(4, "version").sortWithinPartitions(
         "version"
     ).mapInArrow(_encode_ddl_partition, "data binary")
-    decoded = blobs.mapInPandas(_parse_ddl_partition, BINLOG_DDL_SCHEMA)
+    decoded = blobs.mapInArrow(_parse_ddl_partition, BINLOG_DDL_SCHEMA)
     ddls = sorted(
         ((r["gtid_seq"], r["sql"]) for r in decoded.collect())
     )  # tiny by nature: one row per DDL statement

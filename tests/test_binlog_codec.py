@@ -975,11 +975,48 @@ def _is_utf8(b: bytes) -> bool:
         return False
 
 
+def _closure_image(buf: bytes, pos: int, decoders: list):
+    """The reference row-image walk: the null bitmap, then one
+    `_compile_decoders` closure call per non-NULL column."""
+    nb = (len(decoders) + 7) // 8
+    nullbits = buf[pos : pos + nb]
+    pos += nb
+    row = []
+    for i, dec in enumerate(decoders):
+        if nullbits[i >> 3] & (1 << (i & 7)):
+            row.append(None)
+        else:
+            v, pos = dec(buf, pos)
+            row.append(v)
+    return row, pos
+
+
+def _as_collated(v, coll):
+    """What a character column written from ``v`` decodes to under
+    collation ``coll``: the writer stores str as utf-8; binary gives
+    the raw bytes back, a text codec decodes them (raw on failure)."""
+    raw = v.encode() if isinstance(v, str) else v
+    codec = B._collation_codec(coll)
+    try:
+        return raw if codec is None else raw.decode(codec)
+    except UnicodeDecodeError:
+        return raw
+
+
 @settings(max_examples=30, deadline=None)
 @given(st.data())
 def test_random_schema_rows_roundtrip(data):
-    keys = data.draw(st.lists(
-        st.sampled_from(sorted(_COLSPECS)), min_size=1, max_size=12))
+    """Any mix of types, NULLs and (optionally) charset TLVs
+    roundtrips through a rows event, and the generated image decoder
+    returns exactly what the per-column closures return — over narrow
+    tables and over tables wider than 8 columns (a multi-byte NULL
+    bitmap)."""
+    keys = data.draw(st.one_of(
+        st.lists(st.sampled_from(sorted(_COLSPECS)), min_size=1,
+                 max_size=8),
+        st.lists(st.sampled_from(sorted(_COLSPECS)), min_size=9,
+                 max_size=16),
+    ))
     types = [_COLSPECS[k][0] for k in keys]
     metas = [_COLSPECS[k][1] for k in keys]
     n_rows = data.draw(st.integers(min_value=1, max_value=5))
@@ -992,12 +1029,36 @@ def test_random_schema_rows_roundtrip(data):
             else:
                 row.append(data.draw(_COLSPECS[k][2]))
         rows.append(row)
+    charsets = None
+    if data.draw(st.booleans()):
+        # latin1 / binary / utf8mb4 per character column
+        charsets = {
+            i: data.draw(st.sampled_from([8, 63, 255]))
+            for i, (t, m) in enumerate(zip(types, metas))
+            if B._is_character_col(t, m)
+        }
     w = B.BinlogWriter()
-    w.table_map(5, "d", "t", types, metas)
+    w.table_map(5, "d", "t", types, metas, charsets=charsets)
     w.rows(B.WRITE_ROWS_EVENT, 5, types, metas,
            [list(r) for r in rows])
     evs = list(B.parse_binlog_file(w.getvalue()))
-    assert evs[-1]["rows"] == rows
+    want = [
+        [_as_collated(v, charsets[i])
+         if charsets and i in charsets and v is not None else v
+         for i, v in enumerate(r)]
+        for r in rows
+    ]
+    assert evs[-1]["rows"] == want
+    # generated decoder == closures, value for value and byte for byte
+    tm = B._TableMap("d", "t", types, metas, col_charsets=charsets)
+    encoders = B.BinlogWriter._compile_encoders(types, metas)
+    buf = b"".join(B.BinlogWriter._image(r, encoders) for r in rows)
+    pos_gen = pos_ref = 0
+    for _ in rows:
+        got, pos_gen = tm.image(buf, pos_gen)
+        ref, pos_ref = _closure_image(buf, pos_ref, tm.decoders)
+        assert got == ref and pos_gen == pos_ref
+    assert pos_gen == len(buf)
 
 
 # legacy TIME/DATETIME take component tuples on the encode side and
@@ -1215,7 +1276,7 @@ def test_update_wire_before_image_surfaced(spark, tmp_path):
 
 
 def test_encode_nulls_and_big_ints_exact(spark):
-    """The encode seam is mapInArrow, not pandas: NULL longs hit the
+    """Both seams are mapInArrow, not pandas: NULL longs hit the
     writer's null-bitmap path (not NaN), and int64 above 2^53 keeps
     full precision through the roundtrip."""
     from replicator_spark.sources.binlog import (
@@ -1231,12 +1292,74 @@ def test_encode_nulls_and_big_ints_exact(spark):
         " event_type string, value double, props string",
     )
     blobs = src.mapInArrow(_encode_partition, "data binary")
-    got = blobs.mapInPandas(
+    got = blobs.mapInArrow(
         _parse_partition, BINLOG_ROWS_GTID_SCHEMA
     ).collect()
     assert len(got) == 1
     assert got[0]["event_id"] == big
     assert got[0]["user_id"] is None and got[0]["value"] is None
+
+
+def test_big_int_beside_null_decodes_exact(spark, tmp_path):
+    """A BIGINT above 2^53 in a column that also holds a NULL comes
+    back exact through the file reader: the decoder's columns are
+    typed int64 from the output schema, not a float64 column that the
+    NULL would force."""
+    from replicator_spark.sources.binlog import read_binlog_files
+
+    big = 1152921504606846983  # 2^60 + 7: not a float64
+    (tmp_path / "binlog.000001").write_bytes(B.encode_binlog_file([
+        ("INSERT", 1, 1_000_000, big, "signup", 1.0, "{}"),
+        ("INSERT", 2, 2_000_000, None, "signup", 2.0, "{}"),
+    ]))
+    got = {
+        r["event_id"]: r["user_id"]
+        for r in read_binlog_files(spark, str(tmp_path)).collect()
+    }
+    assert got == {1: big, 2: None}
+
+
+def test_trim_import_caches_drops_only_subpackage_zipimporters(tmp_path):
+    """The worker-side trim leaves one zipimporter per archive: the
+    sub-package entries go, the root entry stays, and a submodule not
+    imported yet still imports from the archive afterwards."""
+    import importlib
+    import sys
+    import zipfile
+    import zipimport
+
+    from replicator_spark.sources.binlog import _trim_import_caches
+
+    archive = str(tmp_path / "trimpkg.zip")
+    with zipfile.ZipFile(archive, "w") as z:
+        z.writestr("trimpkg/__init__.py", "")
+        z.writestr("trimpkg/sub/__init__.py", "")
+        z.writestr("trimpkg/sub/a.py", "A = 1\n")
+        z.writestr("trimpkg/sub/b.py", "B = 2\n")
+
+    def importers():
+        return [
+            f for f in sys.path_importer_cache.values()
+            if isinstance(f, zipimport.zipimporter)
+            and f.archive == archive
+        ]
+
+    sys.path.insert(0, archive)
+    try:
+        importlib.import_module("trimpkg.sub.a")
+        assert {f.prefix for f in importers()} >= {"", "trimpkg/sub/"}
+        _trim_import_caches()
+        assert [f.prefix for f in importers()] == [""]
+        assert sys.path_importer_cache[archive].prefix == ""
+        importlib.invalidate_caches()  # what the worker does per task
+        assert importlib.import_module("trimpkg.sub.b").B == 2
+    finally:
+        sys.path.remove(archive)
+        for name in [m for m in sys.modules if m.startswith("trimpkg")]:
+            del sys.modules[name]
+        for key in [k for k in sys.path_importer_cache
+                    if k.startswith(archive)]:
+            del sys.path_importer_cache[key]
 
 
 # ---------------------------------------------------------------------------

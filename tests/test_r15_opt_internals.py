@@ -71,7 +71,7 @@ def test_wire_fan_out_width_derives_from_source_size(spark, sf_dir):
     )
 
     ev = read_table(spark, sf_dir, "events").select("event_id")
-    out = _wire_fan_out(ev, spark, sf_dir, "events")
+    out = _wire_fan_out(ev, spark)
     size = os.path.getsize(table_path(sf_dir, "events"))
     want = max(
         1,
@@ -81,6 +81,43 @@ def test_wire_fan_out_width_derives_from_source_size(spark, sf_dir):
         ),
     )
     assert out.rdd.getNumPartitions() == want
+
+
+def test_wire_fan_out_sizes_a_part_file_directory_like_one_file(
+    spark, tmp_path
+):
+    """An events.parquet DIRECTORY of part files gets the width of the
+    same rows in one file: the width comes from the scan's files, not
+    from the directory inode's size (which gave width 1)."""
+    import random
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from replicator_spark.sources.binlog import (
+        _WIRE_BYTES_PER_TASK,
+        _wire_fan_out,
+    )
+
+    rng = random.Random(7)  # incompressible: ~2.5 tasks of bytes
+    t = pa.table({"b": [rng.randbytes(8000) for _ in range(40)]})
+    one = tmp_path / "one" / "events.parquet"
+    one.parent.mkdir()
+    pq.write_table(t, one)
+    parts = tmp_path / "parts" / "events.parquet"
+    parts.mkdir(parents=True)
+    pq.write_table(t.slice(0, 20), parts / "part-00000.parquet")
+    pq.write_table(t.slice(20), parts / "part-00001.parquet")
+
+    def width(path):
+        return _wire_fan_out(
+            spark.read.parquet(str(path)), spark
+        ).rdd.getNumPartitions()
+
+    assert 2 * _WIRE_BYTES_PER_TASK < one.stat().st_size
+    assert one.stat().st_size < 3 * _WIRE_BYTES_PER_TASK - 4096
+    assert spark.sparkContext.defaultParallelism >= 3
+    assert width(parts) == width(one) == 3
 
 
 # ------------------------- vectorized serving passes (bit-exactness)

@@ -1,13 +1,14 @@
 """Benchmark harness: runs the headline queries at $SPARK_GRAFT_SF_DIR
 (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS].
 
-Output contract (round-8 fix for the driver's ~2000-char tail
-capture): the FULL record {"metric": ..., "value": total_sec, "unit":
-"sec", "queries": {name: sec}, "sf": ...} is written to
-BENCH_LOCAL.json and printed on its own line; the FINAL stdout line is
-a compact (<500 char) summary {"metric": "headline_total", "value":
-total_sec, "unit": "sec", "sf": ..., "n_queries": ...,
-"stream_overhead": ...} that truncation can never reach.
+Output contract (a caller parses only the last stdout line, from a
+~2000-char tail capture): the FULL record {"metric": ..., "value":
+total_sec, "unit": "sec", "queries": {name: sec}, "sf": ...} is
+written to BENCH_LOCAL.json and printed on its own line; the FINAL
+stdout line (``final_line``, at most FINAL_LINE_BUDGET chars) is
+{"metric": "headline_total", "value": total_sec, "unit": "sec", "sf":
+..., "n_queries": ..., "stream_overhead": ..., "queries": {the slowest
+queries that fit}, "n_omitted": ..., "omitted_sum": ...}.
 
 Env knobs: SPARK_GRAFT_BENCH_REPS (best-of-N, default 3),
 SPARK_GRAFT_BENCH_ORDER=heavy_first (run the iterative-trainer block
@@ -195,6 +196,35 @@ HEAVY_BLOCK = [
 ]
 
 
+FINAL_LINE_BUDGET = 1900  # callers keep only a ~2000-char stdout tail
+
+
+def final_line(summary: dict, timings: dict) -> str:
+    """The one line a caller parses: ``summary`` plus the largest
+    time-ranked prefix of the per-query map that keeps the line within
+    ``FINAL_LINE_BUDGET`` chars (122 query names alone exceed it), with the rest
+    accounted as ``n_omitted`` queries taking ``omitted_sum`` seconds.
+    The full map is in BENCH_LOCAL.json."""
+    ranked = sorted(timings.items(), key=lambda kv: (-kv[1], kv[0]))
+
+    def line(k: int) -> str:
+        rest = ranked[k:]
+        return json.dumps(
+            {
+                **summary,
+                "queries": {n: round(sec, 2) for n, sec in ranked[:k]},
+                "n_omitted": len(rest),
+                "omitted_sum": round(sum(sec for _, sec in rest), 2),
+            },
+            separators=(",", ":"),
+        )
+
+    k = len(ranked)
+    while k and len(line(k)) > FINAL_LINE_BUDGET:
+        k -= 1
+    return line(k)
+
+
 def main() -> None:
     global HEADLINE
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -304,12 +334,6 @@ def main() -> None:
     # the non-standard token `Infinity`, so only report a real sample.
     if math.isfinite(stream_overhead):
         out["stream_overhead"] = round(stream_overhead, 3)
-    # The driver captures only the ~2000-char TAIL of stdout; at 83
-    # headliners the full per-query map exceeds that and round 7 came
-    # back `parsed: null` (no official headline). So: write the full
-    # record to BENCH_LOCAL.json and print it on its OWN earlier line
-    # for humans, then emit a compact final line (<500 chars) that the
-    # tail capture can never truncate.
     with open(
         os.path.join(os.path.dirname(os.path.abspath(__file__)),
                      "BENCH_LOCAL.json"), "w"
@@ -317,54 +341,13 @@ def main() -> None:
         json.dump(out, fh)
         fh.write("\n")
     print(json.dumps(out))
-    compact = {
-        "metric": "headline_total",
-        "value": total,
-        "unit": "sec",
-        "sf": out["sf"],
-        "n_queries": len(timings),
+    summary = {
+        k: out[k] for k in ("metric", "value", "unit", "sf")
     }
-    if math.isfinite(stream_overhead):
-        compact["stream_overhead"] = round(stream_overhead, 3)
-    final_line = json.dumps(compact, separators=(",", ":"))
-    # Driver per-query visibility (round-15): the driver keeps only the
-    # LAST ~2000 chars of stdout, and the full 122-entry map is ~3.1 KB
-    # — the query NAMES alone exceed the window, so a complete map can
-    # never fit a parseable line inside the capture. Best achievable:
-    # one self-contained JSON line right before the final line, carrying
-    # the largest time-ranked prefix of the per-query map that fits a
-    # conservative window budget, with the omitted remainder accounted
-    # explicitly (n_omitted / omitted_sum — no silent truncation). The
-    # FULL map still goes to BENCH_LOCAL.json and the earlier full line.
-    # Additions only: the timed region and the final line are unchanged.
-    tail_budget = 1900  # driver capture is 2000; leave newline margin
-    ranked = sorted(timings.items(), key=lambda kv: (-kv[1], kv[0]))
-    part = {
-        "metric": "headline_total",
-        "value": total,
-        "unit": "sec",
-        "sf": out["sf"],
-        "n_queries": len(timings),
-        "queries": {},
-        "n_omitted": len(ranked),
-        "omitted_sum": total,
-    }
-    budget = tail_budget - len(final_line) - 1
-    for name, sec in ranked:
-        part["queries"][name] = round(sec, 2)
-        part["n_omitted"] = len(ranked) - len(part["queries"])
-        part["omitted_sum"] = max(
-            0.0, round(total - sum(part["queries"].values()), 2)
-        )
-        if len(json.dumps(part, separators=(",", ":"))) > budget:
-            del part["queries"][name]
-            part["n_omitted"] = len(ranked) - len(part["queries"])
-            part["omitted_sum"] = max(
-                0.0, round(total - sum(part["queries"].values()), 2)
-            )
-            break
-    print(json.dumps(part, separators=(",", ":")))
-    print(final_line)
+    summary["n_queries"] = len(timings)
+    if "stream_overhead" in out:
+        summary["stream_overhead"] = out["stream_overhead"]
+    print(final_line(summary, timings))
     spark.stop()
 
 

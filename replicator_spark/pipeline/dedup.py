@@ -23,16 +23,17 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
-from ..session import fan_out, prep, read_table, scan_bytes
+from ..session import fan_out, prep, read_table
 from .text import ws_tokens
 
 N_MINHASH = 8
 
 # Per-task input budget for the shingle/minhash map stages: the
 # per-byte cost here is hashing (one md5 per shingle), so ~192 KB per
-# task keeps tasks in the tens-of-ms range; capped at
-# defaultParallelism by fan_out, identity once the scan carries more
-# partitions than the derived width.
+# task keeps tasks in the tens-of-ms range. A full defaultParallelism
+# fan-out was measured and reverted (dedup_ngram_jaccard 1.8 s → 6.5 s,
+# 32-task scheduling swamped the map work); the size-derived width
+# took the pairs stage 1.9 → 1.2 s (isolated best-of-3, width ~4).
 SHINGLE_BYTES_PER_TASK = 192 << 10
 N_BANDS = 4  # 2 rows per band
 # Buckets above this size stop emitting the O(k²) clique and fall back
@@ -102,21 +103,7 @@ def _shingles(col: Column) -> Column:
 def _with_shingles(docs: DataFrame) -> DataFrame:
     """doc_id + shingle array, with the token split materialized in its
     own projection so it is computed once per row."""
-    # Size-derived fan_out (guide §2.5 input skew + §2 scale-adaptive
-    # partitioning): the single-file scan runs the tokenize+shingle+md5
-    # map on ONE core. A full defaultParallelism fan-out was measured
-    # and REVERTED in this round's first pass (dedup_ngram_jaccard
-    # 1.8 s → 6.5 s — 32-task scheduling swamped the map work), but a
-    # width derived from input bytes keeps the exchange tiny while
-    # unlocking the hash loop: pairs 1.9 → 1.2 s isolated best-of-3 at
-    # width ~4. Identity at production partition counts (capped by
-    # defaultParallelism; a multi-file scan already exceeds the width).
-    docs = fan_out(
-        docs,
-        docs.sparkSession,
-        input_bytes=scan_bytes(docs),
-        bytes_per_task=SHINGLE_BYTES_PER_TASK,
-    )
+    docs = fan_out(docs, SHINGLE_BYTES_PER_TASK)
     toked = docs.select(
         "doc_id", ws_tokens(F.lower(F.col("text"))).alias("toks")
     )
@@ -737,7 +724,7 @@ def semantic_cells_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # sanctioned constant-size reduction (see knn_graph_query)
     h = _knn_h(emb.count())
-    emb = fan_out(emb, spark)  # §2.5 input-skew guard, as knn_graph
+    emb = fan_out(emb)  # §2.5 input-skew guard, as knn_graph
     celled = emb.select(
         "vec_id", "v", _knn_cell(F.col("v"), h).alias("cell")
     )
@@ -837,7 +824,7 @@ def substring_spans_query(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     prep(spark)
     toked = (
-        fan_out(read_table(spark, sf_dir, "documents"), spark)
+        fan_out(read_table(spark, sf_dir, "documents"))
         .select(
             "doc_id", ws_tokens(F.lower(F.col("text"))).alias("toks")
         )

@@ -21,7 +21,7 @@ import hashlib
 from pyspark.sql import Column, DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
-from ..session import fan_out, no_aqe, prep, read_table, scan_bytes
+from ..session import fan_out, no_aqe, prep, read_table
 
 N_QUERIES = 8  # vec_id < 8 are the query vectors
 TOP_K = 5
@@ -567,8 +567,10 @@ GROUP BY label
 # Per-task input budget for the in-cell self-join scoring stages:
 # each input row is scored against its whole cell (~KNN_TARGET_CELL
 # pair dot products per row), so the per-byte compute is ~100× the
-# shingle map's — a smaller slab per task. Capped at
-# defaultParallelism; identity on multi-file production scans.
+# shingle map's — a smaller slab per task. Full defaultParallelism
+# on a tiny corpus pays more in task scheduling than the pair scoring
+# it parallelizes (isolated best-of-3: 6.1 s at 32 parts vs 2.5 s at
+# the derived ~8).
 CELL_JOIN_BYTES_PER_TASK = 96 << 10
 
 KNN_TARGET_CELL = 128  # target per-cell population (recall/cost knob)
@@ -628,20 +630,8 @@ def knn_graph_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     # plan is built — the plan then carries only h plane literals and
     # stays a pure cell equi-join
     h = _knn_h(emb.count())
-    # fan_out AFTER the scalar count: the in-cell self-join scoring
-    # (n·cell_pop pair dot products) otherwise runs entirely on the
-    # single-file scan's one task (guide §2.5 input skew); identity at
-    # production partition counts. Width derives from input bytes
-    # (guide §2 scale-adaptive): full defaultParallelism on a tiny
-    # corpus pays more in task scheduling than the pair scoring it
-    # parallelizes (isolated best-of-3: 6.1 s at 32 parts vs 2.5 s at
-    # the derived ~8).
-    emb = fan_out(
-        emb,
-        spark,
-        input_bytes=scan_bytes(emb),
-        bytes_per_task=CELL_JOIN_BYTES_PER_TASK,
-    )
+    # fan_out after the scalar count, before the in-cell scoring
+    emb = fan_out(emb, CELL_JOIN_BYTES_PER_TASK)
     celled = emb.select(
         "vec_id",
         "v",
@@ -1031,13 +1021,7 @@ def knn_classifier_query(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id", "label", _as_double(F.col("embedding")).alias("v")
     )
     h = _knn_h(emb.count())  # one scalar count, as in knn_graph_query
-    # same §2.5 input-skew guard as knn_graph, size-derived width
-    emb = fan_out(
-        emb,
-        spark,
-        input_bytes=scan_bytes(emb),
-        bytes_per_task=CELL_JOIN_BYTES_PER_TASK,
-    )
+    emb = fan_out(emb, CELL_JOIN_BYTES_PER_TASK)  # as knn_graph
     celled = emb.select(
         "vec_id", "label", "v", _knn_cell(F.col("v"), h).alias("cell")
     )

@@ -16,12 +16,11 @@ sequential folds so the doubles match bit-for-bit.
 from __future__ import annotations
 
 import math as _math
-import os as _os
 
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
-from ..session import fan_out, no_aqe as _no_aqe, prep, read_table, table_path
+from ..session import fan_out, no_aqe as _no_aqe, prep, read_table
 from ..utils import round_half_away
 
 _EPS = 1e-30  # all-zero-vector guard
@@ -313,10 +312,7 @@ def covariance_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     prep(spark)
     d = 64
     emb = fan_out(
-        read_table(spark, sf_dir, "embeddings"),
-        spark,
-        input_bytes=_os.path.getsize(table_path(sf_dir, "embeddings")),
-        bytes_per_task=TRAINER_BYTES_PER_TASK,
+        read_table(spark, sf_dir, "embeddings"), TRAINER_BYTES_PER_TASK
     ).select(
         F.transform("embedding", lambda x: x.cast("double")).alias("v")
     )
@@ -592,11 +588,9 @@ KMEANS_ITERS = 5
 # Per-task input budget for the ITERATIVE trainer corpora (k-means /
 # PQ Lloyd loops). Each training round re-schedules one task per
 # partition of the persisted working set, so fan-out width beyond
-# input_bytes/this trades no compute win for per-round scheduler
+# input bytes/this trades no compute win for per-round scheduler
 # latency (measured: a 2000-row sf0.1 round costs 1.5-2.1 s at 32
-# partitions vs 0.8-1.0 s at ~4). Production sizing is unaffected:
-# fan_out caps at defaultParallelism and is the identity once the
-# scan itself carries enough partitions.
+# partitions vs 0.8-1.0 s at ~4).
 TRAINER_BYTES_PER_TASK = 256 << 10
 
 
@@ -830,19 +824,20 @@ def _km_round_fn(cents: list[list[float]]):
       ``aggregate(zip_with(...), 0.0, +)``;
     - argmin ties break to the LOWEST cid (np.argmin first occurrence
       over cid-ordered columns = array_min struct(d2, cid) order);
-    - update sums are exact scaled-int64 per batch (≤ arrow batch rows
-      × |v|·1e10 ≪ 2⁶³), recombined losslessly by the caller's
-      decimal(38,0) Spark-side aggregate."""
+    - update sums are exact: scaled int64 within an Arrow batch (≤
+      batch rows × |v|·1e10 ≪ 2⁶³), folded across a partition's
+      batches in Python ints (``_fold_partial``), so each partition
+      yields one K×d partial set, recombined losslessly by
+      ``_reduce_partials``."""
     import numpy as np
 
     C = np.asarray(cents, dtype=np.float64)
 
     def fn(batches):
         import numpy as np
-        import pyarrow as pa
 
         K, D = C.shape
-        dims = np.arange(D, dtype=np.int64)
+        acc: dict = {}
         for batch in batches:
             col = batch.column(0)
             n = len(col)
@@ -860,33 +855,47 @@ def _km_round_fn(cents: list[list[float]]):
                 d2 = d2 + diff * diff
             cid = np.argmin(d2, axis=1)
             r = _dec15_10_scaled(v)
-            cids, dcol, sxs, ns = [], [], [], []
             for k in range(K):
                 mask = cid == k
-                m = int(mask.sum())
-                if not m:
-                    continue
-                ssum = r[mask].sum(axis=0)
-                cids.append(np.full(D, k, dtype=np.int64))
-                dcol.append(dims)
-                sxs.append(ssum)
-                ns.append(np.full(D, m, dtype=np.int64))
-            if not cids:
-                continue
-            yield pa.RecordBatch.from_pydict(
-                {
-                    "cid": pa.array(
-                        np.concatenate(cids).astype(np.int32), pa.int32()
-                    ),
-                    "dim": pa.array(
-                        np.concatenate(dcol).astype(np.int32), pa.int32()
-                    ),
-                    "sx": pa.array(np.concatenate(sxs), pa.int64()),
-                    "n": pa.array(np.concatenate(ns), pa.int64()),
-                }
-            )
+                if mask.any():
+                    _fold_partial(acc, (k,), r[mask])
+        if acc:
+            yield _partial_batch(acc, ["cid"], D)
 
     return fn
+
+
+def _fold_partial(acc: dict, key: tuple, rows) -> None:
+    """Add one batch's scaled rows to a partition's running
+    (per-dim sums, count) for ``key``. The per-batch column sums are
+    exact int64; across batches they add as Python ints, so a long
+    partition cannot wrap."""
+    sums = rows.sum(axis=0).tolist()
+    cur = acc.get(key)
+    if cur is None:
+        acc[key] = [sums, len(rows)]
+    else:
+        cur[0] = [a + b for a, b in zip(cur[0], sums)]
+        cur[1] += len(rows)
+
+
+def _partial_batch(acc: dict, key_names: list, D: int):
+    """A partition's folded partials as ONE Arrow batch: a row per
+    (key, dim). Converting the Python-int sums to int64 raises rather
+    than wraps if a partition's sum ever leaves the int64 range."""
+    import pyarrow as pa
+
+    keys = sorted(acc)
+    cols = {
+        name: pa.array([k[i] for k in keys for _ in range(D)], pa.int32())
+        for i, name in enumerate(key_names)
+    }
+    cols["dim"] = pa.array(list(range(D)) * len(keys), pa.int32())
+    cols["sx"] = pa.array([x for k in keys for x in acc[k][0]], pa.int64())
+    cols["n"] = pa.array(
+        [acc[k][1] for k in keys for _ in range(D)], pa.int64()
+    )
+    return pa.RecordBatch.from_pydict(cols)
 
 
 _KM_PARTIAL_SCHEMA = "cid int, dim int, sx long, n long"
@@ -957,8 +966,8 @@ def _km_train_loop(emb: DataFrame) -> list[list[float]]:
     # driver — the hash agg's map-side partial keeps the exchange at
     # K×d rows per task regardless of corpus size).
     # partial-volume bound for the per-round reduce strategy: one
-    # partition emits ≤ K rows per dim per Arrow batch; the working
-    # set is persisted so batch count ≈ 1 per partition
+    # partition emits ≤ K rows per dim, however many Arrow batches it
+    # reads (_fold_partial)
     n_parts = emb.rdd.getNumPartitions()
     d = len(cents[0]) if cents else 0
     n_partial = n_parts * KMEANS_K * d
@@ -989,18 +998,8 @@ def _km_train_loop(emb: DataFrame) -> list[list[float]]:
 
 
 def _km_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # fan_out: the single-file embeddings scan is ONE task; every
-    # Lloyd round's distance folds would otherwise run on one core
-    # (guide §2.5 input skew). Identity at production partition counts.
-    # Width derives from the input size (guide §2 scale-adaptive
-    # partitioning): each Lloyd round schedules one task per
-    # partition, so a tiny working set at full defaultParallelism
-    # pays per-round scheduler latency for nothing.
     return fan_out(
-        read_table(spark, sf_dir, "embeddings"),
-        spark,
-        input_bytes=_os.path.getsize(table_path(sf_dir, "embeddings")),
-        bytes_per_task=TRAINER_BYTES_PER_TASK,
+        read_table(spark, sf_dir, "embeddings"), TRAINER_BYTES_PER_TASK
     ).select(
         "vec_id",
         F.transform("embedding", lambda x: x.cast("double")).alias("v"),
@@ -1253,20 +1252,9 @@ PQ_K = 16  # codewords per subspace (4-bit codes)
 PQ_ITERS = 3
 
 
-def _pq_subvectors(
-    emb: DataFrame, input_bytes: int | None = None
-) -> DataFrame:
-    # fan_out before the M-way explode: the single-file scan is one
-    # task, and every PQ Lloyd round's distance folds over the n×M
-    # subvector rows would otherwise run on one core (guide §2.5).
-    # Width derives from input size exactly as _km_corpus (the PQ
-    # loop re-schedules per partition per round too).
-    emb = fan_out(
-        emb,
-        emb.sparkSession,
-        input_bytes=input_bytes,
-        bytes_per_task=TRAINER_BYTES_PER_TASK if input_bytes else None,
-    )
+def _pq_subvectors(emb: DataFrame) -> DataFrame:
+    # fan_out before the M-way explode, sized as _km_corpus
+    emb = fan_out(emb, TRAINER_BYTES_PER_TASK)
     return emb.select(
         "vec_id",
         F.explode(
@@ -1331,8 +1319,7 @@ def _pq_round_fn(cents: dict):
     the (sub, subv) frame — the _km_round_fn surgery applied per
     subspace (guide §4.2). Same bit-exactness contract: sequential
     distance folds from 0.0, argmin ties to the lowest cid, exact
-    scaled-int64 decimal(15,10) partial sums recombined by the
-    caller's decimal(38,0) Spark aggregate."""
+    decimal(15,10) partial sums folded to one set per partition."""
     import numpy as np
 
     books: dict = {}
@@ -1342,24 +1329,21 @@ def _pq_round_fn(cents: dict):
 
     def fn(batches):
         import numpy as np
-        import pyarrow as pa
 
+        D = next(iter(mats.values())).shape[1] if mats else 0
+        acc: dict = {}
         for batch in batches:
             sub = batch.column(0).to_numpy(zero_copy_only=False)
             col = batch.column(1)
             n = len(col)
             if not n:
                 continue
-            first = mats[next(iter(mats))]
-            D = first.shape[1]
             v = (
                 col.flatten()
                 .to_numpy(zero_copy_only=False)
                 .reshape(n, D)
                 .astype(np.float64, copy=False)
             )
-            subs_o, cids_o, dims_o, sxs_o, ns_o = [], [], [], [], []
-            dims = np.arange(D, dtype=np.int64)
             for s, C in mats.items():
                 smask = sub == s
                 if not smask.any():
@@ -1374,32 +1358,10 @@ def _pq_round_fn(cents: dict):
                 r = _dec15_10_scaled(vs)
                 for k in range(K):
                     kmask = cid == k
-                    m = int(kmask.sum())
-                    if not m:
-                        continue
-                    ssum = r[kmask].sum(axis=0)
-                    subs_o.append(np.full(D, s, dtype=np.int64))
-                    cids_o.append(np.full(D, k, dtype=np.int64))
-                    dims_o.append(dims)
-                    sxs_o.append(ssum)
-                    ns_o.append(np.full(D, m, dtype=np.int64))
-            if not subs_o:
-                continue
-            yield pa.RecordBatch.from_pydict(
-                {
-                    "sub": pa.array(
-                        np.concatenate(subs_o).astype(np.int32), pa.int32()
-                    ),
-                    "cid": pa.array(
-                        np.concatenate(cids_o).astype(np.int32), pa.int32()
-                    ),
-                    "dim": pa.array(
-                        np.concatenate(dims_o).astype(np.int32), pa.int32()
-                    ),
-                    "sx": pa.array(np.concatenate(sxs_o), pa.int64()),
-                    "n": pa.array(np.concatenate(ns_o), pa.int64()),
-                }
-            )
+                    if kmask.any():
+                        _fold_partial(acc, (s, k), r[kmask])
+        if acc:
+            yield _partial_batch(acc, ["sub", "cid"], D)
 
     return fn
 
@@ -1476,10 +1438,7 @@ def pq_codes_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # persist-across-Lloyd-rounds (same pattern as kmeans_query):
     # the subvector frame feeds the seed job + PQ_ITERS update jobs
-    subs = _pq_subvectors(
-        emb,
-        input_bytes=_os.path.getsize(table_path(sf_dir, "embeddings")),
-    ).persist()
+    subs = _pq_subvectors(emb).persist()
     cents = _pq_train(spark, subs)
     subs.unpersist()  # final encode pass recomputes from parquet
     final = _pq_assign_arrow(subs, cents)
@@ -1658,10 +1617,7 @@ def adc_topk_query(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.transform("embedding", lambda x: x.cast("double")).alias("v"),
     )
     # persist-across-Lloyd-rounds (same pattern as kmeans_query)
-    subs = _pq_subvectors(
-        emb,
-        input_bytes=_os.path.getsize(table_path(sf_dir, "embeddings")),
-    ).persist()
+    subs = _pq_subvectors(emb).persist()
     cents = _pq_train(spark, subs)
     subs.unpersist()  # final encode pass recomputes from parquet
     codes = _pq_assign_arrow(subs, cents).select("vec_id", "sub", "cid")
@@ -1746,10 +1702,7 @@ def ivfadc_topk_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     celled = emb.select(
         "vec_id", "v", _knn_cell(F.col("v"), h).alias("cell")
     )
-    subs = _pq_subvectors(
-        emb,
-        input_bytes=_os.path.getsize(table_path(sf_dir, "embeddings")),
-    ).persist()
+    subs = _pq_subvectors(emb).persist()
     cents = _pq_train(spark, subs)
     subs.unpersist()
     codes = _pq_assign_arrow(subs, cents).select(
@@ -1884,10 +1837,7 @@ def pq_distortion_query(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id",
         F.transform("embedding", lambda x: x.cast("double")).alias("v"),
     )
-    subs = _pq_subvectors(
-        emb,
-        input_bytes=_os.path.getsize(table_path(sf_dir, "embeddings")),
-    ).persist()
+    subs = _pq_subvectors(emb).persist()
     cents = _pq_train(spark, subs)
     subs.unpersist()  # final assign recomputes from parquet (lazy)
     final = _pq_assign_arrow(subs, cents)
@@ -2168,10 +2118,7 @@ def _jl_partial_fn(queries):
 def jl_fidelity_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     prep(spark)
     emb = fan_out(
-        read_table(spark, sf_dir, "embeddings"),
-        spark,
-        input_bytes=_os.path.getsize(table_path(sf_dir, "embeddings")),
-        bytes_per_task=TRAINER_BYTES_PER_TASK,
+        read_table(spark, sf_dir, "embeddings"), TRAINER_BYTES_PER_TASK
     ).select(
         "vec_id",
         F.transform("embedding", lambda x: x.cast("double")).alias("v"),
@@ -2366,9 +2313,7 @@ def participation_ratio_query(
 ) -> DataFrame:
     prep(spark)
     d = 64
-    emb = fan_out(
-        read_table(spark, sf_dir, "embeddings"), spark
-    ).select(
+    emb = fan_out(read_table(spark, sf_dir, "embeddings")).select(
         F.transform(
             "embedding",
             lambda x: F.floor(
@@ -2617,10 +2562,7 @@ def _iso_partial(batches):
 def isotropy_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     prep(spark)
     emb = fan_out(
-        read_table(spark, sf_dir, "embeddings"),
-        spark,
-        input_bytes=_os.path.getsize(table_path(sf_dir, "embeddings")),
-        bytes_per_task=TRAINER_BYTES_PER_TASK,
+        read_table(spark, sf_dir, "embeddings"), TRAINER_BYTES_PER_TASK
     ).select(
         F.transform("embedding", lambda x: x.cast("double")).alias("v")
     )

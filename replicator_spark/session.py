@@ -105,117 +105,129 @@ def table_path(sf_dir: str, name: str) -> str:
     return os.path.join(sf_dir, f"{name}.parquet")
 
 
-def fan_out(
-    df,
-    spark: SparkSession,
-    input_bytes: int | None = None,
-    bytes_per_task: int | None = None,
-):
+def fan_out(df, bytes_per_task: int | None = None):
     """Input-skew guard (optimization guide §2.5 "one huge unsplittable
-    file ... repartition immediately after the read").
+    file ... repartition immediately after the read") for operators
+    whose cost is heavy per-row compute before the first exchange.
 
-    The bench/driver testdata ships every table as ONE single-row-group
-    parquet file, so every scan is exactly one task and all map-side
-    work before the first exchange runs single-threaded regardless of
-    core count. For operators whose cost is heavy per-row compute (the
-    vector/trainer family's distance folds, LSH hashing, in-cell
-    self-join scoring, wide decimal partial aggregations), one
-    round-robin exchange of the (tiny) input right after the scan
-    unlocks the cores.
-
-    Scale-adaptive, not a local[32] constant: the guard compares the
-    scan's actual partition count to ``defaultParallelism`` (which
-    follows $SPARK_GRAFT_CPUS locally and cluster sizing in
-    production). At real scale the scan already carries more
-    partitions than cores and this is the identity — no exchange
-    enters the plan. Only applied where results are provably
-    partition-invariant (deterministic total orders, order-free exact
-    aggregates — the repo-wide cross-engine determinism armor already
-    guarantees this for every declared query it is used in).
+    One rule: ``repartition(width)`` when fewer scan tasks get rows
+    than ``width``, otherwise ``df`` itself. ``width`` is
+    ``defaultParallelism``; with ``bytes_per_task`` it is
+    ``min(defaultParallelism, ceil(bytes / bytes_per_task))`` over the
+    scan's listed files, so a small working set is not spread across
+    more tasks than its size pays for. The row-bearing task count comes
+    from Spark's own split arithmetic and the parquet footers
+    (``_scan_tasks_with_rows``); without a usable listing it is the
+    frame's partition count. Only applied where results are
+    partition-invariant. Streaming frames come back unchanged.
     """
     if df.isStreaming:
-        # streaming frames can't be repartition-probed (and micro-batch
-        # parallelism is governed by the stream's own partitioning)
         return df
-    p = spark.sparkContext.defaultParallelism
-    # Scan-partition bounds from the file listing (r15, VERDICT item 5):
-    # `df.rdd.getNumPartitions()` re-analyzes the plan and converts it
-    # to an RDD — a fixed driver cost per call in exactly the
-    # overhead-bound regime this guard serves. A file of size s yields
-    # at most ceil(s/maxPartitionBytes) splits (splits never cross
-    # files) and packing can only merge them, so Σceil bounds n from
-    # ABOVE; every split holds ≤ maxPartitionBytes of file bytes (open
-    # cost only inflates further), so ceil(total/maxPartitionBytes)
-    # bounds n from BELOW. When the bounds decide (tiny local inputs:
-    # upper < p → repartition; cluster-scale inputs: lower ≥ p →
-    # identity) the RDD probe is skipped; only the in-between band
-    # pays it.
-    n = None
-    sizes = _input_file_sizes(df)
-    if sizes:
-        try:
-            max_pb = int(spark.conf.get("spark.sql.files.maxPartitionBytes"))
-        except Exception:
-            max_pb = 128 * 1024 * 1024
-        n_upper = sum(-(-s // max_pb) for s in sizes)
-        n_lower = max(1, -(-sum(sizes) // max_pb))
-        if n_upper < p:
-            n = n_upper  # < p: the repartition branch fires below
-        elif n_lower >= p:
-            return df  # already at least p scan partitions
+    spark = df.sparkSession
+    width = spark.sparkContext.defaultParallelism
+    files = _input_files(df)
+    if files and bytes_per_task:
+        total = sum(size for _, size in files)
+        width = max(1, min(width, -(-total // bytes_per_task)))
+    n = _scan_tasks_with_rows(spark, files) if files else None
     if n is None:
         try:
             n = df.rdd.getNumPartitions()
         except Exception:  # pragma: no cover - defensive only
             return df
-    if input_bytes is not None and bytes_per_task:
-        # Iterative callers (the Lloyd/PQ trainer loops) additionally
-        # derive the fan-out width from the INPUT SIZE (guide §2
-        # "make partitioning scale-adaptive — derive from input size"):
-        # every training round re-schedules one task per partition, so
-        # for a working set of a few hundred KB the 32-way round-robin
-        # costs more per round in scheduler latency than the distance
-        # math it parallelizes (measured 1.5-2.1 s/round at 32 parts
-        # vs 0.8-1.0 s at 4 parts on the sf0.1 trainer corpus). The
-        # defaultParallelism cap is what sizes production: a corpus
-        # big enough to need the cluster saturates it, and a scan that
-        # already carries >= that many partitions skips the exchange
-        # entirely.
-        p = max(1, min(p, -(-input_bytes // bytes_per_task)))
-    return df.repartition(p) if n < p else df
+    return df.repartition(width) if n < width else df
 
 
-def _input_file_sizes(df) -> list | None:
-    """Local on-disk sizes of the files behind a scan (driver-side
-    listing, no job). None when the frame has no file provenance or a
-    file is not local."""
+def _input_files(df) -> list | None:
+    """(local path, size) of every file behind a scan, from the
+    driver-side listing (no job). None when the frame has no file
+    provenance or a file is not on the local file system."""
+    from urllib.parse import unquote, urlparse
+
     try:
-        files = df.inputFiles()
+        uris = df.inputFiles()
     except Exception:  # pragma: no cover - defensive only
         return None
-    if not files:
+    if not uris:
         return None
-    sizes = []
-    for uri in files:
-        pth = uri
-        if pth.startswith("file:"):
-            pth = pth[5:]
-            while pth.startswith("//"):
-                pth = pth[1:]
-        try:
-            sizes.append(os.path.getsize(pth))
-        except OSError:  # pragma: no cover - non-local storage
+    files = []
+    for uri in uris:
+        u = urlparse(uri)
+        if u.scheme not in ("", "file"):
             return None
-    return sizes
+        path = unquote(u.path)
+        try:
+            files.append((path, os.path.getsize(path)))
+        except OSError:
+            return None
+    return files
 
 
-def scan_bytes(df) -> int | None:
-    """Total on-disk size of the files behind a scan, for the
-    size-derived fan_out width (guide §2 scale-adaptive partitioning).
-    Driver-side listing only — no job. None when the frame has no
-    file provenance (local relations, streaming)."""
-    sizes = _input_file_sizes(df)
-    return sum(sizes) if sizes else None
+def _scan_tasks_with_rows(spark: SparkSession, files: list) -> int | None:
+    """How many tasks of a parquet scan over ``files`` get rows, worked
+    out on the driver with no Spark job.
+
+    Spark cuts each file into ranges of ``maxSplitBytes = min(
+    maxPartitionBytes, max(openCostInBytes, (Σsize + n·openCostInBytes)
+    / minPartitionNum))``, where ``minPartitionNum`` defaults to the
+    session's ``leafNodeDefaultParallelism``, sorts the ranges longest
+    first and packs them greedily into tasks (``FilePartition``). The
+    parquet reader gives each row group to the one range that holds its
+    midpoint, so a one-row-group file has rows in one range however
+    many it is cut into. A footer is read only for a file that spans
+    more than one range. None when a file is not parquet, or when
+    ``spark.sql.files.maxPartitionNum`` is set (Spark then re-packs the
+    tasks).
+    """
+    if any(not path.endswith(".parquet") for path, _ in files):
+        return None
+    jspark = spark._jsparkSession
+    conf = jspark.sessionState().conf()
+    if conf.filesMaxPartitionNum().isDefined():
+        return None
+    min_num = conf.filesMinPartitionNum()
+    min_num = (
+        min_num.get()
+        if min_num.isDefined()
+        else jspark.leafNodeDefaultParallelism()
+    )
+    max_bytes = conf.filesMaxPartitionBytes()
+    open_cost = conf.filesOpenCostInBytes()
+    total = sum(size + open_cost for _, size in files)
+    split = min(max_bytes, max(open_cost, total // min_num))
+    ranges = []  # (length, has_rows)
+    for path, size in files:
+        if size <= split:
+            ranges.append((size, True))
+            continue
+        import pyarrow.parquet as pq
+
+        meta = pq.ParquetFile(path).metadata
+        mids = []
+        for rg in map(meta.row_group, range(meta.num_row_groups)):
+            if not rg.num_rows:
+                continue
+            first = rg.column(0)
+            start = first.data_page_offset
+            if first.has_dictionary_page:
+                start = min(start, first.dictionary_page_offset)
+            length = sum(
+                rg.column(c).total_compressed_size
+                for c in range(rg.num_columns)
+            )
+            mids.append(start + length // 2)
+        for off in range(0, size, split):
+            end = min(off + split, size)
+            ranges.append((end - off, any(off <= m < end for m in mids)))
+    ranges.sort(key=lambda r: -r[0])  # stable, as Spark's sortBy
+    tasks, task_bytes, task_rows = 0, 0, False
+    for length, rows in ranges:
+        if task_bytes and task_bytes + length > split:
+            tasks += task_rows
+            task_bytes, task_rows = 0, False
+        task_bytes += length + open_cost
+        task_rows = task_rows or rows
+    return tasks + task_rows
 
 
 def normalize_events(df):

@@ -2502,30 +2502,14 @@ def _sid_to_uuid(sid: bytes) -> str:
     return f"{h[:8]}-{h[8:12]}-{h[12:16]}-{h[16:20]}-{h[20:]}"
 
 
-# Wire-op fan-out width (r15 optimization round, guide §2.5 input skew
-# + §2 scale-adaptive partitioning): the single-file testdata scan is
-# ONE task, and a flat repartition(defaultParallelism) of a ~2 MB frame
-# costs more in exchange + tiny-task overhead than the Python codec it
-# parallelizes (measured best-of-4 on the roundtrip chain at sf0.1:
-# width 32 = 1.69 s, 16 = 1.29 s, 8 = 1.39 s). Derive the width from
-# the source size instead — identical to the trainer family's
-# fan_out(bytes_per_task) contract: capped at defaultParallelism, so a
-# corpus big enough to need the cluster still saturates it, and blob
-# grouping never reaches any declared projection (payload columns
-# only), so results are partitioning-invariant. The size is the sum of
-# the scan's files, so a table stored as a directory of part files
-# sizes like the same table in one file; a frame with no file
-# provenance gets plain fan_out.
+# Wire-op fan-out budget (r15 optimization round): a flat
+# repartition(defaultParallelism) of a ~2 MB frame costs more in
+# exchange + tiny-task overhead than the Python codec it parallelizes
+# (measured best-of-4 on the roundtrip chain at sf0.1: width 32 =
+# 1.69 s, 16 = 1.29 s, 8 = 1.39 s). Blob grouping never reaches any
+# declared projection (payload columns only), so results are
+# partitioning-invariant.
 _WIRE_BYTES_PER_TASK = 128 << 10
-
-
-def _wire_fan_out(df: DataFrame, spark: SparkSession) -> DataFrame:
-    from ..session import fan_out, scan_bytes
-
-    return fan_out(
-        df, spark, input_bytes=scan_bytes(df),
-        bytes_per_task=_WIRE_BYTES_PER_TASK,
-    )
 
 
 # the binaryFile source's fixed schema (needed explicitly for the
@@ -2713,11 +2697,12 @@ def _file_suffix_key(name: str):
     return (name, -1)
 
 
-def _suffix_col(col: str = "source_file"):
-    """`_file_suffix_key`'s rule as a column: the numeric rotation
-    suffix, NULL for a name without one (each caller picks its NULL
-    policy)."""
-    return F.regexp_extract(F.col(col), r"\.(\d+)$", 1).try_cast("long")
+# `_file_suffix_key`'s rule over source_file as SQL: the numeric
+# rotation suffix, NULL for a name without one (each caller picks its
+# NULL policy)
+_SUFFIX_SQL = (
+    "try_cast(regexp_extract(source_file, '\\\\.(\\\\d+)$', 1) AS BIGINT)"
+)
 
 
 def _fs(path: str):
@@ -2901,21 +2886,22 @@ def resume_after(rows: DataFrame, source_file: str, log_pos: int) -> DataFrame:
     lexicographically BEFORE 'binlog.999999' — so the predicate
     compares the parsed suffix (falling back to the name only for
     files with no numeric suffix). Still a plain map-side filter — no
-    shuffle."""
+    shuffle — written as one SQL predicate, so building it costs no
+    py4j round trip per operator."""
+    from ..cdc.filters import _sql_str
+
     ckpt_suffix = _file_suffix_key(source_file)[1]
     if ckpt_suffix < 0:
-        file_later = F.col("source_file") > source_file
-        file_same = F.col("source_file") == source_file
+        name = _sql_str(source_file)
+        later, same = f"source_file > {name}", f"source_file = {name}"
     else:
-        suffix = _suffix_col()
         # a row from a file with NO numeric suffix cannot be ordered
         # against the checkpoint — REPLAY it (at-least-once with an
         # idempotent sink) rather than silently drop it
-        file_later = (suffix > F.lit(ckpt_suffix)) | suffix.isNull()
-        file_same = suffix == F.lit(ckpt_suffix)
-    return rows.where(
-        file_later | (file_same & (F.col("log_pos") > log_pos))
-    )
+        suffix = _SUFFIX_SQL
+        later = f"{suffix} > {ckpt_suffix} OR {suffix} IS NULL"
+        same = f"{suffix} = {ckpt_suffix}"
+    return rows.where(f"{later} OR ({same} AND log_pos > {int(log_pos)})")
 
 
 def parse_gtid_set(gtid_set: str) -> dict[str, list[tuple[int, int]]]:
@@ -2953,18 +2939,19 @@ def resume_after_gtid(rows: DataFrame, gtid_set: str) -> DataFrame:
     drop — the module's at-least-once policy (same rule `resume_after`
     applies to unorderable file names): a coordinate the checkpoint
     can't speak about is never silently skipped."""
-    parsed = parse_gtid_set(gtid_set)
-    skip = F.lit(False)
-    for uuid, intervals in parsed.items():
-        covered = F.lit(False)
-        for start, end in intervals:
-            covered = covered | (
-                (F.col("gtid_seq") >= start) & (F.col("gtid_seq") <= end)
-            )
-        skip = skip | ((F.lower(F.col("gtid_uuid")) == uuid) & covered)
+    from ..cdc.filters import _sql_str
+
+    skip = " OR ".join(
+        f"(lower(gtid_uuid) = {_sql_str(uuid)} AND ("
+        + " OR ".join(
+            f"gtid_seq BETWEEN {start} AND {end}" for start, end in ivs
+        )
+        + "))"
+        for uuid, ivs in parse_gtid_set(gtid_set).items()
+    ) or "false"
     # NULL coords make `skip` NULL; coalesce so they pass the filter
     # (replay) instead of vanishing into a NULL predicate.
-    return rows.where(F.coalesce(~skip, F.lit(True)))
+    return rows.where(f"coalesce(NOT ({skip}), true)")
 
 
 def resume_after_safe_acks(
@@ -3194,7 +3181,7 @@ def audit_binlog_chain(spark: SparkSession, path: str) -> DataFrame:
 
     summary = _scan(
         spark, path, _chain_summary_partition, BINLOG_CHAIN_SCHEMA
-    ).withColumn("suffix", _suffix_col())
+    ).withColumn("suffix", F.expr(_SUFFIX_SQL))
     w = W.orderBy("suffix")  # per-file table: tiny, single partition OK
     nxt = summary.select(
         "*",
@@ -3250,7 +3237,7 @@ def restore_table_from_binlog_files(
 
     rows = read_binlog_files(spark, path)
     w = W.partitionBy("event_id").orderBy(
-        F.desc(_suffix_col()), F.desc("row_seq")
+        F.desc(F.expr(_SUFFIX_SQL)), F.desc("row_seq")
     )
     latest = (
         rows.withColumn("rn", F.row_number().over(w))
@@ -3270,7 +3257,7 @@ def binlog_roundtrip_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     (TIMESTAMP2 big-endian µs, VARCHAR 1- vs 2-byte length prefixes,
     signed LONGLONG, IEEE doubles, CRC32 trailers) breaks the value
     hash."""
-    from ..session import prep, read_table
+    from ..session import fan_out, prep, read_table
 
     prep(spark)
     ev = (
@@ -3286,13 +3273,7 @@ def binlog_roundtrip_query(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .where(F.col("op") != "QUERY")
     )
-    # the local testdata ships ONE parquet file → one input partition,
-    # which would serialize the Python codec; a size-derived round-robin
-    # spread matches the many-files shape real retained logs have
-    # (output is grouping-independent — the oracle projection carries no
-    # file coordinates). Width from source bytes, not flat parallelism
-    # (see _wire_fan_out).
-    ev = _wire_fan_out(ev, spark)
+    ev = fan_out(ev, _WIRE_BYTES_PER_TASK)
     blobs = ev.mapInArrow(_encode_partition, "data binary")
     parsed = blobs.mapInArrow(_parse_partition, BINLOG_ROWS_GTID_SCHEMA)
     # the oracle is the payload projection; the GTID/before-image
@@ -3442,7 +3423,7 @@ def binlog_enum_roundtrip_query(
     ENUM-bearing table (the reference's `organisms` fixture kind) now
     transits the file path losslessly."""
     from ..cdc.decode import enum_label, set_labels
-    from ..session import prep, read_table
+    from ..session import fan_out, prep, read_table
 
     prep(spark)
     orders = read_table(spark, sf_dir, "orders").select(
@@ -3454,7 +3435,7 @@ def binlog_enum_roundtrip_query(
         F.substring("o_orderpriority", 1, 1).cast("int").alias("prio_idx"),
         (F.col("o_orderkey") % 8).cast("int").alias("flags_mask"),
     )
-    orders = _wire_fan_out(orders, spark)
+    orders = fan_out(orders, _WIRE_BYTES_PER_TASK)
     blobs = orders.mapInArrow(_encode_orders_partition, "data binary")
     parsed = blobs.mapInArrow(_parse_orders_partition, _ORD_SCHEMA)
     return parsed.select(
@@ -3542,13 +3523,13 @@ def binlog_charset_rowkey_query(
     from the wire PK metadata. The latin1 'é' byte (0xE9) is invalid
     utf-8 — only the charset TLV decodes it; the VARBINARY column
     must land as hex, not kill the task."""
-    from ..session import prep, read_table
+    from ..session import fan_out, prep, read_table
 
     prep(spark)
     cust = read_table(spark, sf_dir, "customer").select(
         "c_custkey", "c_mktsegment", "c_name"
     )
-    cust = _wire_fan_out(cust, spark)
+    cust = fan_out(cust, _WIRE_BYTES_PER_TASK)
     blobs = cust.mapInArrow(
         _encode_customer_charset_partition, "data binary"
     ).select(F.lit("binlog.000001").alias("path"), "data")
@@ -3629,13 +3610,13 @@ def binlog_partial_json_query(
     text. Beyond the reference client's own vintage, but real
     retained logs from 8.0.3+ fleets carry this shape (round-12
     verdict missing-item #3)."""
-    from ..session import prep, read_table
+    from ..session import fan_out, prep, read_table
 
     prep(spark)
     ev = read_table(spark, sf_dir, "events").select(
         "event_id", "user_id", "event_type"
     )
-    ev = _wire_fan_out(ev, spark)
+    ev = fan_out(ev, _WIRE_BYTES_PER_TASK)
     blobs = ev.mapInArrow(_encode_partial_json_partition, "data binary")
 
     schema = "event_id long, before_doc string, after_doc string"
@@ -3725,13 +3706,13 @@ def binlog_legacy_temporals_query(
     makes restore-from-retained-logs work on old-fleet files. The
     oracle derives the identical strings from the source timestamps
     (UTC on both engines: gmtime here, naive UTC parquet time there)."""
-    from ..session import prep, read_table
+    from ..session import fan_out, prep, read_table
 
     prep(spark)
     ev = read_table(spark, sf_dir, "events").select(
         "event_id", F.expr("ts div 1000000000").alias("ts_sec")
     )
-    ev = _wire_fan_out(ev, spark)
+    ev = fan_out(ev, _WIRE_BYTES_PER_TASK)
     blobs = ev.mapInArrow(_encode_legacy_partition, "data binary")
 
     from functools import partial

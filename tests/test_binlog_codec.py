@@ -1164,6 +1164,8 @@ def test_resume_after_gtid(spark, tmp_path):
         rows, "ffffffff-0000-0000-0000-00000000000f:1-999"
     )
     assert r3.count() == 130
+    # a server id that needs SQL quoting is a literal, not SQL
+    assert resume_after_gtid(rows, "it's-no-uuid:1-999").count() == 130
     # the filter is map-side: no exchange in the plan
     assert "Exchange" not in (
         r1._jdf.queryExecution().executedPlan().toString()
@@ -2394,9 +2396,14 @@ def test_resume_after_unorderable_file_replays(spark, tmp_path):
         B.encode_binlog_file(_recs([1])))
     (tmp_path / "binlog-weird").write_bytes(
         B.encode_binlog_file(_recs([9])))
+    (tmp_path / "binlog'x").write_bytes(B.encode_binlog_file(_recs([5])))
     rows = read_binlog_files(spark, str(tmp_path))
     got = resume_after(rows, "binlog.000001", 10**9).collect()
-    assert sorted(r["event_id"] for r in got) == [9]
+    assert sorted(r["event_id"] for r in got) == [5, 9]
+    # a checkpoint name that needs SQL quoting orders by name:
+    # "binlog'x" < "binlog-weird" < "binlog.000001"
+    got = resume_after(rows, "binlog'x", 10**9).collect()
+    assert sorted(r["event_id"] for r in got) == [1, 9]
 
 
 def test_start_file_search_distributed_path(spark, tmp_path):

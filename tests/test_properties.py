@@ -10,7 +10,6 @@ from __future__ import annotations
 import pandas as pd
 import pytest
 
-pytestmark = pytest.mark.slow  # golden/property suite: full-suite seal only (see conftest)
 from hypothesis import HealthCheck, given, settings, strategies as st
 
 
@@ -93,6 +92,7 @@ def test_txn_assembly_state_is_batch_split_invariant(data):
     assert run(batches) == run([(ids, ts)])
 
 
+@pytest.mark.slow  # Spark-backed: full-suite seal only (see conftest)
 @given(
     st.lists(
         st.tuples(
@@ -155,6 +155,7 @@ def test_net_effect_collapse_matches_model(spark, muts):
     assert got == model
 
 
+@pytest.mark.slow  # Spark-backed: full-suite seal only (see conftest)
 @given(
     st.lists(
         st.tuples(
@@ -257,6 +258,7 @@ def test_registry_replay_consistency(ops):
     assert len(reg.history) == reg.version
 
 
+@pytest.mark.slow  # Spark-backed: full-suite seal only (see conftest)
 @given(
     st.lists(
         st.tuples(st.integers(0, 11), st.integers(0, 11)),
@@ -346,6 +348,7 @@ def _gtid_ranges(draw):
     return list(order), model
 
 
+@pytest.mark.slow  # Spark-backed: full-suite seal only (see conftest)
 @given(_gtid_ranges())
 @settings(
     max_examples=25,
@@ -404,6 +407,7 @@ def test_jsonb_roundtrip_matches_json_semantics(value):
     assert json.loads(out) == value
 
 
+@pytest.mark.slow  # Spark-backed: full-suite seal only (see conftest)
 @given(
     st.text(max_size=30),
     st.sampled_from(

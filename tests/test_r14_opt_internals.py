@@ -4,8 +4,8 @@ Each test pins an operator-internal rewrite from the optimization
 round to the semantics of the code it replaced:
 
 - session.fan_out: scale-adaptive input-skew guard (guide §2.5) —
-  repartitions only when the scan carries fewer partitions than
-  defaultParallelism, identity otherwise.
+  repartitions only when fewer scan tasks get rows than the width,
+  identity otherwise.
 - cluster.connected_components: the fixpoint probe is now an exact
   label-sum scalar aggregate (guide §2.4 — the old probe was a
   join+count of two checkpointed frames); valid because min-label
@@ -42,7 +42,7 @@ def test_fan_out_repartitions_single_partition_input(spark):
     df = spark.createDataFrame([(i,) for i in range(100)], "x long")
     one = df.coalesce(1)
     assert one.rdd.getNumPartitions() == 1
-    out = fan_out(one, spark)
+    out = fan_out(one)
     p = spark.sparkContext.defaultParallelism
     assert out.rdd.getNumPartitions() == p
     # content identical
@@ -56,40 +56,45 @@ def test_fan_out_identity_when_input_already_parallel(spark):
     df = spark.createDataFrame(
         [(i,) for i in range(100)], "x long"
     ).repartition(p + 4)
-    out = fan_out(df, spark)
+    out = fan_out(df)
     # identity — no extra exchange enters the plan
     assert out is df
 
 
-def test_fan_out_input_size_derived_width(spark):
-    """Iterative-trainer sizing: with input_bytes given, the fan-out
-    width is ceil(input_bytes / bytes_per_task), capped at
+def test_fan_out_input_size_derived_width(spark, tmp_path):
+    """Iterative-trainer sizing: with bytes_per_task given, the fan-out
+    width is ceil(listed file bytes / bytes_per_task), capped at
     defaultParallelism — tiny working sets stop paying per-round
     scheduler latency, big inputs still saturate the cluster."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
     from replicator_spark.session import fan_out
 
-    df = spark.createDataFrame(
-        [(i,) for i in range(100)], "x long"
-    ).coalesce(1)
-    out = fan_out(
-        df, spark, input_bytes=300 << 10, bytes_per_task=256 << 10
-    )
+    rng = np.random.default_rng(0)
+
+    def write(path, n_rows):  # incompressible: bytes track rows
+        path.parent.mkdir(parents=True, exist_ok=True)
+        t = pa.table({"x": rng.integers(0, 2**62, n_rows)})
+        pq.write_table(t, path, compression="none", use_dictionary=False)
+
+    write(tmp_path / "one" / "t.parquet", 300 << 7)  # ~300 KiB, 1 task
+    df = spark.read.parquet(str(tmp_path / "one"))
+    out = fan_out(df, 256 << 10)
     assert out.rdd.getNumPartitions() == 2  # ceil(300K/256K)
-    assert sorted(r.x for r in out.collect()) == list(range(100))
+    assert sorted(r.x for r in out.collect()) == sorted(
+        r.x for r in df.collect()
+    )
     # the defaultParallelism cap holds for big inputs
     p = spark.sparkContext.defaultParallelism
-    out_big = fan_out(
-        df, spark, input_bytes=(p + 50) << 20, bytes_per_task=1 << 20
-    )
-    assert out_big.rdd.getNumPartitions() == p
-    # a scan already wider than the derived width is left alone
-    wide = df.repartition(4)
-    assert (
-        fan_out(
-            wide, spark, input_bytes=300 << 10, bytes_per_task=256 << 10
-        )
-        is wide
-    )
+    assert fan_out(df, 1 << 10).rdd.getNumPartitions() == p
+    # a scan already wider than the derived width is left alone: four
+    # ~77 KiB part files scan as four tasks, the width is 2
+    for i in range(4):
+        write(tmp_path / "wide" / f"part-{i:05d}.parquet", 300 << 5)
+    wide = spark.read.parquet(str(tmp_path / "wide"))
+    assert fan_out(wide, 256 << 10) is wide
 
 
 def test_km_train_restores_aqe_conf(spark):

@@ -55,6 +55,44 @@ def test_km_train_centroids_unchanged_by_reduce_path(spark, sf_dir):
     assert cents_direct == cents_spark
 
 
+def test_trainer_partials_fold_arrow_batches_per_partition(spark, sf_dir):
+    """Each Lloyd/PQ round emits ONE partial set per partition however
+    many Arrow batches the partition reads, so n_parts × K × d bounds
+    the partial rows the collect cap is checked against; the trained
+    codebooks are bit-identical to the default-batch run."""
+    import replicator_spark.pipeline.vectors as V
+
+    emb = V._km_corpus(spark, sf_dir).persist()
+    subs = V._pq_subvectors(emb).persist()
+    n_km, n_pq = emb.rdd.getNumPartitions(), subs.rdd.getNumPartitions()
+    km_default, pq_default = V._km_train(emb), V._pq_train(spark, subs)
+    d = len(km_default[0])
+    d_sub = len(next(iter(pq_default.values())))
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    prev = spark.conf.get(key, None)
+    spark.conf.set(key, "16")
+    try:
+        assert emb.count() > 4 * 16 * n_km  # several batches a partition
+        km_part = emb.select("v").mapInArrow(
+            V._km_round_fn(km_default), V._KM_PARTIAL_SCHEMA
+        )
+        assert km_part.count() <= n_km * V.KMEANS_K * d
+        pq_part = subs.select("sub", "subv").mapInArrow(
+            V._pq_round_fn(pq_default), V._PQ_PARTIAL_SCHEMA
+        )
+        assert pq_part.count() <= n_pq * V.PQ_K * V.PQ_M * d_sub
+        km_small, pq_small = V._km_train(emb), V._pq_train(spark, subs)
+    finally:
+        if prev is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, prev)
+        subs.unpersist()
+        emb.unpersist()
+    assert km_small == km_default
+    assert pq_small == pq_default
+
+
 # ------------------------------------------------ wire-op fan-out width
 
 
@@ -64,14 +102,11 @@ def test_wire_fan_out_width_derives_from_source_size(spark, sf_dir):
     import math
     import os
 
-    from replicator_spark.session import read_table, table_path
-    from replicator_spark.sources.binlog import (
-        _WIRE_BYTES_PER_TASK,
-        _wire_fan_out,
-    )
+    from replicator_spark.session import fan_out, read_table, table_path
+    from replicator_spark.sources.binlog import _WIRE_BYTES_PER_TASK
 
     ev = read_table(spark, sf_dir, "events").select("event_id")
-    out = _wire_fan_out(ev, spark)
+    out = fan_out(ev, _WIRE_BYTES_PER_TASK)
     size = os.path.getsize(table_path(sf_dir, "events"))
     want = max(
         1,
@@ -94,10 +129,8 @@ def test_wire_fan_out_sizes_a_part_file_directory_like_one_file(
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from replicator_spark.sources.binlog import (
-        _WIRE_BYTES_PER_TASK,
-        _wire_fan_out,
-    )
+    from replicator_spark.session import fan_out
+    from replicator_spark.sources.binlog import _WIRE_BYTES_PER_TASK
 
     rng = random.Random(7)  # incompressible: ~2.5 tasks of bytes
     t = pa.table({"b": [rng.randbytes(8000) for _ in range(40)]})
@@ -110,8 +143,8 @@ def test_wire_fan_out_sizes_a_part_file_directory_like_one_file(
     pq.write_table(t.slice(20), parts / "part-00001.parquet")
 
     def width(path):
-        return _wire_fan_out(
-            spark.read.parquet(str(path)), spark
+        return fan_out(
+            spark.read.parquet(str(path)), _WIRE_BYTES_PER_TASK
         ).rdd.getNumPartitions()
 
     assert 2 * _WIRE_BYTES_PER_TASK < one.stat().st_size
@@ -158,8 +191,6 @@ def test_km_assign_arrow_bitwise_equals_fold(spark, sf_dir):
 
 
 def test_pq_assign_arrow_bitwise_equals_fold(spark, sf_dir):
-    import os
-
     from pyspark.sql import functions as F
 
     import replicator_spark.pipeline.vectors as V
@@ -169,9 +200,7 @@ def test_pq_assign_arrow_bitwise_equals_fold(spark, sf_dir):
         "vec_id",
         F.transform("embedding", lambda x: x.cast("double")).alias("v"),
     )
-    subs = V._pq_subvectors(
-        emb, input_bytes=os.path.getsize(table_path(sf_dir, "embeddings"))
-    ).persist()
+    subs = V._pq_subvectors(emb).persist()
     cents = V._pq_train(spark, subs)
     ref = {
         (r["vec_id"], r["sub"]): (r["cid"], r["d2"])
@@ -183,29 +212,3 @@ def test_pq_assign_arrow_bitwise_equals_fold(spark, sf_dir):
     }
     subs.unpersist()
     assert ref == got
-
-
-# ---------------------------------------- fan_out probe-free bounds
-
-
-def test_fan_out_bounds_skip_rdd_probe(spark, sf_dir):
-    """Tiny single-file scans must take the upper-bound branch
-    (repartition without an RDD probe) and behave exactly as before;
-    frames without file provenance must still fall back safely."""
-    from pyspark.sql import functions as F
-
-    from replicator_spark.session import fan_out, read_table
-
-    p = spark.sparkContext.defaultParallelism
-    docs = read_table(spark, sf_dir, "documents")
-    out = fan_out(docs, spark)
-    assert out.rdd.getNumPartitions() == p
-    # size-derived width unchanged
-    out2 = fan_out(docs, spark, input_bytes=300 << 10,
-                   bytes_per_task=256 << 10)
-    assert out2.rdd.getNumPartitions() == min(p, 2)
-    # no file provenance: local relation falls back to the RDD probe
-    local = spark.range(10).select(F.col("id").alias("doc_id"))
-    n_before = local.rdd.getNumPartitions()
-    got = fan_out(local, spark).rdd.getNumPartitions()
-    assert got == (p if n_before < p else n_before)

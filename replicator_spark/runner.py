@@ -61,7 +61,7 @@ from .cdc.filters import (
     should_augment_table_sql,
 )
 from .cdc.partitioners import repartition_for
-from .session import prep
+from .session import prep, read_table
 from .streaming.drive import epoch_sink
 
 DEFAULT_CONFIG: dict[str, Any] = {
@@ -164,14 +164,7 @@ def _rows(
     test_runner)."""
     kind = cfg["source.type"]
     if kind == "events_parquet":
-        if stream:
-            from .streaming.job import _events_stream
-
-            return _events_stream(spark, sf_dir)
-        from .session import read_table
-
-        prep(spark)
-        return read_table(spark, sf_dir, "events")
+        return read_table(spark, sf_dir, "events", stream=stream)
     if kind != "binlog_files":
         raise ValueError(f"unknown source.type: {kind}")
     from .sources.binlog import (

@@ -10,9 +10,31 @@ results are zone-independent, Arrow enabled for the Pandas-UDF paths.
 from __future__ import annotations
 
 import os
+import tempfile
 
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
+
+
+def _graft_cpus(env=os.environ) -> int:
+    """The local core count: ``SPARK_GRAFT_CPUS``, 32 when unset."""
+    raw = env.get("SPARK_GRAFT_CPUS") or "32"
+    try:
+        cpus = int(raw)
+    except ValueError:
+        cpus = 0
+    if cpus < 1:
+        raise ValueError(
+            f"SPARK_GRAFT_CPUS must be a positive integer, got {raw!r}"
+        )
+    return cpus
+
+
+# The directory that holds replicator_spark/. get_spark puts it on the
+# Python workers' path, so they import the package wherever the driver
+# was started: a plain directory, not an addPyFile zip, because a
+# zipimporter re-reads its archive on every task.
+_PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 # Confs that MUST hold for our readers/expressions regardless of who
 # built the session (the driver harness builds its own). All of these
@@ -32,14 +54,7 @@ RUNTIME_CONFS = {
     # Sized from $SPARK_GRAFT_CPUS (floor 8) so the driver's low-core
     # scaling bench gets proportionally fewer state partitions too —
     # a cluster deployment sizes this at 2-3× total cores instead.
-    "spark.sql.shuffle.partitions": str(
-        max(
-            int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-            if os.environ.get("SPARK_GRAFT_CPUS", "32").isdigit()
-            else 32,
-            8,
-        )
-    ),
+    "spark.sql.shuffle.partitions": str(max(_graft_cpus(), 8)),
 }
 
 
@@ -54,11 +69,10 @@ def prep(spark: SparkSession) -> SparkSession:
 
 
 def get_spark(app_name: str = "replicator-spark") -> SparkSession:
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     builder = (
-        SparkSession.builder.master(f"local[{cpus}]")
+        SparkSession.builder.master(f"local[{_graft_cpus()}]")
         .appName(app_name)
-        .config("spark.sql.shuffle.partitions", str(max(int(cpus), 8)))
+        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_ROOT)
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
@@ -291,7 +305,37 @@ def normalize_events(df):
     return df.select(cols)
 
 
-def read_table(spark: SparkSession, sf_dir: str, name: str):
+def read_table(
+    spark: SparkSession, sf_dir: str, name: str, stream: bool = False
+):
+    """The one read of a table, as a batch frame or (``stream``) a
+    file-stream frame, for a flat parquet file and a directory of part
+    files alike. The stream takes the batch read's schema, so a change
+    of physical ``ts`` encoding in the data is read as such rather than
+    through a fixed long schema (which reads µs as "nanos"); events
+    then go through ``normalize_events`` on both paths."""
     prep(spark)
-    df = spark.read.parquet(table_path(sf_dir, name))
+    path = table_path(sf_dir, name)
+    df = spark.read.parquet(path)
+    if stream:
+        # a file-stream source needs a directory: a flat file streams
+        # from its parent, filtered to its own name
+        reader = spark.readStream.schema(df.schema)
+        if os.path.isdir(path):
+            df = reader.parquet(path)
+        else:
+            df = reader.option(
+                "pathGlobFilter", os.path.basename(path)
+            ).parquet(os.path.dirname(path))
     return normalize_events(df) if name == "events" else df
+
+
+def scratch_dir(prefix: str) -> str:
+    """A fresh directory under the active SparkContext's SparkFiles
+    root, for an op's output and checkpoint. Spark makes that root for
+    each context and deletes it when the session stops, so a lazy frame
+    over the directory reads it until ``spark.stop()`` and nothing of
+    it outlives the session."""
+    from pyspark import SparkFiles
+
+    return tempfile.mkdtemp(prefix=prefix, dir=SparkFiles.getRootDirectory())

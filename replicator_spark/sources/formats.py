@@ -6,11 +6,12 @@ DataFrameReader/Writer format matrix for free, but "we support CSV"
 is only true if it is TESTED — quoting, escaping, schema application,
 and type fidelity are exactly where CSV/JSON pipelines corrupt data
 silently. Each operator here writes the documents table through a
-format's distributed writer into a temp dir, reads it back through the
-matching reader, and emits a per-source content CHECKSUM summary; the
-oracle computes the same summary over the ORIGINAL table, so a parity
-pass proves the round trip was byte-lossless (any mangled character
-shifts the md5-derived checksum).
+format's distributed writer into a session scratch directory, reads
+it back through the matching reader, and emits a per-source content
+CHECKSUM summary; the oracle computes the same summary over the
+ORIGINAL table, so a parity pass proves the round trip was
+byte-lossless (any mangled character shifts the md5-derived
+checksum).
 
 Scale: both sides are plain distributed scans/writes (one task per
 split, no exchange until the final tiny agg); the checksum is the same
@@ -22,12 +23,11 @@ under test is the format reader/writer pair itself.
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..session import prep, read_table
+from ..session import read_table, scratch_dir
 
 CHK_MOD = 1_000_000_007  # keep per-row checksums summable as exact BIGINTs
 
@@ -63,28 +63,9 @@ def _summary(docs: DataFrame) -> DataFrame:
     )
 
 
-def _scratch_dir(tag: str, sf_dir: str) -> str:
-    """Deterministic per-(op, sf_dir) scratch dir, recreated fresh on
-    every invocation: mkdtemp leaked one full table copy per call
-    (1300+ test invocations per round), unbounded; this is bounded to
-    ONE live copy per op and never reuses stale state."""
-    import hashlib as _hl
-    import shutil as _sh
-
-    d = os.path.join(
-        tempfile.gettempdir(),
-        f"spark_graft_{tag}_{_hl.md5(sf_dir.encode()).hexdigest()[:10]}",
-    )
-    _sh.rmtree(d, ignore_errors=True)
-    os.makedirs(d)
-    return d
-
-
 def _roundtrip(spark: SparkSession, sf_dir: str, fmt: str) -> DataFrame:
-    prep(spark)
     docs = read_table(spark, sf_dir, "documents")
-    base = _scratch_dir(f"fmt_{fmt}", sf_dir)
-    out = os.path.join(base, f"docs_{fmt}")
+    out = os.path.join(scratch_dir(f"fmt_{fmt}_"), "docs")
     w = docs.write.mode("overwrite").format(fmt)
     r = spark.read.format(fmt).schema(docs.schema)
     if fmt == "csv":
@@ -181,10 +162,8 @@ CHK_TS_MOD = 1_000_000_007
 
 def stream_jsonl_sink_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming.drive import file_sink
-    from ..streaming.job import _events_stream
 
-    prep(spark)
-    stream = _events_stream(spark, sf_dir).select(
+    stream = read_table(spark, sf_dir, "events", stream=True).select(
         "event_id",
         "user_id",
         "event_type",

@@ -9,8 +9,9 @@
   source and the checkpoint's offset log this is the end-to-end
   exactly-once argument of Structured Streaming (SIGMOD 2018), and of
   the reference's idempotent Put (HBaseApplier.java:166-196).
-- `file_sink`: an append-mode file sink in a fresh scratch directory,
-  for the ops that read their emitted rows back.
+- `file_sink`: an append-mode file sink in a fresh directory under the
+  session scratch root (`session.scratch_dir`), for the ops that read
+  their emitted rows back. The directory lasts until `spark.stop()`.
 
 Reference analog: every destination goes through one
 `destinationStream` (Replicator.java:164-168).
@@ -19,11 +20,12 @@ Reference analog: every destination goes through one
 from __future__ import annotations
 
 import os
-import tempfile
 from typing import Callable
 
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming import DataStreamWriter
+
+from ..session import scratch_dir
 
 
 def _drain(writer: DataStreamWriter, ckpt: str) -> list:
@@ -62,10 +64,11 @@ def epoch_sink(
 
 def file_sink(stream: DataFrame, prefix: str, fmt: str = "parquet") -> str:
     """Drain `stream` into an append-mode `fmt` file sink under a fresh
-    `mkdtemp(prefix)` (output and checkpoint side by side, so no stale
-    seen-files log survives into the next call); returns the output
-    path."""
-    base = tempfile.mkdtemp(prefix=prefix)
+    `scratch_dir(prefix)` (output and checkpoint side by side, so no
+    stale seen-files log survives into the next call); returns the
+    output path, which Spark removes with the session at
+    `spark.stop()`."""
+    base = scratch_dir(prefix)
     out = os.path.join(base, "out")
     _drain(
         stream.writeStream.outputMode("append").format(fmt).option(

@@ -17,19 +17,17 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..cdc.envelope import OP_CASE_SQL
-from ..session import prep, read_table
+from ..session import read_table
 from .drive import file_sink
-from .job import _events_stream
 
 
 def enrich_stream_query(spark: SparkSession, sf_dir: str) -> DataFrame:
-    prep(spark)
     dim = read_table(spark, sf_dir, "customer").select(
         F.col("c_custkey").alias("user_id"),
         F.col("c_mktsegment").alias("segment"),
         F.col("c_acctbal").cast("double").alias("acctbal"),
     )
-    ev = _events_stream(spark, sf_dir).select(
+    ev = read_table(spark, sf_dir, "events", stream=True).select(
         "event_id",
         "user_id",
         F.expr(OP_CASE_SQL).alias("op"),

@@ -29,7 +29,6 @@ two agree bit-for-bit before the 6-dp display rounding.
 from __future__ import annotations
 
 import os
-import tempfile
 from typing import Iterator
 
 import pandas as pd
@@ -39,9 +38,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from ..queries.analytics import EWMA_ALPHA, EWMA_SQL
-from ..session import prep
+from ..session import read_table, scratch_dir
 from .drive import epoch_sink
-from .job import _events_stream
 
 OUT_SCHEMA = "user_id long, n_events int, ewma double, last_value double"
 STATE_SCHEMA = "s double, n int, last double"
@@ -106,12 +104,10 @@ def collapse_ewma_store(spark: SparkSession, out: str) -> DataFrame:
 
 
 def stream_ewma_query(spark: SparkSession, sf_dir: str) -> DataFrame:
-    prep(spark)
-    base = tempfile.mkdtemp(prefix="tm_ewma_")
+    base = scratch_dir("tm_ewma_")
     out = os.path.join(base, "out")
-    run_ewma_stream(
-        _events_stream(spark, sf_dir), out, os.path.join(base, "ckpt")
-    )
+    stream = read_table(spark, sf_dir, "events", stream=True)
+    run_ewma_stream(stream, out, os.path.join(base, "ckpt"))
     return collapse_ewma_store(spark, out)
 
 

@@ -22,7 +22,6 @@ plus the streaming checkpoint (the safe-GTID-watermark analog, SURVEY
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
@@ -30,7 +29,7 @@ from pyspark.sql import types as T
 
 from ..cdc.envelope import change_feed_from
 from ..runner import run_stream
-from ..session import normalize_events, prep, table_path
+from ..session import read_table, scratch_dir
 from ..sinks.timemachine import TIMEMACHINE_CELLS_SQL
 from .drive import epoch_sink, file_sink
 
@@ -47,23 +46,6 @@ EVENTS_SCHEMA = T.StructType(
         T.StructField("props", T.StringType()),
     ]
 )
-
-
-def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # File-stream sources need an explicit schema and a directory.
-    # Infer the schema from a one-off batch read of the same file so the
-    # stream survives the driver regenerating testdata with a different
-    # physical ts encoding (INT64-nanos vs TIMESTAMP µs — a long schema
-    # over a µs-timestamp column silently reads µs as "nanos", shifting
-    # every derived time by 1000×). normalize_events then canonicalizes
-    # ts to INT64 nanos exactly as the batch path does.
-    schema = spark.read.parquet(table_path(sf_dir, "events")).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-    )
-    return normalize_events(stream)
 
 
 # The time-machine stream is the runner's: with the QUERY gate off,
@@ -84,7 +66,7 @@ def stream_timemachine_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     the single events file drains as one batch. A multi-file source
     must carry its before-images on the wire (the binlog reader does;
     tests/test_multibatch.py pins that path)."""
-    base = tempfile.mkdtemp(prefix="tm_stream_")
+    base = scratch_dir("tm_stream_")
     out = os.path.join(base, "cells")
     run_stream(
         spark, sf_dir, TIMEMACHINE_STREAM_CONFIG, out,
@@ -111,8 +93,7 @@ def stream_windowed_counts_query(
     """Watermarked windowed aggregation (the late-data-tolerant op the
     reference never needed — binlog is totally ordered — but a CDC
     engine on Spark gets for free): per-hour per-event-type counts."""
-    prep(spark)
-    stream = _events_stream(spark, sf_dir).withColumn(
+    stream = read_table(spark, sf_dir, "events", stream=True).withColumn(
         "ts_ts", F.timestamp_millis(F.expr("ts div 1000000"))
     )
     agg = (
@@ -163,8 +144,7 @@ def stream_sliding_counts_query(
     expands each event into its 4 member windows map-side; state is
     one running aggregate per open (window, event_type); append mode
     emits each window once when the watermark passes its end."""
-    prep(spark)
-    stream = _events_stream(spark, sf_dir).withColumn(
+    stream = read_table(spark, sf_dir, "events", stream=True).withColumn(
         "ts_ts", F.timestamp_millis(F.expr("ts div 1000000"))
     )
     agg = (
@@ -208,9 +188,8 @@ def stream_dedup_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     family; at scale the state is pruned by the event-time watermark).
     Emits each distinct (user_id, event_type) once; summarized per
     event_type for the oracle."""
-    prep(spark)
     stream = (
-        _events_stream(spark, sf_dir)
+        read_table(spark, sf_dir, "events", stream=True)
         .withColumn("ts_ts", F.timestamp_millis(F.expr("ts div 1000000")))
         .withWatermark("ts_ts", "1 hour")
         .dropDuplicates(["user_id", "event_type"])
@@ -242,8 +221,7 @@ def stream_topk_users_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     (tiny: #windows × #users rows, nothing like raw volume). This is
     exactly how a 100 TB/day leaderboard is served; the raw stream is
     never re-scanned."""
-    prep(spark)
-    stream = _events_stream(spark, sf_dir).withColumn(
+    stream = read_table(spark, sf_dir, "events", stream=True).withColumn(
         "ts_ts", F.timestamp_millis(F.expr("ts div 1000000"))
     )
     agg = (
@@ -295,11 +273,10 @@ def stream_upsert_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     one max_by pass. At scale the store is a partitioned table and
     the collapse happens on the (pruned) read path or a periodic
     compaction — both operators exist in sinks/timemachine.py."""
-    prep(spark)
-    base = tempfile.mkdtemp(prefix="tm_upsert_")
+    base = scratch_dir("tm_upsert_")
     out = os.path.join(base, "out")
     ckpt = os.path.join(base, "ckpt")
-    stream = _events_stream(spark, sf_dir)
+    stream = read_table(spark, sf_dir, "events", stream=True)
     run_upsert_stream(stream, out, ckpt)
     return collapse_upsert_store(spark, out)
 
@@ -396,8 +373,7 @@ SKQ_QS = (0.5, 0.9, 0.99)
 def stream_quantile_sketch_query(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    prep(spark)
-    stream = _events_stream(spark, sf_dir).withColumn(
+    stream = read_table(spark, sf_dir, "events", stream=True).withColumn(
         "ts_ts", F.timestamp_millis(F.expr("ts div 1000000"))
     )
     bin_col = F.least(

@@ -25,16 +25,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..session import prep
+from ..session import read_table
 from .drive import file_sink
-from .job import _events_stream
 
 ATTRIB_WINDOW_MS = 10 * 60 * 1000  # purchase within 10 min of the click
 
 
 def attribution_join_query(spark: SparkSession, sf_dir: str) -> DataFrame:
-    prep(spark)
-    ev = _events_stream(spark, sf_dir).select(
+    ev = read_table(spark, sf_dir, "events", stream=True).select(
         "event_id",
         "user_id",
         "event_type",

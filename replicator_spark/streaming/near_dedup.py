@@ -46,7 +46,6 @@ Spark-first shape:
 
 from __future__ import annotations
 
-import os
 import pickle
 from typing import Iterator
 
@@ -64,7 +63,7 @@ from ..pipeline.dedup import (
     _SIG_SQL,
     minhash_signatures,
 )
-from ..session import prep, table_path
+from ..session import read_table
 from .drive import file_sink
 
 OUT_SCHEMA = "doc_id long, band int, admitted boolean"
@@ -119,22 +118,6 @@ def _admit(
     )
 
 
-def _docs_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # file-stream sources need an explicit schema and a directory:
-    # driver testdata ships documents.parquet as a flat FILE (glob it
-    # from the parent dir); test fixtures write it as a parquet DIR
-    # (stream the dir itself).
-    path = table_path(sf_dir, "documents")
-    schema = spark.read.parquet(path).schema
-    if os.path.isdir(path):
-        return spark.readStream.schema(schema).parquet(path)
-    return (
-        spark.readStream.schema(schema)
-        .option("pathGlobFilter", "documents.parquet")
-        .parquet(sf_dir)
-    )
-
-
 def build_verdict_stream(docs_stream: DataFrame) -> DataFrame:
     """Signature → bands → stateful per-bucket admission, as a streaming
     DataFrame of (doc_id, band, admitted) — factored out so the
@@ -184,13 +167,9 @@ def build_verdict_stream(docs_stream: DataFrame) -> DataFrame:
 def stream_near_dedup_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Drive the admission gate over the whole document stream, then
     serve the per-source kept/dropped tally."""
-    prep(spark)
-    out = file_sink(
-        build_verdict_stream(_docs_stream(spark, sf_dir)), "near_dedup_"
-    )
+    stream = read_table(spark, sf_dir, "documents", stream=True)
+    out = file_sink(build_verdict_stream(stream), "near_dedup_")
     # serve: AND across bands, then the per-source tally
-    from ..session import read_table
-
     verd = (
         spark.read.parquet(out)
         .groupBy("doc_id")

@@ -951,17 +951,13 @@ def stream_ddl_replay_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     identical to the batch schema_history_log (same oracle): testdata
     events are event_id-monotone in ts, so time-ordered micro-batches
     replay DDLs in the same global order the batch twin collects."""
-    import tempfile
+    from ..session import read_table, scratch_dir
 
-    from ..session import prep
-    from .job import _events_stream
-
-    prep(spark)
-    base = tempfile.mkdtemp(prefix="ddl_stream_")
+    base = scratch_dir("ddl_stream_")
     out = os.path.join(base, "out")
     run_ddl_replay_stream(
         spark,
-        build_ddl_stream(_events_stream(spark, sf_dir)),
+        build_ddl_stream(read_table(spark, sf_dir, "events", stream=True)),
         out,
         os.path.join(base, "ckpt"),
     )

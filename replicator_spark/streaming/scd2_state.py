@@ -31,9 +31,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from ..session import prep
+from ..session import read_table
 from .drive import file_sink
-from .job import _events_stream
 
 OUT_SCHEMA = (
     "user_id long, value double, valid_from_ms long, valid_to_ms long"
@@ -109,8 +108,7 @@ def build_scd2_stream(stream: DataFrame) -> DataFrame:
 
 
 def stream_scd2_query(spark: SparkSession, sf_dir: str) -> DataFrame:
-    prep(spark)
-    scd2 = build_scd2_stream(_events_stream(spark, sf_dir))
+    scd2 = build_scd2_stream(read_table(spark, sf_dir, "events", stream=True))
     return spark.read.parquet(file_sink(scd2, "scd2_state_"))
 
 

@@ -27,16 +27,14 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..pipeline.sessions import GAP_MS
-from ..session import prep
+from ..session import read_table
 from .drive import file_sink
-from .job import _events_stream
 
 _GAP_STR = f"{GAP_MS} milliseconds"
 
 
 def sessionize_stream_query(spark: SparkSession, sf_dir: str) -> DataFrame:
-    prep(spark)
-    ev = _events_stream(spark, sf_dir).select(
+    ev = read_table(spark, sf_dir, "events", stream=True).select(
         "event_id",
         "user_id",
         F.expr("ts div 1000000").alias("ts_ms"),

@@ -31,9 +31,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from ..cdc.envelope import CHANGE_FEED_SQL
-from ..session import prep
+from ..session import read_table
 from .drive import file_sink
-from .job import _events_stream
 
 # reference default augmenter.context.transaction.buffer.limit
 CHUNK_LIMIT = 1000
@@ -89,13 +88,12 @@ def txn_assembly_stream_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Drive the stateful assembler over the whole event stream and
     return the per-transaction summary — oracle = plain GROUP BY
     restricted to watermark-closed transactions."""
-    prep(spark)
     # the batch envelope's commit stamp uses txn-scoped windows, which a
     # stream cannot do pre-aggregation — deriving the txn key directly;
     # commit stamping happens IN the state store (that's the point).
     from ..cdc.envelope import TXN_USER_STRIDE
 
-    raw = _events_stream(spark, sf_dir).select(
+    raw = read_table(spark, sf_dir, "events", stream=True).select(
         "event_id",
         F.expr("ts div 1000000").alias("ts_ms"),
         (

@@ -303,12 +303,12 @@ def test_ewma_store_replay_idempotent(spark, sf_dir, tmp_path):
         collapse_ewma_store,
         run_ewma_stream,
     )
-    from replicator_spark.streaming.job import _events_stream
+    from replicator_spark.session import read_table
 
     out = str(tmp_path / "store")
 
     def run(ckpt):
-        stream = _events_stream(spark, sf_dir)
+        stream = read_table(spark, sf_dir, "events", stream=True)
         run_ewma_stream(stream, out, str(tmp_path / ckpt))
         collapsed = collapse_ewma_store(spark, out).collect()
         return spark.read.parquet(out).count(), sorted(map(tuple, collapsed))

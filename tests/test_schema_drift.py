@@ -114,11 +114,11 @@ def test_normalize_events_yields_long_nanos(spark, dual_dirs):
 def test_streaming_reader_identical_across_encodings(spark, dual_dirs):
     """The streaming source must not silently misread µs as nanos —
     the exact failure mode of the round-2 regression."""
-    from replicator_spark.streaming.job import _events_stream
+    from replicator_spark.session import read_table
 
     outs = []
     for d in dual_dirs:
-        stream = _events_stream(spark, d)
+        stream = read_table(spark, d, "events", stream=True)
         assert dict(stream.dtypes)["ts"] == "bigint"
         out = os.path.join(d, "out")
         q = (

@@ -13,7 +13,7 @@ Configs covered:
 Expression ids, plan ids and file paths are normalized so two
 checkouts' plan dumps diff cleanly.
 
-    PYTHONPATH=. python tools/runner_plan.py > plan.txt
+    python tools/runner_plan.py > plan.txt
 
 Run it in two checkouts and ``diff`` the outputs. ``jvm_calls`` counts
 the driver thread's py4j commands while the plan is built, and

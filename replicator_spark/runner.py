@@ -16,8 +16,12 @@ Key mapping (reference key → effect here):
   into the same envelope (BinaryLogSupplier selection in
   Replicator.java:95-204)
 - ``source.binlog.checkpoint.{gtid_set,file,pos}`` → the startup
-  checkpoint override: GTID-set mode wins when non-empty, else
-  file/pos (`BinaryLogSupplier.java:207-229`)
+  checkpoint override, applied once by `read_binlog_files` for the
+  batch plan and the stream alike: GTID-set mode wins when non-empty,
+  else file/pos (`BinaryLogSupplier.java:207-229`); files before the
+  start file are pruned from the scan, the rest row-trimmed
+- ``source.binlog.max_files_per_trigger`` → the stream's per-trigger
+  file bound (backpressure)
 - ``augmenter.filter.include`` / ``augmenter.filter.exclude.pattern``
   → `cdc.filters.should_augment_table_sql`
   (ActiveSchemaHelpers shouldAugmentTable)
@@ -153,63 +157,31 @@ def _rows(
 ) -> DataFrame:
     """The one source selection (BinaryLogSupplier selection in
     Replicator.java:95-204), for the batch plan and the foreachBatch
-    stream alike: the configured source's envelope input, trimmed by
-    the startup checkpoint. A binlog-file source carries only row
-    events (QUERY events have no row image), so the envelope's
-    lag-derived fields (value_before, seq_in_txn, commit_ts_ms) are
-    computed over row events only — the rows a real replica actually
-    receives. The parquet test feed interleaves synthetic QUERY rows
-    BEFORE the lag, so those fields can differ between the two sources
-    for the same data; op/table routing and counts agree (pinned by
-    test_runner)."""
+    stream alike: the configured source's envelope input. The binlog
+    reader applies the startup checkpoint itself. A binlog-file source
+    carries only row events (QUERY events have no row image), so the
+    envelope's lag-derived fields (value_before, seq_in_txn,
+    commit_ts_ms) are computed over row events only — the rows a real
+    replica actually receives. The parquet test feed interleaves
+    synthetic QUERY rows BEFORE the lag, so those fields can differ
+    between the two sources for the same data; op/table routing and
+    counts agree (pinned by test_runner)."""
     kind = cfg["source.type"]
     if kind == "events_parquet":
         return read_table(spark, sf_dir, "events", stream=stream)
     if kind != "binlog_files":
         raise ValueError(f"unknown source.type: {kind}")
-    from .sources.binlog import (
-        envelope_projection,
-        read_binlog_files,
-        tail_binlog_files,
-    )
+    from .sources.binlog import envelope_projection, read_binlog_files
 
-    path = cfg["source.binlog.path"]
-    gtid_set = cfg["source.binlog.checkpoint.gtid_set"]
-    if stream:
-        # continuous tail of a rotated-binlog directory: the
-        # file-stream checkpoint is the seen-files log, so each rotated
-        # file decodes exactly once across restarts
-        rows = _apply_checkpoint(tail_binlog_files(
-            spark, path,
-            max_files_per_trigger=cfg["source.binlog.max_files_per_trigger"],
-        ), cfg)
-    elif gtid_set:
-        # GTID mode goes through the reader itself so the start-file
-        # search prunes whole files from the scan (PREVIOUS_GTIDS
-        # headers), not just rows post-decode
-        rows = read_binlog_files(spark, path, resume_gtid_set=gtid_set)
-    else:
-        rows = _apply_checkpoint(read_binlog_files(spark, path), cfg)
-    return envelope_projection(rows)
-
-
-def _apply_checkpoint(rows: DataFrame, cfg: Mapping[str, Any]) -> DataFrame:
-    """The reference's startup-checkpoint selection
-    (`BinaryLogSupplier.java:207-229`): GTID set if stored and
-    non-empty, else binlog file/pos, else replay everything. Both
-    resume modes are map-side filters on the decoded rows' checkpoint
-    coordinates — no shuffle, pushed toward the scan."""
-    from .sources.binlog import resume_after, resume_after_gtid
-
-    gtid_set = cfg["source.binlog.checkpoint.gtid_set"]
-    if gtid_set:
-        return resume_after_gtid(rows, gtid_set)
     ckpt_file = cfg["source.binlog.checkpoint.file"]
-    if ckpt_file is not None:
-        return resume_after(
-            rows, ckpt_file, int(cfg["source.binlog.checkpoint.pos"])
-        )
-    return rows
+    return envelope_projection(read_binlog_files(
+        spark, cfg["source.binlog.path"],
+        resume_gtid_set=cfg["source.binlog.checkpoint.gtid_set"],
+        resume_file_pos=None if ckpt_file is None else (
+            ckpt_file, int(cfg["source.binlog.checkpoint.pos"])),
+        stream=stream,
+        max_files_per_trigger=cfg["source.binlog.max_files_per_trigger"],
+    ))
 
 
 def _feed(rows: DataFrame, cfg: Mapping[str, Any]) -> DataFrame:

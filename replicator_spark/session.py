@@ -48,19 +48,27 @@ RUNTIME_CONFS = {
     # oracle (naive-UTC timestamps) and with the reference's pinned-UTC
     # fixtures (SURVEY.md §7 "zone-dependent timestamp math").
     "spark.sql.session.timeZone": "UTC",
-    # the default 200 shuffle partitions over-parallelizes local runs
-    # by an order of magnitude (AQE coalesces batch plans, but
-    # stateful streaming ops are pinned to this number at first run).
-    # Sized from $SPARK_GRAFT_CPUS (floor 8) so the driver's low-core
-    # scaling bench gets proportionally fewer state partitions too —
-    # a cluster deployment sizes this at 2-3× total cores instead.
-    "spark.sql.shuffle.partitions": str(max(_graft_cpus(), 8)),
 }
+
+
+def _runtime_confs() -> dict[str, str]:
+    """`RUNTIME_CONFS` plus the shuffle width, sized when called: the
+    default 200 shuffle partitions over-parallelizes local runs by an
+    order of magnitude (AQE coalesces batch plans, but stateful
+    streaming ops are pinned to this number at first run). Sized from
+    $SPARK_GRAFT_CPUS (floor 8), read now rather than at import, so
+    the driver's low-core scaling bench gets proportionally fewer
+    state partitions too — a cluster deployment sizes this at 2-3×
+    total cores instead."""
+    return {
+        **RUNTIME_CONFS,
+        "spark.sql.shuffle.partitions": str(max(_graft_cpus(), 8)),
+    }
 
 
 def prep(spark: SparkSession) -> SparkSession:
     """Apply runtime-settable confs to an externally built session."""
-    for k, v in RUNTIME_CONFS.items():
+    for k, v in _runtime_confs().items():
         try:
             spark.conf.set(k, v)
         except Exception:
@@ -86,7 +94,7 @@ def get_spark(app_name: str = "replicator-spark") -> SparkSession:
         # shuffle.partitions ≈ 2-3× total cores)
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
     )
-    for k, v in RUNTIME_CONFS.items():
+    for k, v in _runtime_confs().items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

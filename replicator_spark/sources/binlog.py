@@ -2523,20 +2523,59 @@ _BINARY_FILE_SCHEMA = (
 def _scan(
     spark: SparkSession, path, parse, schema: str, stream: bool = False,
     max_files_per_trigger: Optional[int] = None,
+    from_file: Optional[str] = None,
 ) -> DataFrame:
     """The one ``binaryFile`` scan behind every file reader: one
-    (path, data) row per file (a directory, a glob, or — batch only —
-    a list of files), decoded by the mapInArrow ``parse`` into
-    ``schema``. ``stream`` tails the directory instead (the seen-files
-    log in the query checkpoint makes each rotated file decode exactly
-    once); ``max_files_per_trigger`` bounds each micro-batch."""
+    (path, data) row per file of the directory or glob ``path``,
+    decoded by the mapInArrow ``parse`` into ``schema``. ``stream``
+    tails the directory instead (the seen-files log in the query
+    checkpoint makes each rotated file decode exactly once);
+    ``max_files_per_trigger`` bounds each micro-batch.
+
+    ``from_file`` is the startup checkpoint's start file: every file
+    with its stem and a lower numeric suffix is dropped before the
+    decode. A batch scan loads the pruned listing; a stream, which has
+    no file list, filters the files' paths ahead of the decode. Any
+    other file (no numeric suffix, another stem) still decodes, and
+    the caller's row trim speaks for its rows."""
+    stem, first = _file_suffix_key(from_file) if from_file else ("", -1)
+    if first > 0 and not stream:
+        path = [
+            f"{path.rstrip('/')}/{n}" for n in _list_files(path)
+            if not _before_start(n, stem, first)
+        ]
     reader = (spark.readStream if stream else spark.read).format("binaryFile")
     if stream:
         reader = reader.schema(_BINARY_FILE_SCHEMA)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    blobs = reader.load(path).select("path", F.col("content").alias("data"))
-    return blobs.mapInArrow(parse, schema)
+        if max_files_per_trigger is not None:
+            reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
+    blobs = reader.load(path)
+    if first > 0 and stream:
+        blobs = blobs.where(_from_file_sql(stem, first))
+    return blobs.select("path", F.col("content").alias("data")).mapInArrow(
+        parse, schema
+    )
+
+
+def _before_start(name: str, stem: str, first: int) -> bool:
+    """True when ``name`` rotates before the start file ``stem.first``:
+    the same stem and a lower numeric suffix."""
+    n_stem, suffix = _file_suffix_key(name)
+    return n_stem == stem and 0 <= suffix < first
+
+
+def _from_file_sql(stem: str, first: int) -> str:
+    """`_before_start`'s complement over a binaryFile frame's `path`
+    column, as one SQL predicate."""
+    from ..cdc.filters import _sql_str
+
+    name = "substring_index(path, '/', -1)"
+    rest = f"substr({name}, {len(stem) + 2})"
+    return (
+        f"NOT coalesce(startswith({name}, {_sql_str(stem + '.')})"
+        f" AND {rest} RLIKE '^[0-9]+$'"
+        f" AND try_cast({rest} AS BIGINT) < {first}, false)"
+    )
 
 
 def _trim_import_caches() -> None:
@@ -2743,14 +2782,7 @@ def start_file_for_gtid_resume(
     set — they are pruned without decode. Driver state is one
     (file, head-set) pair per retained file: tiny vs data, the same
     contract as the file listing itself."""
-    return _start_file(path, _list_files(path), gtid_set, spark)
-
-
-def _start_file(
-    path: str, names: list[str], gtid_set: str,
-    spark: Optional[SparkSession],
-) -> Optional[str]:
-    """`start_file_for_gtid_resume` over an existing listing."""
+    names = _list_files(path)
     filesystem, root = _fs(path)
     stored = parse_gtid_set(gtid_set)
     heads: dict[str, Optional[dict]] = {}
@@ -2800,37 +2832,49 @@ def _start_file(
 def read_binlog_files(
     spark: SparkSession, path: str,
     resume_gtid_set: Optional[str] = None,
+    resume_file_pos: Optional[tuple[str, int]] = None,
+    stream: bool = False,
+    max_files_per_trigger: Optional[int] = None,
 ) -> DataFrame:
-    """The production batch entry: rotated binlog files on disk/object
+    """The production entry: rotated binlog files on disk/object
     storage → change rows. ``binaryFile`` gives one row per file (blob
     in `content`), partitioned by file, so decode parallelism is
     file-level with zero shuffle — the replica-per-binlog fan-out of
     `BinaryLogSupplier`, but elastic. Rows carry (source_file,
-    log_pos) so a consumer can checkpoint and resume in the
-    reference's file/pos mode (see `resume_after`).
+    log_pos) and (gtid_uuid, gtid_seq), the reference's two
+    checkpoint coordinates.
 
-    ``resume_gtid_set``: GTID-mode resume with FILE-LEVEL pruning —
-    the start-file search (`start_file_for_gtid_resume`) drops every
-    rotated file wholly inside the stored set from the scan (no read,
-    no decode task), and `resume_after_gtid` trims the boundary
-    file's rows. With 10k retained files and a recent checkpoint,
-    decode cost is proportional to the tail being replayed, not the
-    retention window."""
-    if not resume_gtid_set:
-        return _scan(spark, path, _parse_partition, BINLOG_ROWS_POS_SCHEMA)
-    names = _list_files(path)
-    start = _start_file(path, names, resume_gtid_set, spark)
-    load = path
-    if start is not None:
-        # prune every file BEFORE the start file from the scan itself
-        # (no decode, no task), then row-trim the rest
-        key = _file_suffix_key(start)
-        load = [
-            f"{path.rstrip('/')}/{n}"
-            for n in names if _file_suffix_key(n) >= key
-        ]
-    rows = _scan(spark, load, _parse_partition, BINLOG_ROWS_POS_SCHEMA)
-    return resume_after_gtid(rows, resume_gtid_set)
+    ``stream`` tails the directory: the file-stream source tracks seen
+    files in the query checkpoint, so each rotated file decodes
+    exactly once across restarts. ``max_files_per_trigger`` bounds
+    each micro-batch to that many files — the backpressure knob for a
+    backlogged directory (the reference's queue-size bound), which
+    also makes the multi-micro-batch path deterministic in tests.
+
+    The startup checkpoint (`BinaryLogSupplier.java:206-239`) applies
+    once, here, for batch and stream alike: a non-empty
+    ``resume_gtid_set`` wins, else ``resume_file_pos`` = (file, pos),
+    else the whole retained log replays. The start file — the GTID
+    start-file search's result (`start_file_for_gtid_resume`) or the
+    checkpoint's file — prunes every earlier file of its rotation from
+    the scan before any decode, and `resume_after_gtid` /
+    `resume_after` trim the rows of what is left. With 10k retained
+    files and a recent checkpoint, decode cost is proportional to the
+    tail being replayed, not the retention window."""
+    start = None
+    if resume_gtid_set:
+        start = start_file_for_gtid_resume(path, resume_gtid_set, spark)
+    elif resume_file_pos is not None:
+        start = resume_file_pos[0]
+    rows = _scan(
+        spark, path, _parse_partition, BINLOG_ROWS_POS_SCHEMA, stream,
+        max_files_per_trigger, from_file=start,
+    )
+    if resume_gtid_set:
+        return resume_after_gtid(rows, resume_gtid_set)
+    if resume_file_pos is not None:
+        return resume_after(rows, *resume_file_pos)
+    return rows
 
 
 def envelope_projection(rows: DataFrame) -> DataFrame:
@@ -2847,33 +2891,6 @@ def envelope_projection(rows: DataFrame) -> DataFrame:
 SELECT op, event_id, ts_us * 1000 AS ts,  -- the envelope reads ns
     user_id, event_type, value, props, value_before_wire, props_before_wire
 FROM {df}""", df=rows)
-
-
-def tail_binlog_files(
-    spark: SparkSession,
-    path: str,
-    max_files_per_trigger: Optional[int] = None,
-) -> DataFrame:
-    """The production STREAMING entry: a continuously-tailed directory
-    of rotated binlog files → an unbounded change-row stream. The
-    file-stream source tracks seen files in the query checkpoint, so
-    each rotated file is decoded exactly once across restarts — the
-    Structured-Streaming re-expression of `BinaryLogSupplier.connect`'s
-    resume-from-checkpoint contract (the checkpoint here is Spark's
-    seen-files log instead of a binlog file/pos pair).
-
-    ``max_files_per_trigger`` bounds each micro-batch to that many
-    rotated files — the backpressure knob for a backlogged directory
-    (10k retained files must not become one giant first batch; the
-    reference's queue-size bound, StreamsImplementation's
-    backpressure, maps to exactly this option). It also makes the
-    multi-micro-batch path deterministic for the golden tests: the
-    envelope's cross-batch wire-before-image fallback is only
-    exercised when one user's history spans trigger boundaries."""
-    return _scan(
-        spark, path, _parse_partition, BINLOG_ROWS_POS_SCHEMA,
-        stream=True, max_files_per_trigger=max_files_per_trigger,
-    )
 
 
 def resume_after(rows: DataFrame, source_file: str, log_pos: int) -> DataFrame:
@@ -2985,8 +3002,8 @@ def snapshot_to_binlog_files(rows: DataFrame, path: str) -> list[str]:
     copy on a live server; with the wire writer in hand, Spark can
     emit the same artifact directly — each partition of the snapshot
     becomes rotated `binlog.<part><seq>` files under `path`, which
-    `tail_binlog_files`/`read_binlog_files` then consume exactly like
-    server-produced logs.
+    `read_binlog_files` (batch or ``stream=True``) then consumes
+    exactly like server-produced logs.
 
     `rows` carries the change-row shape (op, event_id, ts_us, user_id,
     event_type, value, props); executors write through pyarrow.fs, so
@@ -3090,7 +3107,10 @@ def _parse_records_partition(batches) -> Iterator:
         yield _record_batch(out, BINLOG_RECORDS_SCHEMA)
 
 
-def read_binlog_records(spark: SparkSession, path: str) -> DataFrame:
+def read_binlog_records(
+    spark: SparkSession, path: str, stream: bool = False,
+    max_files_per_trigger: Optional[int] = None,
+) -> DataFrame:
     """The generic production file source: rotated binlog files
     holding ANY mix of tables → schema-on-read change records
     (db, table_name, op, record-JSON, before-JSON, GTID + file/pos
@@ -3098,24 +3118,12 @@ def read_binlog_records(spark: SparkSession, path: str) -> DataFrame:
     `from_json` against their table's schema — the same
     schema-on-read contract as the envelope's RawEvent — and the
     resume combinators (`resume_after`, `resume_after_gtid`) apply
-    unchanged since the coordinate columns are shared."""
-    return _scan(spark, path, _parse_records_partition, BINLOG_RECORDS_SCHEMA)
-
-
-def tail_binlog_records(
-    spark: SparkSession,
-    path: str,
-    max_files_per_trigger: Optional[int] = None,
-) -> DataFrame:
-    """Streaming twin of `read_binlog_records`: a continuously-tailed
-    directory of rotated files → an unbounded stream of generic
-    schema-on-read change records, exactly-once per file via the
-    seen-files checkpoint (the `tail_binlog_files` contract, for any
-    table mix — including its `max_files_per_trigger` backpressure
-    bound for backlogged directories)."""
+    unchanged since the coordinate columns are shared. ``stream`` and
+    ``max_files_per_trigger`` tail the directory as in
+    `read_binlog_files`."""
     return _scan(
         spark, path, _parse_records_partition, BINLOG_RECORDS_SCHEMA,
-        stream=True, max_files_per_trigger=max_files_per_trigger,
+        stream, max_files_per_trigger,
     )
 
 
@@ -3769,30 +3777,22 @@ def _parse_ddl_partition(batches) -> Iterator:
         yield _record_batch(cols, BINLOG_DDL_SCHEMA)
 
 
-def read_binlog_ddl(spark: SparkSession, path: str) -> DataFrame:
+def read_binlog_ddl(
+    spark: SparkSession, path: str, stream: bool = False,
+    max_files_per_trigger: Optional[int] = None,
+) -> DataFrame:
     """Rotated binlog files → the DDL statement stream (with file/pos
     and GTID coordinates, so the same resume combinators apply). The
     row-event readers deliberately drop QUERY events; this is their
     schema-channel complement — together they are the two streams the
     reference's augmenter consumes (rows → applier, DDL → active
-    schema)."""
-    return _scan(spark, path, _parse_ddl_partition, BINLOG_DDL_SCHEMA)
-
-
-def tail_binlog_ddl(
-    spark: SparkSession,
-    path: str,
-    max_files_per_trigger: Optional[int] = None,
-) -> DataFrame:
-    """Streaming twin of `read_binlog_ddl`: the DDL statement channel
-    of a continuously-tailed log directory — what feeds a long-lived
-    active-schema replay (`streaming/registry.run_ddl_replay_stream`'s
-    verbatim-sql path, ordered by the GTID sequence). Same seen-files
-    checkpoint and `max_files_per_trigger` backpressure contract as
-    the row-event tails."""
+    schema). ``stream`` and ``max_files_per_trigger`` tail the
+    directory as in `read_binlog_files`: the channel that feeds a
+    long-lived active-schema replay
+    (`streaming/registry.run_ddl_replay_stream`)."""
     return _scan(
         spark, path, _parse_ddl_partition, BINLOG_DDL_SCHEMA,
-        stream=True, max_files_per_trigger=max_files_per_trigger,
+        stream, max_files_per_trigger,
     )
 
 

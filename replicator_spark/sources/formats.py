@@ -170,11 +170,7 @@ def stream_jsonl_sink_query(spark: SparkSession, sf_dir: str) -> DataFrame:
         "value",
         F.expr("ts div 1000000").alias("ts_ms"),
     )
-    out = file_sink(stream, "stream_jsonl_", fmt="json")
-    back = spark.read.schema(
-        "event_id long, user_id long, event_type string, value double,"
-        " ts_ms long"
-    ).json(out)
+    back = file_sink(stream, "stream_jsonl_", fmt="json")
     return back.groupBy("event_type").agg(
         F.count("*").alias("n_events"),
         F.sum("event_id").cast("bigint").alias("sum_event_id"),

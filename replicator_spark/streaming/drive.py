@@ -10,8 +10,9 @@
   exactly-once argument of Structured Streaming (SIGMOD 2018), and of
   the reference's idempotent Put (HBaseApplier.java:166-196).
 - `file_sink`: an append-mode file sink in a fresh directory under the
-  session scratch root (`session.scratch_dir`), for the ops that read
-  their emitted rows back. The directory lasts until `spark.stop()`.
+  session scratch root (`session.scratch_dir`), for the ops that serve
+  their emitted rows; it returns them read back with the stream's
+  schema. The directory lasts until `spark.stop()`.
 
 Reference analog: every destination goes through one
 `destinationStream` (Replicator.java:164-168).
@@ -62,11 +63,15 @@ def epoch_sink(
     )
 
 
-def file_sink(stream: DataFrame, prefix: str, fmt: str = "parquet") -> str:
+def file_sink(
+    stream: DataFrame, prefix: str, fmt: str = "parquet"
+) -> DataFrame:
     """Drain `stream` into an append-mode `fmt` file sink under a fresh
     `scratch_dir(prefix)` (output and checkpoint side by side, so no
     stale seen-files log survives into the next call); returns the
-    output path, which Spark removes with the session at
+    drained rows, read back with the stream's schema, so a stream that
+    emitted nothing reads back as an empty frame rather than failing
+    schema inference. Spark removes the directory with the session at
     `spark.stop()`."""
     base = scratch_dir(prefix)
     out = os.path.join(base, "out")
@@ -76,4 +81,4 @@ def file_sink(stream: DataFrame, prefix: str, fmt: str = "parquet") -> str:
         ),
         os.path.join(base, "ckpt"),
     )
-    return out
+    return stream.sparkSession.read.schema(stream.schema).format(fmt).load(out)

@@ -34,7 +34,7 @@ def enrich_stream_query(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr("ts div 1000000").alias("ts_ms"),
     )
     enriched = ev.join(F.broadcast(dim), "user_id", "left")
-    return spark.read.parquet(file_sink(enriched, "stream_enrich_"))
+    return file_sink(enriched, "stream_enrich_")
 
 
 ENRICH_STREAM_SQL = f"""

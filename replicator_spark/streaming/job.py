@@ -107,7 +107,7 @@ def stream_windowed_counts_query(
             .alias("sum_value"),
         )
     )
-    df = spark.read.parquet(file_sink(agg, "tm_win_"))
+    df = file_sink(agg, "tm_win_")
     return df.select(
         F.unix_millis(F.col("window.start")).alias("window_start_ms"),
         "event_type",
@@ -155,7 +155,7 @@ def stream_sliding_counts_query(
         )
         .agg(F.count("*").alias("n"))
     )
-    return spark.read.parquet(file_sink(agg, "tm_slide_")).select(
+    return file_sink(agg, "tm_slide_").select(
         F.unix_millis(F.col("window.start")).alias("window_start_ms"),
         "event_type",
         "n",
@@ -196,7 +196,7 @@ def stream_dedup_query(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("user_id", "event_type")
     )
     return (
-        spark.read.parquet(file_sink(stream, "tm_dedup_"))
+        file_sink(stream, "tm_dedup_")
         .groupBy("event_type")
         .agg(F.count("*").alias("n_distinct_users"))
     )
@@ -229,7 +229,7 @@ def stream_topk_users_query(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.window("ts_ts", "1 hour"), "user_id")
         .agg(F.count("*").alias("n"))
     )
-    served = spark.read.parquet(file_sink(agg, "tm_topk_")).select(
+    served = file_sink(agg, "tm_topk_").select(
         F.unix_millis(F.col("window.start")).alias("window_start_ms"),
         "user_id",
         "n",
@@ -387,7 +387,7 @@ def stream_quantile_sketch_query(
         .groupBy(F.window("ts_ts", "1 day"), bin_col.alias("bin"))
         .agg(F.count("*").alias("cnt"))
     )
-    sketch = spark.read.parquet(file_sink(agg, "tm_skq_")).select(
+    sketch = file_sink(agg, "tm_skq_").select(
         F.unix_millis(F.col("window.start")).alias("window_start_ms"),
         "bin",
         "cnt",

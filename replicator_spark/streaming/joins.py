@@ -75,7 +75,7 @@ def attribution_join_query(spark: SparkSession, sf_dir: str) -> DataFrame:
         "purchase_id",
         (F.col("purchase_ms") - F.col("click_ms")).alias("gap_ms"),
     )
-    return spark.read.parquet(file_sink(joined, "stream_attrib_"))
+    return file_sink(joined, "stream_attrib_")
 
 
 ATTRIBUTION_JOIN_SQL = f"""

@@ -168,11 +168,10 @@ def stream_near_dedup_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Drive the admission gate over the whole document stream, then
     serve the per-source kept/dropped tally."""
     stream = read_table(spark, sf_dir, "documents", stream=True)
-    out = file_sink(build_verdict_stream(stream), "near_dedup_")
+    verdicts = file_sink(build_verdict_stream(stream), "near_dedup_")
     # serve: AND across bands, then the per-source tally
     verd = (
-        spark.read.parquet(out)
-        .groupBy("doc_id")
+        verdicts.groupBy("doc_id")
         .agg(F.min(F.col("admitted").cast("int")).alias("kept"))
     )
     docs = read_table(spark, sf_dir, "documents").select("doc_id", "source")

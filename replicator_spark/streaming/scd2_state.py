@@ -109,7 +109,7 @@ def build_scd2_stream(stream: DataFrame) -> DataFrame:
 
 def stream_scd2_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     scd2 = build_scd2_stream(read_table(spark, sf_dir, "events", stream=True))
-    return spark.read.parquet(file_sink(scd2, "scd2_state_"))
+    return file_sink(scd2, "scd2_state_")
 
 
 # Oracle: the batch LEAD-window derivation, closed intervals only.

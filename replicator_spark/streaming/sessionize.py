@@ -56,7 +56,7 @@ def sessionize_stream_query(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         )
     )
-    return spark.read.parquet(file_sink(sessions, "stream_sess_"))
+    return file_sink(sessions, "stream_sess_")
 
 
 SESSIONIZE_STREAM_SQL = f"""

@@ -115,7 +115,7 @@ def txn_assembly_stream_query(spark: SparkSession, sf_dir: str) -> DataFrame:
             GroupStateTimeout.EventTimeTimeout,
         )
     )
-    return spark.read.parquet(file_sink(assembled, "txn_state_"))
+    return file_sink(assembled, "txn_state_")
 
 
 # Emission rule: a txn (minute bucket B) closes when the final

@@ -669,13 +669,13 @@ def test_partial_row_image_rejected():
         list(B.parse_binlog_file(w.getvalue()))
 
 
-def test_tail_binlog_files_exactly_once_across_restart(spark, tmp_path):
-    """The streaming tail decodes each rotated file exactly once: a
+def test_binlog_files_stream_exactly_once_across_restart(spark, tmp_path):
+    """The streaming reader decodes each rotated file exactly once: a
     second lifetime over the same checkpoint picks up ONLY files that
     arrived after the first drained — BinaryLogSupplier's
     resume-from-checkpoint contract, carried by the file-stream
     seen-files log."""
-    from replicator_spark.sources.binlog import tail_binlog_files
+    from replicator_spark.sources.binlog import read_binlog_files
 
     logs = tmp_path / "logs"
     logs.mkdir()
@@ -689,7 +689,7 @@ def test_tail_binlog_files_exactly_once_across_restart(spark, tmp_path):
 
     def drain():
         q = (
-            tail_binlog_files(spark, str(logs))
+            read_binlog_files(spark, str(logs), stream=True)
             .writeStream.format("parquet")
             .option("path", out)
             .option("checkpointLocation", ckpt)
@@ -842,8 +842,8 @@ def test_snapshot_to_binlog_files_uniform_stream(spark, sf_dir, tmp_path):
     from replicator_spark.session import read_table
     from replicator_spark.sources.binlog import (
         encode_binlog_file,
+        read_binlog_files,
         snapshot_to_binlog_files,
-        tail_binlog_files,
     )
     import pyspark.sql.functions as F
 
@@ -867,7 +867,7 @@ def test_snapshot_to_binlog_files_uniform_stream(spark, sf_dir, tmp_path):
 
     def drain():
         q = (
-            tail_binlog_files(spark, str(logs))
+            read_binlog_files(spark, str(logs), stream=True)
             .writeStream.format("parquet").option("path", out)
             .option("checkpointLocation", ckpt)
             .trigger(availableNow=True).start()
@@ -2406,6 +2406,78 @@ def test_resume_after_unorderable_file_replays(spark, tmp_path):
     assert sorted(r["event_id"] for r in got) == [1, 9]
 
 
+@pytest.fixture
+def junk_ahead(tmp_path):
+    """(valid, logs): two binlog files with PREVIOUS_GTIDS heads (txns
+    1-2 | 3-4), and the same two behind a junk `binlog.000001` that
+    does not decode."""
+    valid, logs = tmp_path / "valid", tmp_path / "logs"
+    for d in (valid, logs):
+        d.mkdir()
+        (d / "binlog.000002").write_bytes(B.encode_binlog_file(
+            _recs([1, 2]), txn_ids=[1, 2], prev_gtids={}))
+        (d / "binlog.000003").write_bytes(B.encode_binlog_file(
+            _recs([3, 4]), txn_ids=[3, 4],
+            prev_gtids={B._SID_UUID: [(1, 2)]}))
+    (logs / "binlog.000001").write_bytes(b"not a binlog file")
+    return str(valid), str(logs)
+
+
+@pytest.mark.parametrize("mode", ["gtid", "filepos"])
+@pytest.mark.parametrize("stream", [False, True], ids=["batch", "stream"])
+def test_startup_checkpoint_prunes_before_decode(
+    spark, junk_ahead, stream, mode
+):
+    """The reader applies the startup checkpoint once, for batch and
+    stream alike: the start file (GTID start-file search, or the
+    file/pos checkpoint's file) prunes every earlier file of its
+    rotation before the decode, so the junk file never decodes, and
+    the rows are those the row trim alone keeps over the valid
+    files."""
+    from replicator_spark.sources.binlog import (
+        read_binlog_files,
+        resume_after,
+        resume_after_gtid,
+    )
+    from replicator_spark.streaming.drive import file_sink
+
+    valid, logs = junk_ahead
+    every = read_binlog_files(spark, valid)
+    if mode == "gtid":
+        ckpt = {"resume_gtid_set": f"{B._SID_UUID}:1-3"}
+        want = resume_after_gtid(every, ckpt["resume_gtid_set"])
+    else:
+        (pos,) = [r["log_pos"] for r in every.where("event_id = 1").collect()]
+        ckpt = {"resume_file_pos": ("binlog.000002", pos)}
+        want = resume_after(every, "binlog.000002", pos)
+    got = read_binlog_files(spark, logs, stream=stream, **ckpt)
+    if stream:
+        got = file_sink(got, "startup_ckpt_")
+    rows = sorted(tuple(r) for r in got.collect())
+    assert rows == sorted(tuple(r) for r in want.collect())
+    assert [r[1] for r in rows] == ([4] if mode == "gtid" else [2, 3, 4])
+
+
+def test_no_checkpoint_lists_nothing(spark, tmp_path, monkeypatch):
+    """With no checkpoint the reader neither lists the directory nor
+    filters the scan, in batch and in stream."""
+    from replicator_spark.sources import binlog as BL
+    from replicator_spark.streaming.drive import file_sink
+
+    (tmp_path / "binlog.000001").write_bytes(
+        B.encode_binlog_file(_recs([1, 2])))
+
+    def refuse(path):
+        raise AssertionError(f"listed {path}")
+
+    monkeypatch.setattr(BL, "_list_files", refuse)
+    for stream in (False, True):
+        df = BL.read_binlog_files(spark, str(tmp_path), stream=stream)
+        assert "Filter" not in df._jdf.queryExecution().logical().toString()
+        got = file_sink(df, "no_ckpt_") if stream else df
+        assert sorted(r["event_id"] for r in got.collect()) == [1, 2]
+
+
 def test_start_file_search_distributed_path(spark, tmp_path):
     """Above the threshold the head scan distributes over executors —
     same answer as the driver loop."""
@@ -2834,24 +2906,33 @@ def test_read_binlog_records_any_table(spark, tmp_path):
     assert [r["table_name"] for r in left] == ["carts"]
 
 
-def test_tail_binlog_records_streaming(spark, tmp_path):
-    """The generic record stream decodes each rotated file exactly
-    once across lifetimes, any table mix."""
+@pytest.mark.parametrize("channel", ["records", "ddl"])
+def test_binlog_stream_exactly_once(spark, tmp_path, channel):
+    """The generic record stream and the DDL channel (``stream=True``
+    on their readers) decode each rotated file exactly once across
+    lifetimes, any table mix."""
     import json
 
-    from replicator_spark.sources.binlog import tail_binlog_records
+    from replicator_spark.sources.binlog import (
+        read_binlog_ddl,
+        read_binlog_records,
+    )
 
+    read = {"records": read_binlog_records, "ddl": read_binlog_ddl}[channel]
     logs = tmp_path / "logs"
     logs.mkdir()
     out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
-    w = B.BinlogWriter()
-    w.table_map(1, "shop", "carts", [B.MYSQL_TYPE_LONG], [b""])
-    w.rows(B.WRITE_ROWS_EVENT, 1, [B.MYSQL_TYPE_LONG], [b""], [[7]])
-    (logs / "binlog.000001").write_bytes(w.getvalue())
+
+    def land(i, db, table, value):
+        w = B.BinlogWriter()
+        w.query(f"CREATE TABLE {table} (c0 int)", db=db)
+        w.table_map(i, db, table, [B.MYSQL_TYPE_LONG], [b""])
+        w.rows(B.WRITE_ROWS_EVENT, i, [B.MYSQL_TYPE_LONG], [b""], [[value]])
+        (logs / f"binlog.{i:06d}").write_bytes(w.getvalue())
 
     def drain():
         q = (
-            tail_binlog_records(spark, str(logs))
+            read(spark, str(logs), stream=True)
             .writeStream.format("parquet")
             .option("path", out)
             .option("checkpointLocation", ckpt)
@@ -2860,16 +2941,19 @@ def test_tail_binlog_records_streaming(spark, tmp_path):
         )
         q.awaitTermination()
 
+    land(1, "shop", "carts", 7)
     drain()
-    w2 = B.BinlogWriter()
-    w2.table_map(2, "zoo", "animals", [B.MYSQL_TYPE_LONG], [b""])
-    w2.rows(B.WRITE_ROWS_EVENT, 2, [B.MYSQL_TYPE_LONG], [b""], [[9]])
-    (logs / "binlog.000002").write_bytes(w2.getvalue())
+    land(2, "zoo", "animals", 9)
     drain()
     rows = spark.read.parquet(out).collect()
     assert len(rows) == 2  # no re-decode of file 1
-    got = {r["table_name"]: json.loads(r["record"]) for r in rows}
-    assert got == {"carts": {"c0": 7}, "animals": {"c0": 9}}
+    if channel == "records":
+        got = {r["table_name"]: json.loads(r["record"]) for r in rows}
+        assert got == {"carts": {"c0": 7}, "animals": {"c0": 9}}
+    else:
+        got = {(r["db"], r["sql"]) for r in rows}
+        assert got == {("shop", "CREATE TABLE carts (c0 int)"),
+                       ("zoo", "CREATE TABLE animals (c0 int)")}
 
 
 @settings(max_examples=30, deadline=None)
@@ -2988,14 +3072,14 @@ def test_encoder_cache_evicts_fifo_not_clear():
         w._ENCODER_CACHE.update(saved)
 
 
-def test_tail_binlog_records_max_files_per_trigger(spark, tmp_path):
+def test_binlog_records_stream_max_files_per_trigger(spark, tmp_path):
     """The generic stream honors the per-trigger file bound: 3 rotated
     files with maxFilesPerTrigger=1 decode as 3 micro-batches in one
     availableNow lifetime (the backpressure knob a backlogged
-    directory needs — same contract as tail_binlog_files)."""
+    directory needs — same contract as the row reader's stream)."""
     import json
 
-    from replicator_spark.sources.binlog import tail_binlog_records
+    from replicator_spark.sources.binlog import read_binlog_records
 
     logs = tmp_path / "logs"
     logs.mkdir()
@@ -3012,7 +3096,8 @@ def test_tail_binlog_records_max_files_per_trigger(spark, tmp_path):
         )
 
     q = (
-        tail_binlog_records(spark, str(logs), max_files_per_trigger=1)
+        read_binlog_records(
+            spark, str(logs), stream=True, max_files_per_trigger=1)
         .writeStream.foreachBatch(one_batch)
         .option("checkpointLocation", str(tmp_path / "ckpt"))
         .trigger(availableNow=True)

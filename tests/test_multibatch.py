@@ -458,7 +458,6 @@ def test_binlog_feed_before_images_across_micro_batches(
     from replicator_spark.sources.binlog import (
         envelope_projection,
         read_binlog_files,
-        tail_binlog_files,
     )
 
     prep(spark)
@@ -472,9 +471,8 @@ def test_binlog_feed_before_images_across_micro_batches(
             os.path.join(out, f"epoch={epoch_id}")
         )
 
-    stream = envelope_projection(
-        tail_binlog_files(spark, logs, max_files_per_trigger=1)
-    )
+    stream = envelope_projection(read_binlog_files(
+        spark, logs, stream=True, max_files_per_trigger=1))
     q = (
         stream.writeStream.foreachBatch(one_batch)
         .option("checkpointLocation", str(tmp_path / "ckpt"))
@@ -518,7 +516,6 @@ def test_binlog_multibatch_restart_mid_backlog(spark, tmp_path, multibatch_binlo
     from replicator_spark.sources.binlog import (
         envelope_projection,
         read_binlog_files,
-        tail_binlog_files,
     )
 
     prep(spark)
@@ -535,9 +532,8 @@ def test_binlog_multibatch_restart_mid_backlog(spark, tmp_path, multibatch_binlo
                 "overwrite"
             ).parquet(os.path.join(out, f"epoch={epoch_id}"))
 
-        stream = envelope_projection(
-            tail_binlog_files(spark, logs, max_files_per_trigger=1)
-        )
+        stream = envelope_projection(read_binlog_files(
+            spark, logs, stream=True, max_files_per_trigger=1))
         q = (
             stream.writeStream.foreachBatch(one_batch)
             .option("checkpointLocation", ckpt)

@@ -753,8 +753,8 @@ def test_binlog_gtid_resume_after_midfile_kill(spark, tmp_path, wire_recs):
     from replicator_spark.sources.binlog import (
         _SID_UUID,
         encode_binlog_file,
+        read_binlog_files,
         resume_after_safe_acks,
-        tail_binlog_files,
     )
 
     logs = tmp_path / "logs"
@@ -784,7 +784,7 @@ def test_binlog_gtid_resume_after_midfile_kill(spark, tmp_path, wire_recs):
     # lifetime 1: drains file 1, applies txns 1+2, but only txn 1's
     # ack survives the crash
     apply_lifetime(
-        tail_binlog_files(spark, str(logs)), out1,
+        read_binlog_files(spark, str(logs), stream=True), out1,
         str(tmp_path / "ckpt1"),
     )
     assert sorted(
@@ -804,7 +804,7 @@ def test_binlog_gtid_resume_after_midfile_kill(spark, tmp_path, wire_recs):
     # and trims with the safe set from the surviving acks
     out2 = str(tmp_path / "applied2")
     apply_lifetime(
-        tail_binlog_files(spark, str(logs)), out2,
+        read_binlog_files(spark, str(logs), stream=True), out2,
         str(tmp_path / "ckpt2"),
         trim=lambda df: resume_after_safe_acks(df, surviving_acks),
     )
@@ -824,10 +824,7 @@ def test_wire_ddl_replay_restart_continues_versions(spark, tmp_path):
     GTID order."""
     import replicator_spark.sources.binlog as B
     from pyspark.sql import functions as F
-    from replicator_spark.sources.binlog import (
-        read_binlog_ddl,
-        tail_binlog_ddl,
-    )
+    from replicator_spark.sources.binlog import read_binlog_ddl
     from replicator_spark.streaming.registry import (
         SchemaRegistry,
         run_ddl_replay_stream,
@@ -844,7 +841,7 @@ def test_wire_ddl_replay_restart_continues_versions(spark, tmp_path):
     out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
 
     def lifetime():
-        stream = tail_binlog_ddl(spark, str(logs)).select(
+        stream = read_binlog_ddl(spark, str(logs), stream=True).select(
             F.col("gtid_seq").alias("event_id"), "sql"
         )
         return run_ddl_replay_stream(spark, stream, out, ckpt)

@@ -32,6 +32,20 @@ def test_graft_cpus_is_one_rule():
             _graft_cpus({"SPARK_GRAFT_CPUS": bad})
 
 
+def test_prep_sizes_shuffle_partitions_when_called(spark, monkeypatch):
+    """`prep` reads SPARK_GRAFT_CPUS when it runs, not when the session
+    module was imported."""
+    from replicator_spark.session import prep
+
+    before = spark.conf.get("spark.sql.shuffle.partitions")
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "13")
+    try:
+        prep(spark)
+        assert spark.conf.get("spark.sql.shuffle.partitions") == "13"
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", before)
+
+
 @pytest.fixture(scope="module")
 def layouts(spark, sf_dir, tmp_path_factory):
     """`events` and `documents` as the source data ships them (raw, so
@@ -65,10 +79,28 @@ def test_stream_read_equals_batch_read(spark, layouts, name, layout):
     batch = read_table(spark, d, name)
     stream = read_table(spark, d, name, stream=True)
     assert stream.isStreaming and stream.dtypes == batch.dtypes
-    drained = spark.read.parquet(file_sink(stream, "stream_read_"))
+    drained = file_sink(stream, "stream_read_")
     assert drained.count() == batch.count() > 0
     assert drained.exceptAll(batch).count() == 0
     assert batch.exceptAll(drained).count() == 0
+
+
+@pytest.mark.parametrize("fmt", ["parquet", "json"])
+def test_stream_op_over_an_empty_stream_is_empty(spark, sf_dir, tmp_path, fmt):
+    """A stream op over a table stream that never emits a micro-batch
+    (an empty table directory) drains to an empty frame with the op's
+    columns, where reading the sink back by inference would raise."""
+    from replicator_spark.session import normalize_events
+    from replicator_spark.streaming.drive import file_sink
+    from replicator_spark.streaming.scd2_state import build_scd2_stream
+
+    schema = spark.read.parquet(os.path.join(sf_dir, "events.parquet")).schema
+    (tmp_path / "events").mkdir()
+    op = build_scd2_stream(normalize_events(
+        spark.readStream.schema(schema).parquet(str(tmp_path / "events"))))
+    got = file_sink(op, "empty_stream_", fmt)
+    assert got.columns == op.columns
+    assert got.count() == 0
 
 
 # Runs in a fresh interpreter, started outside the repo with the repo on

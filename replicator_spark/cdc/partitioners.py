@@ -8,12 +8,16 @@ BiFunction<AugmentedEvent,Integer,Integer>:
 - TABLE_NAME: hash(db.table) % n (:16-33)
 - RANDOM / NONE (:74-85)
 
-In Spark the *real* exchange is `repartition(n, key)` — the partitioner
-functions below are used as the Kafka-partition-key analog and for the
-oracle-checked partition-assignment query. For hash-based strategies we
-use an md5-derived bucket (first hex nibble → 0..15) so the assignment
-is engine-portable; Spark's internal Murmur3 shuffle hash stays the
-physical-plan concern and needs no porting.
+In Spark the exchange is `repartition_for`'s `repartition(n, key)`, which
+shapes only the runner's public fan-out view (`runner.build_feed`); no
+applier plans it. The reference's applier routes by the partitioner's
+choice (KafkaApplier.java:162), and here that choice is a column: the
+Kafka message's `partition` is `partition_trid(txn_uuid, 8)`, and the
+functions below also drive the oracle-checked partition-assignment
+query. For hash-based strategies we use an md5-derived bucket (first
+hex nibble → 0..15) so the assignment is engine-portable; Spark's
+Murmur3 shuffle hash is a different hash, so a `repartition` split
+would not match the Kafka partitions anyway.
 """
 
 from __future__ import annotations

@@ -31,24 +31,28 @@ Key mapping (reference key → effect here):
   (shouldAugment gate, AugmenterContext)
 - ``partitioner.type`` ∈ TRID|XXID|TABLE_NAME|RANDOM|NONE +
   ``replicator.tasks`` → `cdc.partitioners.repartition_for`
-  (Replicator.java:179-191 destination-stream fan-out), in front of
-  the appliers whose output keeps its layout (kafka, console)
+  (Replicator.java:179-191 destination-stream fan-out), which shapes
+  `build_feed`, the public fan-out view, only. No applier plans it:
+  the Kafka applier routes each message by its ``partition`` column,
+  `partition_trid(txn_uuid, 8)` (KafkaApplier.java:162)
 - ``applier.type`` ∈ count|console|kafka|timemachine →
   `sinks.{count,console,kafka,timemachine}` presentation
 
 Scale: the composition adds NOTHING beyond its operators — filters are
-map-side predicates fused into the feed scan, and the partitioner is
-the one explicit exchange the reference also pays, planned only where
-its layout reaches the output. AQE does not elide a user repartition
-(`REPARTITION_BY_NUM`), so in front of the count and time-machine
-appliers, which re-shuffle on their own keys, it would be a dead
-shuffle: the time-machine plan is two exchanges, the envelope's
-hash(user_id) and the organizer's hash(commit second). Each stage of
-the chain is one SQL statement over its input DataFrame
-(`spark.sql(..., df=...)`), which costs the driver a handful of py4j
-round trips where the Column DSL pays one or more per expression node:
-a plan builds in about a hundred round trips rather than ~2,000, a
-cost a stream pays again on every micro-batch.
+map-side predicates fused into the feed scan, and no applier pays the
+partitioner's exchange. AQE does not elide a user repartition
+(`REPARTITION_BY_NUM`), and none buys anything here: the count and
+time-machine appliers re-shuffle on their own keys, the Kafka applier
+carries its routing in a column, and the console sink prints in
+`event_id` order. The envelope's hash(user_id) exchange already keeps
+each transaction in one task (a transaction's events share one user,
+`txn_xid = user_id × 40,000,000 + minute`), so a Kafka plan is that
+one exchange and a time-machine plan two, with the organizer's
+hash(commit second). Each stage of the chain is one SQL statement over
+its input DataFrame (`spark.sql(..., df=...)`), which costs the driver
+a handful of py4j round trips where the Column DSL pays one or more
+per expression node: a plan builds in about a hundred round trips
+rather than ~2,000, a cost a stream pays again on every micro-batch.
 """
 
 from __future__ import annotations
@@ -106,19 +110,11 @@ DEFAULT_CONFIG: dict[str, Any] = {
 }
 
 
-# The appliers whose output keeps the partitioner's layout (a Kafka
-# partition, a console line stream). The count and time-machine
-# appliers re-shuffle on their own keys — the organizer's per-second
-# exchange already keeps each transaction in one task, as a txn has
-# exactly one commit second — so the exchange in front of them would
-# be dead work.
-_ROUTED_APPLIERS = ("kafka", "console")
-
-
 def _augment(rows: DataFrame, cfg: Mapping[str, Any]) -> DataFrame:
-    """Envelope → include/exclude gate → QUERY-event gate → table
-    merge over `_rows`' output (the whole input, or one micro-batch of
-    it), per (already-defaulted) config. A wire `op` column, which only
+    """The applier's input, shared by the batch plan and each
+    micro-batch so the two cannot drift: envelope → include/exclude
+    gate → QUERY-event gate → table merge over `_rows`' output, per
+    (already-defaulted) config. A wire `op` column, which only
     the binlog source carries, rides through (`op_col`): a row decoded
     from a WRITE/UPDATE/DELETE_ROWS event keeps its authoritative
     classification."""
@@ -144,12 +140,6 @@ def _augment(rows: DataFrame, cfg: Mapping[str, Any]) -> DataFrame:
         feed = feed.withColumn(
             "table_name", merge_table_name(F.col("table_name")))
     return feed
-
-
-def _partition(feed: DataFrame, cfg: Mapping[str, Any]) -> DataFrame:
-    return repartition_for(
-        feed, cfg["partitioner.type"], int(cfg["replicator.tasks"])
-    )
 
 
 def _rows(
@@ -184,24 +174,15 @@ def _rows(
     ))
 
 
-def _feed(rows: DataFrame, cfg: Mapping[str, Any]) -> DataFrame:
-    """The applier's input, shared by the batch plan and each
-    micro-batch so the two cannot drift: `_augment`, then the
-    partitioner's exchange for the appliers whose output keeps its
-    layout."""
-    feed = _augment(rows, cfg)
-    if cfg["applier.type"] in _ROUTED_APPLIERS:
-        feed = _partition(feed, cfg)
-    return feed
-
-
 def build_feed(
     spark: SparkSession, sf_dir: str, config: Mapping[str, Any]
 ) -> DataFrame:
     """source → augment-filters → partitioner, per config."""
     cfg = {**DEFAULT_CONFIG, **config}
     rows = _rows(spark, sf_dir, cfg, stream=False)
-    return _partition(_augment(rows, cfg), cfg)
+    return repartition_for(
+        _augment(rows, cfg), cfg["partitioner.type"],
+        int(cfg["replicator.tasks"]))
 
 
 def apply_sink(feed: DataFrame, config: Mapping[str, Any]) -> DataFrame:
@@ -257,7 +238,7 @@ def run_batch(
     prep(spark)
     cfg = {**DEFAULT_CONFIG, **config}
     rows = _rows(spark, sf_dir, cfg, stream=False)
-    return apply_sink(_feed(rows, cfg), cfg)
+    return apply_sink(_augment(rows, cfg), cfg)
 
 
 def run_stream(
@@ -268,7 +249,7 @@ def run_stream(
     checkpoint_dir: str,
 ) -> list:
     """The same composition as a foreachBatch stream: each micro-batch
-    runs run_batch's transformation (`_feed`, `apply_sink`) over the
+    runs run_batch's transformation (`_augment`, `apply_sink`) over the
     batch slice into the idempotent `out_dir/epoch=<id>` layout
     (`streaming.drive.epoch_sink`). Returns the query's progress
     records, one per epoch."""
@@ -276,7 +257,7 @@ def run_stream(
     cfg = {**DEFAULT_CONFIG, **config}
     return epoch_sink(
         _rows(spark, sf_dir, cfg, stream=True), out_dir, checkpoint_dir,
-        lambda batch_df, _: apply_sink(_feed(batch_df, cfg), cfg),
+        lambda batch_df, _: apply_sink(_augment(batch_df, cfg), cfg),
     )
 
 

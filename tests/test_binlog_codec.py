@@ -1364,6 +1364,55 @@ def test_trim_import_caches_drops_only_subpackage_zipimporters(tmp_path):
             del sys.path_importer_cache[key]
 
 
+def test_trim_import_caches_takes_python_free_jars_off_the_path(tmp_path):
+    """A jar whose zip directory holds no Python (the spark-core jar on
+    the worker's path) leaves `sys.path` and the importer cache, so a
+    per-task cache invalidation no longer re-reads it; an archive that
+    holds Python stays, `.jar` or not, and imports still work."""
+    import importlib
+    import sys
+    import zipfile
+
+    from replicator_spark.sources.binlog import _trim_import_caches
+
+    java = str(tmp_path / "java-only.jar")
+    with zipfile.ZipFile(java, "w") as z:
+        z.writestr("META-INF/MANIFEST.MF", "Manifest-Version: 1.0\n")
+        z.writestr("org/example/Main.class", b"\xca\xfe\xba\xbe")
+    py_jar = str(tmp_path / "with-python.jar")
+    with zipfile.ZipFile(py_jar, "w") as z:
+        z.writestr("jarpkg/__init__.py", "")
+        z.writestr("jarpkg/a.py", "A = 1\n")
+    py_zip = str(tmp_path / "with-python.zip")
+    with zipfile.ZipFile(py_zip, "w") as z:
+        z.writestr("zippkg/__init__.py", "")
+        z.writestr("zippkg/b.py", "B = 2\n")
+
+    # the Java jar first, so every import below searches it (and caches
+    # its directory) before it finds the package further down the path
+    sys.path[0:0] = [java, py_jar, py_zip]
+    try:
+        importlib.import_module("jarpkg")
+        importlib.import_module("zippkg")
+        assert java in sys.path_importer_cache
+        _trim_import_caches()
+        assert java not in sys.path and java not in sys.path_importer_cache
+        assert sys.path[:2] == [py_jar, py_zip]
+        importlib.invalidate_caches()  # what the worker does per task
+        assert importlib.import_module("jarpkg.a").A == 1
+        assert importlib.import_module("zippkg.b").B == 2
+    finally:
+        for entry in (java, py_jar, py_zip):
+            while entry in sys.path:
+                sys.path.remove(entry)
+        for name in [m for m in sys.modules
+                     if m.split(".")[0] in ("jarpkg", "zippkg")]:
+            del sys.modules[name]
+        for key in [k for k in sys.path_importer_cache
+                    if k.startswith(str(tmp_path))]:
+            del sys.path_importer_cache[key]
+
+
 # ---------------------------------------------------------------------------
 # reference-fixture parity: the organisms table (mysql.init.sql:3-17)
 # through the wire, including the types it exercises that plain
@@ -2476,6 +2525,45 @@ def test_no_checkpoint_lists_nothing(spark, tmp_path, monkeypatch):
         assert "Filter" not in df._jdf.queryExecution().logical().toString()
         got = file_sink(df, "no_ckpt_") if stream else df
         assert sorted(r["event_id"] for r in got.collect()) == [1, 2]
+
+
+def test_start_file_that_prunes_nothing_scans_the_directory(
+    spark, junk_ahead
+):
+    """A start file that prunes nothing (the checkpoint sits on the
+    first file of its rotation) loads the directory itself, so the
+    batch scan is the no-checkpoint one, for file/pos and GTID alike;
+    a later start file loads the pruned list."""
+    import re
+
+    from replicator_spark.sources.binlog import (
+        read_binlog_files,
+        start_file_for_gtid_resume,
+    )
+
+    valid, _ = junk_ahead
+
+    def location(**ckpt):
+        df = read_binlog_files(spark, valid, **ckpt)
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        (loc,) = re.findall(r"Location: (\w+\(\d+ paths\)\[[^\]]*\])", plan)
+        return loc
+
+    key = "spark.sql.maxMetadataStringLength"  # plans abbreviate paths
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "10000")
+    try:
+        whole = location()
+        assert whole == f"InMemoryFileIndex(1 paths)[file:{valid}]", whole
+        assert location(resume_file_pos=("binlog.000002", 4)) == whole
+        gtid = f"{B._SID_UUID}:1"
+        assert start_file_for_gtid_resume(valid, gtid) == "binlog.000002"
+        assert location(resume_gtid_set=gtid) == whole
+        pruned = location(resume_file_pos=("binlog.000003", 4))
+        assert pruned == (
+            f"InMemoryFileIndex(1 paths)[file:{valid}/binlog.000003]"), pruned
+    finally:
+        spark.conf.set(key, prev)
 
 
 def test_start_file_search_distributed_path(spark, tmp_path):

@@ -77,25 +77,25 @@ def _exchanges(df) -> list[str]:
             for line in plan.splitlines() if "Exchange " in line]
 
 
-def test_partitioner_exchange_only_where_it_reaches_the_output(
-    spark, multibatch_binlog
-):
-    """The time-machine applier re-shuffles on its own keys, so no
-    partitioner exchange is planned in front of it: the envelope's
-    hash(user_id) and the organizer's hash(commit second) are its only
-    exchanges (4 when the TRID exchange sat in front of the organizer,
-    which then had to shuffle its row window again). The Kafka applier
-    keeps the partitioner's exchange: its messages carry its layout."""
+def test_no_applier_plans_the_partitioner_exchange(spark, multibatch_binlog):
+    """No applier pays the partitioner's exchange: the Kafka applier
+    routes each message by its `partition` column, the console applier
+    orders by event_id, and the count and time-machine appliers
+    re-shuffle on their own keys. So the Kafka plan's one exchange is
+    the envelope's hash(user_id), which keeps each transaction (one
+    user) in one task, and no applier plan holds a user repartition."""
     base = {"source.type": "binlog_files",
             "source.binlog.path": multibatch_binlog()}
-    tm = _exchanges(run_batch(spark, None,
-                              {**base, "applier.type": "timemachine"}))
+    plans = {kind: _exchanges(run_batch(spark, None,
+                                        {**base, "applier.type": kind}))
+             for kind in ("count", "console", "kafka", "timemachine")}
+    for kind, exchanges in plans.items():
+        assert "REPARTITION_BY_NUM" not in " ".join(exchanges), (kind, exchanges)
+    (kafka,) = plans["kafka"]
+    assert kafka.startswith("Exchange hashpartitioning(user_id, "), kafka
+    tm = plans["timemachine"]
     assert len(tm) == 2, tm
     assert tm[1].startswith("Exchange hashpartitioning(user_id, "), tm
-    assert "REPARTITION_BY_NUM" not in " ".join(tm)
-    kafka = _exchanges(run_batch(spark, None, {**base, "applier.type": "kafka"}))
-    assert any(e.startswith("Exchange hashpartitioning(txn_uuid, 8), "
-                            "REPARTITION_BY_NUM") for e in kafka), kafka
 
 
 @pytest.mark.parametrize("kind,cols", [
@@ -286,6 +286,43 @@ def test_binlog_cells_across_micro_batches_suppression(
     assert (4, "value") in cells and (4, "props") not in cells
     assert (5, "props") in cells and (5, "value") not in cells
     assert (6, "row_status") in cells and (6, "value") not in cells
+
+
+def test_binlog_kafka_messages_across_micro_batches(
+    spark, tmp_path, multibatch_binlog
+):
+    """The Kafka applier over the multi-batch golden 3-file stream, one
+    micro-batch per file: run_stream's messages equal run_batch's as a
+    multiset, each event_id is delivered once, and each transaction of
+    an epoch lies in one part file — the envelope's hash(user_id)
+    exchange keeps a transaction in one task, with no partitioner
+    exchange in front of the applier."""
+    from collections import Counter
+
+    cfg = {
+        "source.type": "binlog_files",
+        "source.binlog.path": multibatch_binlog(),
+        "source.binlog.max_files_per_trigger": 1,
+        "applier.type": "kafka",
+    }
+    out = str(tmp_path / "kafka")
+    progress = run_stream(spark, None, cfg, out, str(tmp_path / "ckpt"))
+    assert [p["batchId"] for p in progress] == [0, 1, 2]
+    got = spark.read.parquet(out)
+    want = run_batch(spark, None, cfg)
+    cols = want.columns
+    assert Counter(tuple(r) for r in got.select(cols).collect()) == Counter(
+        tuple(r) for r in want.collect())
+    ids = [r["event_id"] for r in got.select("event_id").collect()]
+    assert sorted(ids) == sorted(set(ids)) == list(range(1, 8))
+    split = (
+        got.select("epoch",
+                   F.get_json_object("value", "$.txn_uuid").alias("txn"),
+                   F.input_file_name().alias("part"))
+        .groupBy("epoch", "txn").agg(F.countDistinct("part").alias("n"))
+    )
+    assert split.count() > 0
+    assert split.where("n > 1").count() == 0
 
 
 def test_run_stream_binlog_timemachine_restart_across_rotation(

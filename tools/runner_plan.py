@@ -6,7 +6,7 @@ Configs covered:
   → time-machine cells), plus its two startup checkpoint variants
   (file/pos and GTID set);
 - ``run_batch`` with the Kafka applier;
-- the incremental-tail micro-batch plan: ``_feed`` + ``apply_sink``
+- the incremental-tail micro-batch plan: ``_augment`` + ``apply_sink``
   (Kafka) over one batch of decoded rows, the plan ``run_stream``'s
   ``foreachBatch`` builds again on every epoch.
 
@@ -80,7 +80,7 @@ def _measure(calls: _Py4jCalls, build):
 def main() -> None:
     from perfbench import gen
     from replicator_spark.runner import (
-        DEFAULT_CONFIG, _feed, _rows, apply_sink, run_batch)
+        DEFAULT_CONFIG, _augment, _rows, apply_sink, run_batch)
     from replicator_spark.session import get_spark
     from replicator_spark.sources.binlog import _SID_UUID
 
@@ -103,7 +103,7 @@ def main() -> None:
                 **base, "source.binlog.checkpoint.gtid_set": f"{_SID_UUID}:1-5"}),
             "kafka": lambda: run_batch(spark, logs, kafka),
             "kafka_micro_batch": lambda: apply_sink(
-                _feed(batch, kafka_cfg), kafka_cfg),
+                _augment(batch, kafka_cfg), kafka_cfg),
         }
         for build in builds.values():  # cold builds: class loading, JIT
             build()
